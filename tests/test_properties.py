@@ -608,3 +608,26 @@ def test_emb_dim_multifragment_dir_and_ragged_fallback(spark):
             0,
         )
         assert emb_dim(tmp) == 16
+
+
+def test_emb_dim_without_statistics_is_unprovable():
+    """A row group written without statistics records no null count, so
+    nothing proves its lists hold no null elements: emb_dim must return
+    None (the HOF fallback), not a width derived from num_values."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from weather_bigdata_project_spark.queries.similarity import emb_dim
+
+    tbl = pa.table(
+        {
+            "vec_id": pa.array([0, 1], pa.int64()),
+            "embedding": pa.array([[1.0] * 4, [2.0] * 4], pa.list_(pa.float32())),
+        }
+    )
+    with tempfile.TemporaryDirectory() as tmp:
+        path = os.path.join(tmp, "embeddings.parquet")
+        pq.write_table(tbl, path)
+        assert emb_dim(tmp) == 4
+        pq.write_table(tbl, path, write_statistics=False)
+        assert emb_dim(tmp) is None

@@ -2,6 +2,19 @@
 pandas, re-expressed as Catalyst plans over the enriched weather frame
 (M1 of SURVEY.md §7; covers SURVEY §2.4 A1-A9, §2.5 O1-O3, §2.2 P6-P12).
 
+One working set serves every panel (the Shark pattern for repeated
+interactive queries): `_enr` returns the 11 columns the panels read
+(`weather_domain.PINNED_COLUMNS`), projected from the enriched plan and
+pinned in Spark's in-memory columnar cache (`weather_domain.pinned_frame`). The enriched plan is memoized per
+(applicationId, sf_dir) and events.parquet snapshot (inode, mtime, size),
+so a panel costs one small aggregate, not a footer read, a repartition,
+the wire synthesis, the cast/enrich analyses and a parquet scan.
+Invalidation: a rewritten events.parquet rebuilds the plan and unpersists
+the old pin before the new one is pinned; a pin dropped from the cache
+(`spark.catalog.clearCache()`) is re-pinned on the next panel. The pin
+uses the default MEMORY_AND_DISK level, so a working set larger than
+executor memory spills to local disk instead of failing.
+
 Scale notes (100 TB design stance):
 - every aggregation here is a hash aggregate with map-side partial
   aggregation (8 city keys / 4 alert keys -> tiny shuffle);
@@ -24,7 +37,7 @@ from ..registry import query
 
 
 def _enr(spark, sf_dir):
-    return wd.enriched_frame(spark, sf_dir)
+    return wd.pinned_frame(spark, sf_dir)
 
 
 def _oracle(select: str) -> str:
@@ -393,9 +406,7 @@ def weather_sql_city_summary(spark, sf_dir):
     """The Spark SQL surface: the enriched pipeline registered as a temp
     view, queried with spark.sql — identical Catalyst plan to the
     DataFrame twin (views are just named logical plans)."""
-    wd.enriched_frame(spark, sf_dir).createOrReplaceTempView(
-        "weather_enriched_v"
-    )
+    _enr(spark, sf_dir).createOrReplaceTempView("weather_enriched_v")
     return spark.sql(
         "SELECT city_name, COUNT(*) AS n, MAX(heat_index) AS max_heat, "
         "MIN(wind_chill) AS min_chill FROM weather_enriched_v "
@@ -556,7 +567,7 @@ def weather_temp_equidepth(spark, sf_dir):
     window is the cost (documented: at 100 TB swap NTILE for
     percentile_approx boundaries + a narrow bucket lookup — same
     output shape, no global sort); the aggregate after it is 4 keys."""
-    e = wd.enriched_frame(spark, sf_dir)
+    e = _enr(spark, sf_dir)
     from pyspark.sql import Window
 
     t = e.filter(F.col("temperature").isNotNull()).select(

@@ -61,7 +61,8 @@ def emb_dim(sf_dir: str) -> int | None:
     """Embedding dimensionality, validated from parquet footers only
     (no Spark job, no data read beyond metadata): for every fragment
     and row group, the list-leaf column's num_values must equal
-    dim * num_rows with zero recorded nulls, and the implied dim must
+    dim * num_rows with a recorded null count of zero (a group written
+    without statistics proves nothing), and the implied dim must
     agree across all groups and fragments. Any mismatch returns None,
     which makes every flat-column consumer fall back to the HOF
     formulation instead of silently truncating/NULLing the dot product
@@ -102,8 +103,8 @@ def emb_dim(sf_dir: str) -> int | None:
                 if rg.num_rows == 0:
                     continue
                 st = col.statistics
-                if st is not None and st.null_count not in (0, None):
-                    return None  # null elements: width unprovable
+                if st is None or st.null_count != 0:
+                    return None  # nulls present or unrecorded: unprovable
                 if col.num_values % rg.num_rows:
                     return None  # ragged within the group
                 d = col.num_values // rg.num_rows

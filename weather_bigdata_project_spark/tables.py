@@ -14,6 +14,9 @@ projection over a still-vectorized scan.
 
 from __future__ import annotations
 
+import os
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,20 +45,53 @@ EVENTS_ORACLE_CTE = (
 )
 
 
-#: (applicationId, sf_dir, name) -> DataFrame. DataFrames are immutable
-#: logical plans, so reuse is free; the memo skips the file listing +
-#: footer schema read that spark.read.parquet repeats per call (tens of
-#: ms each — real money across a 35-query benchmark sweep). Keyed by
-#: applicationId so a new session never sees a stale plan.
-_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+def signature(sf_dir: str, name: str) -> tuple | None:
+    """Signature of one table's files on disk: ``(st_ino, st_mtime_ns,
+    st_size)`` of the parquet file, or of each part file (by name) when
+    the table is a directory. A rewritten table gets a new signature;
+    a missing one gets None. Costs one ``stat`` per file, no Spark job."""
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return st.st_ino, st.st_mtime_ns, st.st_size
+        with os.scandir(path) as it:
+            parts = sorted((e.name, e.stat()) for e in it)
+        return tuple(
+            (n, st.st_ino, st.st_mtime_ns, st.st_size) for n, st in parts
+        )
+    except OSError:
+        return None
+
+
+def live_only(memo: dict, app_id: str) -> None:
+    """Drop the entries of a memo keyed ``(applicationId, ...)`` that
+    belong to a session other than the live one: a process runs one
+    SparkContext at a time, so those plans can never be used again."""
+    for key in [k for k in memo if k[0] != app_id]:
+        del memo[key]
+
+
+#: (applicationId, sf_dir, name) -> (signature, DataFrame). DataFrames are
+#: immutable logical plans, so reuse is free; the memo skips the file
+#: listing + footer schema read that spark.read.parquet repeats per call
+#: (tens of ms each — real money across a 35-query benchmark sweep). An
+#: entry serves only while its table's signature is unchanged (a plan
+#: over a rewritten file would read it with the old file lengths), and
+#: only entries of the live session are kept.
+_CACHE: dict[tuple[str, str, str], tuple[tuple | None, DataFrame]] = {}
+_LOCK = threading.Lock()
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table; events gets its ns->us timestamp fixup."""
     tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    if key in _CACHE:
-        return _CACHE[key]
+    app_id = spark.sparkContext.applicationId
+    key = (app_id, sf_dir, name)
+    sig = signature(sf_dir, name)
+    hit = _CACHE.get(key)
+    if hit is not None and hit[0] == sig:
+        return hit[1]
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn(
@@ -65,7 +101,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "to_timestamp_ntz('1970-01-01 00:00:00'))"
             ),
         )
-    _CACHE[key] = df
+    with _LOCK:
+        live_only(_CACHE, app_id)
+        _CACHE[key] = (sig, df)
     return df
 
 

@@ -13,7 +13,7 @@ reference spread across Airflow + NiFi + docker exec
 
 Usage:
   python3 scripts/run_pipeline.py [--sf-dir /root/testdata/sf0.001]
-                                  [--work-dir /tmp/weatherlake]
+                                  [--work-dir /tmp/weatherlake] [--cpus N]
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def run(sf_dir: str, work_dir: str, cpus: int | str = 8) -> dict[str, int]:
+def run(sf_dir: str, work_dir: str, cpus: int | str | None = None) -> dict[str, int]:
     from pyspark.sql import functions as F
 
     from weather_bigdata_project_spark import weather_domain as wd
@@ -81,7 +81,10 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     ap.add_argument("--work-dir", default="/tmp/weatherlake")
-    ap.add_argument("--cpus", default="8")
+    ap.add_argument(
+        "--cpus", default=None,
+        help="local cores (default: $SPARK_GRAFT_CPUS or the usable cores)",
+    )
     args = ap.parse_args()
     run(args.sf_dir, args.work_dir, args.cpus)
 

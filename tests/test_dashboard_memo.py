@@ -89,6 +89,37 @@ def test_table_plans_follow_a_rewritten_file(spark, lake):
     assert new.count() == 10
 
 
+def test_persisted_frames_follow_a_rewritten_file(spark, lake):
+    """A frame some query materialize()d over events.parquet is not
+    served for a rewritten file: the cache matches plans by path, so a
+    fresh query with the same plan would otherwise read the old rows."""
+    from pyspark.sql import functions as F
+
+    from weather_bigdata_project_spark.operators.textops import materialize
+
+    def per_type():
+        return tables.load(spark, lake, "events").groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n"), F.max("event_id").alias("hi")
+        )
+
+    old = materialize(per_type())
+    old.count()
+    try:
+        _write_events(lake, slice(300, 1000))
+        con = duck_connect(lake)
+        try:
+            got = compare(
+                "per_type", per_type(),
+                "SELECT event_type, COUNT(*) AS n, MAX(event_id) AS hi "
+                "FROM events GROUP BY event_type", con,
+            )
+        finally:
+            con.close()
+        assert got == [], got
+    finally:
+        old.unpersist()
+
+
 def test_panels_repin_after_clear_cache(spark):
     """(b) `spark.catalog.clearCache()` (run between queries by the
     benchmark suite) drops the pin; the next panel pins it again and

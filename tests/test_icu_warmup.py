@@ -45,3 +45,29 @@ def test_warmup_expression_is_not_foldable():
     # (round-8 ADVICE), not inside the first case-folding query
     assert "defaultParallelism" in src
     assert "spark.range(0, slots, 1, slots)" in src
+
+
+def test_warmed_set_keeps_only_the_live_session(spark):
+    """A new session replaces the warmed entry instead of adding one per
+    session forever."""
+    app_id = spark.sparkContext.applicationId
+    S._ICU_WARMED.discard(app_id)
+    S._ICU_WARMED.add("dead-app")
+    S.tune(spark)
+    assert S._ICU_WARMED == {app_id}
+
+
+def test_session_defaults_follow_the_machine(monkeypatch):
+    """Without overrides the session sizes itself to the cores this
+    process may use and half the physical memory; the env vars win."""
+    import os
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    assert S.default_cpus() == len(os.sched_getaffinity(0))
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    gib = int(S.default_driver_memory().removesuffix("g"))
+    assert 1 <= gib and gib * 2**30 <= phys / 2
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "5g")
+    assert (S.default_cpus(), S.default_driver_memory()) == (3, "5g")

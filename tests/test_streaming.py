@@ -277,6 +277,81 @@ def test_alerts_stream_filter(spark, wire_dir):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
+def _drain_backlog(spark, wire: str, root: str):
+    """availableNow-drain `wire` into a parquet lake and a JSON alerts feed
+    under `root` (two queries, as scripts/run_pipeline.py wires them).
+    Returns the input-row counts of each query's data micro-batches and
+    whether both outputs equal the batch twin as multisets."""
+    enriched = jobs.enriched_stream(
+        jobs.wire_file_stream(spark, wire)
+    ).select(*wd.ENRICHED_COLUMNS)
+    alerts = jobs.alerts_stream(
+        jobs.enriched_stream(jobs.wire_file_stream(spark, wire))
+    )
+    qs = [
+        jobs.start_lake_sink(enriched, f"{root}/lake", f"{root}/ck/lake"),
+        jobs.start_lake_sink(
+            alerts, f"{root}/alerts", f"{root}/ck/alerts", fmt="json"
+        ),
+    ]
+    for q in qs:
+        q.awaitTermination(120)
+    batches = [
+        [p.numInputRows for p in q.recentProgress if p.numInputRows > 0]
+        for q in qs
+    ]
+    schema = jobs.wire_file_stream(spark, wire).schema
+    twin = wd.enrich(wd.cast_wire(spark.read.schema(schema).json(wire)))
+    want_alerts = jobs.alerts_stream(twin)
+    pairs = [
+        (spark.read.parquet(f"{root}/lake"), twin.select(*wd.ENRICHED_COLUMNS)),
+        (spark.read.schema(want_alerts.schema).json(f"{root}/alerts"),
+         want_alerts),
+    ]
+    equal = all(
+        got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+        for got, want in pairs
+    )
+    return batches, equal
+
+
+def test_backlog_drains_in_one_micro_batch(spark, tmp_path):
+    """A backlog that fits one round of input splits (trigger_bytes) is
+    admitted whole: each query commits exactly one micro-batch with
+    input rows, and lake and alerts equal the batch twin."""
+    wire = str(tmp_path / "wire")
+    wd.wire_frame(spark, SF_SMOKE).repartition(12).write.json(wire)
+    assert len([f for f in os.listdir(wire) if f.endswith(".json")]) == 12
+    batches, equal = _drain_backlog(spark, wire, str(tmp_path))
+    assert batches == [[1000], [1000]]
+    assert equal
+
+
+def test_trigger_bytes_bounds_each_micro_batch(spark, tmp_path):
+    """trigger_bytes is defaultParallelism x maxPartitionBytes; shrinking
+    the split spreads the same backlog over several bounded micro-batches
+    and still lands every record exactly once."""
+    split = "spark.sql.files.maxPartitionBytes"
+    slots = spark.sparkContext.defaultParallelism
+    assert jobs.trigger_bytes(spark) == slots * 128 * 1024 * 1024
+    wire = str(tmp_path / "wire")
+    wd.wire_frame(spark, SF_SMOKE).repartition(12).write.json(wire)
+    sizes = [
+        os.path.getsize(os.path.join(wire, f))
+        for f in os.listdir(wire) if f.endswith(".json")
+    ]
+    old = spark.conf.get(split)
+    # a trigger fits about three files
+    spark.conf.set(split, str(3 * max(sizes) // slots))
+    try:
+        batches, equal = _drain_backlog(spark, wire, str(tmp_path))
+    finally:
+        spark.conf.set(split, old)
+    for rows in batches:
+        assert len(rows) >= 4 and sum(rows) == 1000
+    assert equal
+
+
 # --- stream-stream + stream-static joins ----------------------------------
 
 @pytest.fixture(scope="module")

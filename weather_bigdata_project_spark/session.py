@@ -21,8 +21,10 @@ import os
 from pyspark.sql import SparkSession
 
 
-#: applicationIds whose JVM has already paid the ICU collation class-init
-#: (see _warm_collation_init). Keyed by app id so a new session re-warms.
+#: the applicationId of the live session once its JVM has paid the ICU
+#: collation class-init (see _warm_collation_init). A process runs one
+#: SparkContext at a time, so a new session replaces the entry (and
+#: re-warms) instead of adding one per session forever.
 _ICU_WARMED: set[str] = set()
 
 
@@ -56,6 +58,7 @@ def _warm_collation_init(spark: SparkSession) -> None:
     app_id = spark.sparkContext.applicationId
     if app_id in _ICU_WARMED:
         return
+    _ICU_WARMED.clear()
     _ICU_WARMED.add(app_id)
     slots = spark.sparkContext.defaultParallelism
     spark.range(0, slots, 1, slots).selectExpr(
@@ -81,8 +84,22 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_cpus() -> int:
+    """$SPARK_GRAFT_CPUS, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def default_driver_memory() -> str:
+    """$SPARK_DRIVER_MEMORY, else half the machine's physical memory in
+    whole GiB (at least 1g): the local driver JVM hosts the executors,
+    and the rest is left to Python workers and the OS."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return os.environ.get("SPARK_DRIVER_MEMORY") or f"{max(1, phys // 2**31)}g"
+
+
 def get_spark(app_name: str = "weather_bigdata_project_spark", cpus: int | str | None = None) -> SparkSession:
-    """Tuned local session. `cpus` defaults to $SPARK_GRAFT_CPUS or 32.
+    """Tuned local session. `cpus` defaults to :func:`default_cpus`, the
+    driver heap to :func:`default_driver_memory`.
 
     Scale notes (these map 1:1 onto cluster settings at 100 TB):
     - AQE handles runtime partition coalescing and skew-join splitting, so
@@ -92,7 +109,7 @@ def get_spark(app_name: str = "weather_bigdata_project_spark", cpus: int | str |
       (region/nation/supplier) broadcast automatically, and we add explicit
       broadcast() hints on the build side of star joins.
     """
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or default_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -120,7 +137,7 @@ def get_spark(app_name: str = "weather_bigdata_project_spark", cpus: int | str |
             os.environ.get("SPARK_GRAFT_CACHE_COMPRESS", "false"),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

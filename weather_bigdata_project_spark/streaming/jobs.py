@@ -23,10 +23,27 @@ from .. import weather_domain as wd
 from ..session import tune
 
 
+def trigger_bytes(spark: SparkSession) -> int:
+    """Byte bound on one file-source micro-batch: one full input split
+    (``spark.sql.files.maxPartitionBytes``) per scheduler slot
+    (``defaultParallelism``), i.e. one round of scan tasks that keeps
+    every core busy. A backlog smaller than that drains in a single
+    micro-batch, so listing, WAL, planning and commit are paid once,
+    not once per handful of files; a larger one is admitted one round
+    of splits per trigger, a bound that grows with the cluster. The
+    file source always admits at least one file, however large."""
+    split = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils \
+        .byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    return spark.sparkContext.defaultParallelism * split
+
+
 def wire_file_stream(spark: SparkSession, wire_dir: str) -> DataFrame:
-    """Deterministic streaming source for tests: JSON-lines wire records
-    under the exact Kafka wire schema (S1's file twin). maxFilesPerTrigger
-    bounds micro-batch size the way Kafka's maxOffsetsPerTrigger does."""
+    """File twin of the Kafka wire topic (S1): JSON-lines wire records
+    under the exact Kafka wire schema; tests replay a directory
+    deterministically. Each trigger admits at most :func:`trigger_bytes`
+    of new files — the reference's Kafka source had no rate limit and
+    took every pending record, and a backlog that fits one round of
+    splits still does here."""
     tune(spark)
     from pyspark.sql import types as Ty
 
@@ -36,7 +53,7 @@ def wire_file_stream(spark: SparkSession, wire_dir: str) -> DataFrame:
     )
     return (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
+        .option("maxBytesPerTrigger", trigger_bytes(spark))
         .json(wire_dir)
     )
 
@@ -258,11 +275,13 @@ EVENTS_STREAM_SCHEMA = (
 
 def events_file_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     """Typed parquet file-stream twin of an events Kafka topic (same
-    downstream plan; tests replay a directory deterministically)."""
+    downstream plan; tests replay a directory deterministically). Each
+    trigger admits at most :func:`trigger_bytes` of new files, like
+    :func:`wire_file_stream`."""
     tune(spark)
     return (
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
+        .option("maxBytesPerTrigger", trigger_bytes(spark))
         .parquet(events_dir)
     )
 

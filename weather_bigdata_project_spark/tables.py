@@ -89,10 +89,16 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     app_id = spark.sparkContext.applicationId
     key = (app_id, sf_dir, name)
     sig = signature(sf_dir, name)
+    path = f"{sf_dir}/{name}.parquet"
     hit = _CACHE.get(key)
-    if hit is not None and hit[0] == sig:
-        return hit[1]
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    if hit is not None:
+        if hit[0] == sig:
+            return hit[1]
+        # Spark's CacheManager matches plans by path: without a refresh, a
+        # frame some query persisted over the old file would be served for
+        # the new one
+        spark.catalog.refreshByPath(path)
+    df = spark.read.parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn(
             "ts",

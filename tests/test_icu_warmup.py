@@ -57,9 +57,10 @@ def test_warmed_set_keeps_only_the_live_session(spark):
     assert S._ICU_WARMED == {app_id}
 
 
-def test_session_defaults_follow_the_machine(monkeypatch):
+def test_session_defaults_follow_the_machine(monkeypatch, tmp_path):
     """Without overrides the session sizes itself to the cores this
-    process may use and half the physical memory; the env vars win."""
+    process may use and half the memory it may use (the physical memory,
+    or a smaller cgroup limit); the env vars win."""
     import os
 
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
@@ -68,6 +69,13 @@ def test_session_defaults_follow_the_machine(monkeypatch):
     phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     gib = int(S.default_driver_memory().removesuffix("g"))
     assert 1 <= gib and gib * 2**30 <= phys / 2
+    v2, v1 = tmp_path / "memory.max", tmp_path / "memory.limit_in_bytes"
+    monkeypatch.setattr(S, "_CGROUP_MEMORY_LIMITS", (str(v2), str(v1)))
+    v2.write_text("max\n")  # no limit: the physical memory decides
+    v1.write_text(f"{2**63 - 4096}\n")
+    assert S.usable_memory() == phys
+    v2.write_text(f"{6 * 2**30}\n")  # a 6 GiB container gets a 3g heap
+    assert S.default_driver_memory() == "3g"
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "5g")
     assert (S.default_cpus(), S.default_driver_memory()) == (3, "5g")

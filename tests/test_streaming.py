@@ -334,6 +334,11 @@ def test_trigger_bytes_bounds_each_micro_batch(spark, tmp_path):
     split = "spark.sql.files.maxPartitionBytes"
     slots = spark.sparkContext.defaultParallelism
     assert jobs.trigger_bytes(spark) == slots * 128 * 1024 * 1024
+    assert [jobs._byte_string(v) for v in ("64k", "1g", "512", "2MB")] == [
+        2**16, 2**30, 512, 2 * 2**20
+    ]
+    with pytest.raises(ValueError):
+        jobs._byte_string("1.5g")
     wire = str(tmp_path / "wire")
     wd.wire_frame(spark, SF_SMOKE).repartition(12).write.json(wire)
     sizes = [
@@ -545,6 +550,58 @@ def test_incremental_agg_mv(spark, wire_dir):
     finally:
         shutil.rmtree(os.path.dirname(out), ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
+
+
+@pytest.mark.parametrize(
+    "body",
+    [
+        test_streaming_windowed_stats,
+        test_streaming_session_windows,
+        test_stateful_city_extremes,
+        test_incremental_agg_mv,
+        test_stream_stream_interval_join_equals_batch,
+        test_streaming_sliding_windows_match_batch,
+    ],
+    ids=lambda body: body.__name__.removeprefix("test_"),
+)
+def test_state_carries_across_micro_batches(spark, request, monkeypatch, body):
+    """The 8-file fixtures fit one trigger (trigger_bytes), so the tests
+    above drain them in a single micro-batch. Rerun each with a trigger
+    that admits four of the (equal-sized) files: window, session, join
+    and MV state must then carry over two micro-batches and still meet
+    the same assertions. Every query that read input must have taken
+    exactly two micro-batches to do it.
+
+    Two, not more: every fixture file spans the whole time range, and
+    the late-row filter uses the previous batch's watermark, so from a
+    third batch on rows older than the watermark are rightly dropped as
+    late, which the batch twins above do not model."""
+    import inspect
+
+    from pyspark.sql.streaming import StreamingQuery
+
+    # the body's data fixture: wire_dir or events_dir
+    d = request.getfixturevalue(list(inspect.signature(body).parameters)[1])
+    largest = max(
+        os.path.getsize(os.path.join(d, f))
+        for f in os.listdir(d) if f.endswith((".json", ".parquet"))
+    )
+    monkeypatch.setattr(jobs, "trigger_bytes", lambda _spark: 4 * largest)
+    data_batches = []
+    await_termination = StreamingQuery.awaitTermination
+
+    def await_and_count(q, *args):
+        done = await_termination(q, *args)
+        data_batches.append(
+            len([p for p in q.recentProgress if p.numInputRows > 0])
+        )
+        return done
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", await_and_count)
+    body(spark, d)
+    assert [n for n in data_batches if n] and all(
+        n == 2 for n in data_batches if n
+    ), data_batches
 
 
 def test_transition_counts_stream(spark, tmp_path):

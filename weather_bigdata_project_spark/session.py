@@ -52,8 +52,9 @@ def _warm_collation_init(spark: SparkSession) -> None:
     slot (`defaultParallelism` single-row partitions, submitted
     together): with a slot-count's worth of simultaneous tasks every
     executor receives at least one, the standard per-executor warmup
-    shape. Locally this is 32 trivial tasks (~0.1 s); on a cluster the
-    inits run in parallel, paid once, amortized over the job.
+    shape. Locally this is one trivial task per local core (~0.1 s);
+    on a cluster the inits run in parallel, paid once, amortized over
+    the job.
     """
     app_id = spark.sparkContext.applicationId
     if app_id in _ICU_WARMED:
@@ -89,12 +90,35 @@ def default_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
+#: cgroup v2 and v1 memory limits; "max" or a missing file means none
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def usable_memory() -> int:
+    """Bytes this process may use: the physical memory, or the cgroup
+    limit when that is smaller (a container's heap must fit its limit,
+    or the JVM is killed instead of spilling)."""
+    limits = [os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")]
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                limits.append(int(f.read()))
+        except (OSError, ValueError):
+            pass
+    return min(limits)
+
+
 def default_driver_memory() -> str:
-    """$SPARK_DRIVER_MEMORY, else half the machine's physical memory in
-    whole GiB (at least 1g): the local driver JVM hosts the executors,
-    and the rest is left to Python workers and the OS."""
-    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    return os.environ.get("SPARK_DRIVER_MEMORY") or f"{max(1, phys // 2**31)}g"
+    """$SPARK_DRIVER_MEMORY, else half of :func:`usable_memory` in whole
+    GiB (at least 1g): the local driver JVM hosts the executors, and the
+    rest is left to Python workers and the OS."""
+    return (
+        os.environ.get("SPARK_DRIVER_MEMORY")
+        or f"{max(1, usable_memory() // 2**31)}g"
+    )
 
 
 def get_spark(app_name: str = "weather_bigdata_project_spark", cpus: int | str | None = None) -> SparkSession:

@@ -16,6 +16,8 @@ downstream plan)."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,9 +34,22 @@ def trigger_bytes(spark: SparkSession) -> int:
     not once per handful of files; a larger one is admitted one round
     of splits per trigger, a bound that grows with the cluster. The
     file source always admits at least one file, however large."""
-    split = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils \
-        .byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    split = _byte_string(spark.conf.get("spark.sql.files.maxPartitionBytes"))
     return spark.sparkContext.defaultParallelism * split
+
+
+#: power-of-two shifts of Spark's byte-size suffixes (no suffix = bytes)
+_BYTE_SHIFTS = {"": 0, "b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20,
+                "g": 30, "gb": 30, "t": 40, "tb": 40, "p": 50, "pb": 50}
+
+
+def _byte_string(value: str) -> int:
+    """A byte-size conf value ("128MB", "64k", "134217728") in bytes, read
+    the way Spark reads it."""
+    m = re.fullmatch(r"(\d+)([a-z]*)", value.strip().lower())
+    if m is None or m.group(2) not in _BYTE_SHIFTS:
+        raise ValueError(f"not a byte size: {value!r}")
+    return int(m.group(1)) << _BYTE_SHIFTS[m.group(2)]
 
 
 def wire_file_stream(spark: SparkSession, wire_dir: str) -> DataFrame:

@@ -722,6 +722,36 @@ def test_streaming_listener_captures_progress(spark, wire_dir):
         observe.detach_listener(spark, lis)
 
 
+def test_streaming_listener_state_is_bounded():
+    """A live query reports progress forever: the listener keeps the
+    last PROGRESS_RING records, each with its durationMs phases, while
+    the summary's totals count every batch it was ever told about."""
+    from types import SimpleNamespace
+
+    from weather_bigdata_project_spark.streaming import observe
+
+    lis = observe.BatchProgressListener()
+    n = observe.PROGRESS_RING + 37
+    for i in range(n):
+        lis.onQueryProgress(SimpleNamespace(progress=SimpleNamespace(
+            name=f"q{i % 2}", batchId=i, numInputRows=i,
+            processedRowsPerSecond=1.0,
+            durationMs={"addBatch": i, "triggerExecution": 2 * i},
+        )))
+    assert len(lis.events) == observe.PROGRESS_RING
+    assert [e["batch_id"] for e in lis.events] == list(
+        range(n - observe.PROGRESS_RING, n)
+    )
+    assert lis.events[-1]["duration_ms"] == {
+        "addBatch": n - 1, "triggerExecution": 2 * (n - 1),
+    }
+    assert lis.progress_summary() == {
+        "batches": n,
+        "total_input_rows": n * (n - 1) // 2,
+        "queries": ["q0", "q1"],
+    }
+
+
 def test_transform_with_state_ewma(spark, tmp_path):
     """transformWithStateInPandas EWMA: drained over an event-id-ordered
     multi-batch file stream, each city's final state must be bit-equal

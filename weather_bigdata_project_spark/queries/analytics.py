@@ -13,7 +13,11 @@ Invalidation: a rewritten events.parquet rebuilds the plan and unpersists
 the old pin before the new one is pinned; a pin dropped from the cache
 (`spark.catalog.clearCache()`) is re-pinned on the next panel. The pin
 uses the default MEMORY_AND_DISK level, so a working set larger than
-executor memory spills to local disk instead of failing.
+executor memory spills to local disk instead of failing. A working set of
+one partition is pinned declared `SinglePartition` (`coalesce(1)`, which
+moves no data), so the panels' aggregates, distincts and sorts over it
+plan no shuffle: one job per panel, plus a broadcast where a panel
+cross-joins its 1-row bounds.
 
 Scale notes (100 TB design stance):
 - every aggregation here is a hash aggregate with map-side partial

@@ -8,14 +8,18 @@ primitives:
   exact-cents totals) are collected DURING the query run, zero extra
   scans, no separate monitoring query to drift out of sync;
 - streaming: a `StreamingQueryListener` captures per-micro-batch
-  progress (rows, rates, per-query) into process-local state a scraper
-  can export; it sees exactly what the engine executed.
+  progress (rows, rates, `durationMs` phases, per-query) into a bounded
+  ring of process-local records a scraper can export; it sees exactly
+  what the engine executed.
 
 Both are pull-ready: `metrics()` / `progress_summary()` return plain
 dicts an HTTP exporter can serialize.
 """
 
 from __future__ import annotations
+
+import threading
+from collections import deque
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -48,13 +52,24 @@ def observed_quality(df: DataFrame) -> tuple[DataFrame, Observation]:
     )
 
 
+#: progress records a listener keeps: a live query reports one per
+#: trigger forever, so older records fall off the ring
+PROGRESS_RING = 1024
+
+
 class BatchProgressListener(StreamingQueryListener):
     """Collects per-micro-batch progress for every streaming query on
-    the session: input rows, processed rows/sec, batch id, query name.
-    State is a plain list of dicts (process-local, scrape-ready)."""
+    the session: input rows, processed rows/sec, batch id, query name
+    and the ``durationMs`` phases. State is bounded and process-local:
+    the last PROGRESS_RING records as plain dicts (scrape-ready), plus
+    running totals that stay exact after the ring wraps."""
 
     def __init__(self):
-        self.events: list[dict] = []
+        self.events: deque[dict] = deque(maxlen=PROGRESS_RING)
+        self._lock = threading.Lock()
+        self._batches = 0
+        self._input_rows = 0
+        self._queries: set[str] = set()
 
     # required abstract hooks
     def onQueryStarted(self, event):
@@ -62,14 +77,20 @@ class BatchProgressListener(StreamingQueryListener):
 
     def onQueryProgress(self, event):
         p = event.progress
-        self.events.append(
-            {
-                "name": p.name,
-                "batch_id": p.batchId,
-                "num_input_rows": p.numInputRows,
-                "rows_per_sec": p.processedRowsPerSecond,
-            }
-        )
+        with self._lock:
+            self.events.append(
+                {
+                    "name": p.name,
+                    "batch_id": p.batchId,
+                    "num_input_rows": p.numInputRows,
+                    "rows_per_sec": p.processedRowsPerSecond,
+                    "duration_ms": dict(p.durationMs),
+                }
+            )
+            self._batches += 1
+            self._input_rows += p.numInputRows
+            if p.name:
+                self._queries.add(p.name)
 
     def onQueryIdle(self, event):
         pass
@@ -78,14 +99,12 @@ class BatchProgressListener(StreamingQueryListener):
         pass
 
     def progress_summary(self) -> dict:
-        total = sum(e["num_input_rows"] for e in self.events)
-        return {
-            "batches": len(self.events),
-            "total_input_rows": total,
-            "queries": sorted(
-                {e["name"] for e in self.events if e["name"]}
-            ),
-        }
+        with self._lock:
+            return {
+                "batches": self._batches,
+                "total_input_rows": self._input_rows,
+                "queries": sorted(self._queries),
+            }
 
 
 def attach_listener(spark: SparkSession) -> BatchProgressListener:

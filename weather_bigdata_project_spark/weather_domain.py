@@ -273,10 +273,16 @@ def wire_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     unspread scan pins the whole weather family to one core. The spread
     moves two int columns — measured ~2x on the sf0.1 flagship; no-op
     at production scale where the scan has thousands of splits."""
+    return _wire(spark, sf_dir)[0]
+
+
+def _wire(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame | None]:
+    """:func:`wire_frame`, and the events scan under it when that scan
+    was not spread (None when it was)."""
     from .operators.textops import spread_small_scan
 
-    ev = tables.load(spark, sf_dir, "events").select("event_id", "user_id")
-    ev = spread_small_scan(ev, spark, f"{sf_dir}/events.parquet")
+    scan = tables.load(spark, sf_dir, "events").select("event_id", "user_id")
+    ev = spread_small_scan(scan, spark, f"{sf_dir}/events.parquet")
     num = ev.select(
         "event_id",
         "user_id",
@@ -293,7 +299,7 @@ def wire_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             for k, s in wire_wide_sql("é").items()
         ],
     )
-    return wire
+    return wire, (scan if ev is scan else None)
 
 
 def cast_wire(df: DataFrame) -> DataFrame:
@@ -323,10 +329,12 @@ def enrich(df: DataFrame) -> DataFrame:
 @dataclass
 class _Snapshot:
     """One memo entry: the enriched plan over one snapshot of
-    events.parquet, and its PINNED_COLUMNS projection once pinned."""
+    events.parquet, its partition count, and its PINNED_COLUMNS
+    projection once pinned."""
 
     sig: tuple | None
     frame: DataFrame
+    parts: int
     pin: DataFrame | None = None
 
 
@@ -349,9 +357,18 @@ def _snapshot(spark: SparkSession, sf_dir: str) -> _Snapshot:
             if snap is not None and snap.pin is not None:
                 snap.pin.unpersist()
             tables.live_only(_ENRICHED, app_id)
-            frame = enrich(cast_wire(wire_frame(spark, sf_dir)))
+            wire, scan = _wire(spark, sf_dir)
+            frame = enrich(cast_wire(wire))
+            # known without a Spark job: a bare scan plans no exchange, so
+            # reading its splits runs nothing, where on the spread plan AQE
+            # would run the repartition's shuffle stage to answer
+            parts = (
+                spark.sparkContext.defaultParallelism
+                if scan is None
+                else scan.rdd.getNumPartitions()
+            )
             snap = _ENRICHED[(app_id, sf_dir)] = _Snapshot(
-                sig, frame.select(*ENRICHED_COLUMNS)
+                sig, frame.select(*ENRICHED_COLUMNS), parts
             )
         return snap
 
@@ -367,11 +384,22 @@ def pinned_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     in Spark's in-memory columnar cache: repeated queries over it read
     one warm working set instead of re-deriving the enrichment from
     parquet. Re-pinned when the cache entry was dropped (``clearCache``)
-    and rebuilt for a new events.parquet snapshot."""
+    and rebuilt for a new events.parquet snapshot.
+
+    A projection of one partition is pinned as ``coalesce(1)``: over one
+    partition that moves no data, but it declares the cached plan's
+    partitioning ``SinglePartition``, which the in-memory scan passes
+    on, so a group-by, global aggregate, distinct or sort over the pin
+    plans no shuffle exchange and runs as one job. A pin of several
+    partitions (a spread scan, a multi-split table) is the bare
+    projection."""
     with _LOCK:
         snap = _snapshot(spark, sf_dir)
         if snap.pin is None or not snap.pin.storageLevel.useMemory:
-            snap.pin = snap.frame.select(*PINNED_COLUMNS).persist()
+            pin = snap.frame.select(*PINNED_COLUMNS)
+            if snap.parts == 1:
+                pin = pin.coalesce(1)
+            snap.pin = pin.persist()
         return snap.pin
 
 

@@ -3,6 +3,9 @@
 from __future__ import annotations
 
 import json
+import os
+import shutil
+import subprocess
 
 from tools import perfbench_ab as ab
 
@@ -66,3 +69,36 @@ def test_a_pair_with_an_incorrect_run_is_refused(tmp_path, capsys, monkeypatch):
     monkeypatch.setattr("sys.argv", ["perfbench_ab.py", "--summarize", str(path)])
     assert ab.main() == 1
     assert "| round_cpu_s | 4 (4-4) | 3 (3-3) | 0.750 | 1/1 |" in capsys.readouterr().out
+
+
+def test_checkout_takes_a_revision_with_a_slash(tmp_path, monkeypatch):
+    repo = tmp_path / "repo"
+    repo.mkdir()
+    (repo / "run.py").write_text("print(1)\n")
+    git = ["git", "-C", str(repo), "-c", "user.name=t", "-c", "user.email=t@t"]
+    subprocess.run(git[:3] + ["init", "-q"], check=True)
+    subprocess.run(git + ["add", "run.py"], check=True)
+    subprocess.run(git + ["commit", "-qm", "x"], check=True)
+    subprocess.run(git + ["branch", "feature/x"], check=True)
+    monkeypatch.setattr(ab, "_REPO_ROOT", str(repo))
+    tree = ab.checkout("feature/x")
+    try:
+        assert os.path.isfile(os.path.join(tree, "run.py"))
+    finally:
+        shutil.rmtree(tree)
+
+
+def test_runs_last_the_benchmark_s_run_seconds(monkeypatch, capsys):
+    calls = []
+
+    def fake_run_one(tree, side, workload, seed, seconds, trace):
+        calls.append(seconds)
+        return _rec(side, seed, 1.0)
+
+    monkeypatch.setattr(ab, "checkout", lambda rev: "unused")
+    monkeypatch.setattr(ab.shutil, "rmtree", lambda *a, **k: None)
+    monkeypatch.setattr(ab, "run_one", fake_run_one)
+    monkeypatch.setattr("sys.argv", ["perfbench_ab.py", "--base", "HEAD",
+                                     "--seeds", "1-2"])
+    assert ab.main() == 0
+    assert calls == [ab.load_benchmark()["run_seconds"]] * 4

@@ -738,15 +738,23 @@ def test_streaming_listener_state_is_bounded():
             processedRowsPerSecond=1.0,
             durationMs={"addBatch": i, "triggerExecution": 2 * i},
         )))
-    assert len(lis.events) == observe.PROGRESS_RING
-    assert [e["batch_id"] for e in lis.events] == list(
+    records = lis.records()
+    assert len(records) == observe.PROGRESS_RING
+    assert [e["batch_id"] for e in records] == list(
         range(n - observe.PROGRESS_RING, n)
     )
-    assert lis.events[-1]["duration_ms"] == {
+    assert records[-1]["duration_ms"] == {
         "addBatch": n - 1, "triggerExecution": 2 * (n - 1),
     }
+    # a scrape is a snapshot: later progress does not mutate it mid-read
+    lis.onQueryProgress(SimpleNamespace(progress=SimpleNamespace(
+        name="q0", batchId=n, numInputRows=0, processedRowsPerSecond=1.0,
+        durationMs={},
+    )))
+    assert records[-1]["batch_id"] == n - 1
+    assert lis.records()[-1]["batch_id"] == n
     assert lis.progress_summary() == {
-        "batches": n,
+        "batches": n + 1,
         "total_input_rows": n * (n - 1) // 2,
         "queries": ["q0", "q1"],
     }

@@ -8,10 +8,11 @@ the repo (`git archive`), then for each seed runs
 
     python3 perfbench/run.py --workload W --seed S --seconds T --trace 0
 
-once in each tree, base first on even-indexed seeds and head first on
-odd ones, and summarizes every metric `BENCHMARK.json` declares for the
-mode: median with q1-q3 per side, the head/base ratio of the medians,
-how many seed pairs head won, and the `correct`/`failed` of every run.
+with T the `run_seconds` of `BENCHMARK.json`, once in each tree, base
+first on even-indexed seeds and head first on odd ones, and summarizes
+every metric `BENCHMARK.json` declares for the mode: median with q1-q3
+per side, the head/base ratio of the medians, how many seed pairs head
+won, and the `correct`/`failed` of every run.
 A pair in which either run is incorrect is refused: it is listed, left
 out of the summary, and the tool exits 1.
 
@@ -21,7 +22,7 @@ re-reads such lines without running anything.
 
 Usage:
     python3 tools/perfbench_ab.py --base 15a5b85 --workload dashboard \\
-        --seeds 30-39 [--seconds 10] [--trace 0] [--also panel_p50_s] \\
+        --seeds 30-39 [--trace 0] [--also panel_p50_s] \\
         [--out runs.jsonl]
     python3 tools/perfbench_ab.py --summarize runs.jsonl [--also NAME]
 """
@@ -55,7 +56,7 @@ def parse_seeds(spec: str) -> list[int]:
 
 def checkout(rev: str) -> str:
     """Extract `rev` of this repo into a fresh temporary directory."""
-    tree = tempfile.mkdtemp(prefix=f"perfbench-ab-{rev}-")
+    tree = tempfile.mkdtemp(prefix="perfbench-ab-")
     archive = subprocess.run(
         ["git", "archive", rev], cwd=_REPO_ROOT, capture_output=True, check=True
     )
@@ -167,12 +168,15 @@ def render(summary: dict) -> str:
     return "\n".join(out)
 
 
-def metric_specs(trace: int, also: list[str]) -> dict[str, str]:
-    """name -> "lower"/"higher": the metrics BENCHMARK.json declares for
-    the mode (end to end, or per layer for a traced run), plus the
-    `--also NAME[:higher]` ones, lower-better unless marked."""
+def load_benchmark() -> dict:
     with open(os.path.join(_REPO_ROOT, "BENCHMARK.json")) as f:
-        bench = json.load(f)
+        return json.load(f)
+
+
+def metric_specs(bench: dict, trace: int, also: list[str]) -> dict[str, str]:
+    """name -> "lower"/"higher": the metrics `bench` declares for the
+    mode (end to end, or per layer for a traced run), plus the
+    `--also NAME[:higher]` ones, lower-better unless marked."""
     metrics = {m["name"]: m["better"]
                for m in bench["per_layer" if trace else "end_to_end"]}
     for spec in also:
@@ -186,14 +190,14 @@ def main() -> int:
     ap.add_argument("--base", help="base revision (required unless --summarize)")
     ap.add_argument("--workload", default="dashboard")
     ap.add_argument("--seeds", default="30-39")
-    ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--also", action="append", default=[],
                     help="another metric to summarize, NAME or NAME:higher")
     ap.add_argument("--out", help="append each run's JSON line here")
     ap.add_argument("--summarize", help="summarize JSON lines from this file")
     args = ap.parse_args()
-    metrics = metric_specs(args.trace, args.also)
+    bench = load_benchmark()
+    metrics = metric_specs(bench, args.trace, args.also)
 
     if args.summarize:
         with open(args.summarize) as f:
@@ -208,7 +212,7 @@ def main() -> int:
                 order = ("base", "head") if i % 2 == 0 else ("head", "base")
                 for side in order:
                     rec = run_one(trees[side], side, args.workload, seed,
-                                  args.seconds, args.trace)
+                                  bench["run_seconds"], args.trace)
                     records.append(rec)
                     line = json.dumps(rec)
                     if args.out:

@@ -61,11 +61,12 @@ class BatchProgressListener(StreamingQueryListener):
     """Collects per-micro-batch progress for every streaming query on
     the session: input rows, processed rows/sec, batch id, query name
     and the ``durationMs`` phases. State is bounded and process-local:
-    the last PROGRESS_RING records as plain dicts (scrape-ready), plus
-    running totals that stay exact after the ring wraps."""
+    the last PROGRESS_RING records as plain dicts (scrape-ready through
+    :meth:`records`), plus running totals that stay exact after the ring
+    wraps."""
 
     def __init__(self):
-        self.events: deque[dict] = deque(maxlen=PROGRESS_RING)
+        self._events: deque[dict] = deque(maxlen=PROGRESS_RING)
         self._lock = threading.Lock()
         self._batches = 0
         self._input_rows = 0
@@ -78,7 +79,7 @@ class BatchProgressListener(StreamingQueryListener):
     def onQueryProgress(self, event):
         p = event.progress
         with self._lock:
-            self.events.append(
+            self._events.append(
                 {
                     "name": p.name,
                     "batch_id": p.batchId,
@@ -97,6 +98,12 @@ class BatchProgressListener(StreamingQueryListener):
 
     def onQueryTerminated(self, event):
         pass
+
+    def records(self) -> list[dict]:
+        """A copy of the ring, oldest first: the listener keeps appending
+        while a live query runs, so a scraper iterates this, not the ring."""
+        with self._lock:
+            return list(self._events)
 
     def progress_summary(self) -> dict:
         with self._lock:

@@ -329,12 +329,12 @@ def enrich(df: DataFrame) -> DataFrame:
 @dataclass
 class _Snapshot:
     """One memo entry: the enriched plan over one snapshot of
-    events.parquet, its partition count, and its PINNED_COLUMNS
-    projection once pinned."""
+    events.parquet, the bare events scan when the plan did not spread it,
+    and its PINNED_COLUMNS projection once pinned."""
 
     sig: tuple | None
     frame: DataFrame
-    parts: int
+    scan: DataFrame | None
     pin: DataFrame | None = None
 
 
@@ -359,16 +359,8 @@ def _snapshot(spark: SparkSession, sf_dir: str) -> _Snapshot:
             tables.live_only(_ENRICHED, app_id)
             wire, scan = _wire(spark, sf_dir)
             frame = enrich(cast_wire(wire))
-            # known without a Spark job: a bare scan plans no exchange, so
-            # reading its splits runs nothing, where on the spread plan AQE
-            # would run the repartition's shuffle stage to answer
-            parts = (
-                spark.sparkContext.defaultParallelism
-                if scan is None
-                else scan.rdd.getNumPartitions()
-            )
             snap = _ENRICHED[(app_id, sf_dir)] = _Snapshot(
-                sig, frame.select(*ENRICHED_COLUMNS), parts
+                sig, frame.select(*ENRICHED_COLUMNS), scan
             )
         return snap
 
@@ -397,7 +389,15 @@ def pinned_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         snap = _snapshot(spark, sf_dir)
         if snap.pin is None or not snap.pin.storageLevel.useMemory:
             pin = snap.frame.select(*PINNED_COLUMNS)
-            if snap.parts == 1:
+            # known without a Spark job: a bare scan plans no exchange, so
+            # reading its splits runs nothing, where on the spread plan AQE
+            # would run the repartition's shuffle stage to answer
+            parts = (
+                spark.sparkContext.defaultParallelism
+                if snap.scan is None
+                else snap.scan.rdd.getNumPartitions()
+            )
+            if parts == 1:
                 pin = pin.coalesce(1)
             snap.pin = pin.persist()
         return snap.pin

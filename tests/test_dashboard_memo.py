@@ -168,3 +168,34 @@ def test_memos_keep_only_the_live_session(spark):
     wd.enriched_frame(spark, f"{SF_SMOKE}/")
     assert all(k[0] != "dead-app" for k in tables._CACHE)
     assert all(k[0] != "dead-app" for k in wd._ENRICHED)
+
+
+def test_rewritten_documents_rebuild_the_shingle_memo(spark, tmp_path):
+    """The shared shingle build (textops.doc_gram_arrays_shared) serves
+    only while documents.parquet is the file it was built from: after a
+    rewrite both dedup queries match their oracles over the new file."""
+    from weather_bigdata_project_spark.operators import textops
+
+    for t in tables.TABLES:
+        if t != "documents":
+            os.symlink(f"{SF_SMOKE}/{t}.parquet", tmp_path / f"{t}.parquet")
+    lake = str(tmp_path)
+    docs = pq.read_table(f"{SF_SMOKE}/documents.parquet")
+    pq.write_table(docs, f"{lake}/documents.parquet")
+    names = ["dedup_ngram_jaccard", "dedup_minhash_lsh"]
+
+    def assert_dedup_matches() -> None:
+        con = duck_connect(lake)
+        try:
+            for name in names:
+                got = compare(name, QUERIES[name](spark, lake), ORACLES[name], con)
+                assert got == [], (name, got)
+        finally:
+            con.close()
+
+    assert_dedup_matches()
+    old = textops.doc_gram_arrays_shared(spark, lake)
+    third = docs.num_rows // 3
+    pq.write_table(docs.slice(third, third), f"{lake}/documents.parquet")
+    assert_dedup_matches()
+    assert textops.doc_gram_arrays_shared(spark, lake) is not old

@@ -1,9 +1,10 @@
 """The dashboard pin's declared partitioning (weather_domain.pinned_frame).
 
-A pin of one partition is declared ``SinglePartition``, so no reader of
-it plans a shuffle; a pin of several partitions (the spread path) is the
-bare projection, exactly as before. Every result is still compared with
-its DuckDB oracle."""
+The events scan is never spread, so the pin follows its split count: a
+pin of one split is declared ``SinglePartition``, so no reader of it
+plans a shuffle; a pin of several splits (a multi-file table) is the
+bare projection. Every panel result is compared with its DuckDB
+oracle."""
 
 from __future__ import annotations
 
@@ -44,8 +45,7 @@ def _lake(tmp_path, src: str) -> str:
 @pytest.fixture
 def one_split(spark, tmp_path):
     """sf0.01 events rewritten in several row groups, the shape perfbench
-    generates: enough row groups that the scan is not spread, yet one
-    Spark split, so the pin has one partition."""
+    generates: still one Spark split, so the pin has one partition."""
     lake = _lake(tmp_path, SF_CORRECT)
     os.unlink(tmp_path / "events.parquet")
     events = pq.read_table(f"{SF_CORRECT}/events.parquet")
@@ -94,14 +94,33 @@ def test_one_split_pin_is_read_without_a_shuffle(spark, one_split):
     assert READERS <= readers
 
 
-def test_spread_pin_is_the_bare_projection(spark, tmp_path):
-    """sf0.001 is one row group, so its scan is spread across the cores:
-    the pin keeps those partitions and its plan, and pinning it runs no
-    Spark job (deciding by the pin's own partition count would run the
-    repartition's shuffle stage)."""
+def test_fixture_pin_is_one_partition(spark, tmp_path):
+    """sf0.001 is one row group, one split: its enriched plan has no
+    exchange, and its pin is one declared partition, pinned without a
+    Spark job."""
     lake = _lake(tmp_path, SF_SMOKE)
+    plan = wd.enriched_frame(spark, lake)._jdf.queryExecution().executedPlan()
+    assert not SHUFFLE.search(plan.toString()), plan.toString()
+    pin, jobs = _pinning_jobs(spark, lake)
+    assert jobs == 0
+    assert pin.rdd.getNumPartitions() == 1
+
+
+def test_multi_split_pin_is_the_bare_projection(spark, tmp_path):
+    """events.parquet as a directory of part files scans as several
+    splits: the pin keeps the scan's partitions and is the bare
+    projection, and pinning it runs no Spark job."""
+    lake = _lake(tmp_path, SF_SMOKE)
+    os.unlink(tmp_path / "events.parquet")
+    os.mkdir(tmp_path / "events.parquet")
+    events = pq.read_table(f"{SF_SMOKE}/events.parquet")
+    half = events.num_rows // 2
+    for i, part in enumerate((events.slice(0, half), events.slice(half))):
+        pq.write_table(part, tmp_path / "events.parquet" / f"part-{i}.parquet")
+    parts = tables.load(spark, lake, "events").rdd.getNumPartitions()
+    assert parts >= 2
     pin, jobs = _pinning_jobs(spark, lake)
     assert jobs == 0
     bare = wd.enriched_frame(spark, lake).select(*wd.PINNED_COLUMNS)
     assert pin.sameSemantics(bare)
-    assert pin.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert pin.rdd.getNumPartitions() == parts

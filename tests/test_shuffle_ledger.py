@@ -152,7 +152,7 @@ def test_extractor_reports_real_shuffles(spark):
     jvm, gw = sc._jvm, sc._gateway
     got = measure(
         spark,
-        QUERIES["weather_city_stats"],
+        QUERIES["tpch_q1_pricing_summary"],
         SF_SMOKE,
         store,
         jvm,

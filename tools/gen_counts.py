@@ -35,14 +35,19 @@ def counts() -> dict:
     }
 
 
-def main() -> None:
-    c = counts()
-    line = (
+def marked_line(c: dict) -> str:
+    """COVERAGE.md's marked line for the counts `c`."""
+    return (
         f"{MARK} **Registry counts**: {c['registered']} registered "
         f"queries, {c['oracled']} with DuckDB hash oracles; rows-only: "
         + ", ".join(f"`{n}`" for n in c["rows_only"])
         + "."
     )
+
+
+def main() -> None:
+    c = counts()
+    line = marked_line(c)
     path = os.path.join(_REPO_ROOT, "COVERAGE.md")
     with open(path) as f:
         text = f.read()

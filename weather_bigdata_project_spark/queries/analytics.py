@@ -5,19 +5,22 @@ pandas, re-expressed as Catalyst plans over the enriched weather frame
 One working set serves every panel (the Shark pattern for repeated
 interactive queries): `_enr` returns the 11 columns the panels read
 (`weather_domain.PINNED_COLUMNS`), projected from the enriched plan and
-pinned in Spark's in-memory columnar cache (`weather_domain.pinned_frame`). The enriched plan is memoized per
-(applicationId, sf_dir) and events.parquet snapshot (inode, mtime, size),
-so a panel costs one small aggregate, not a footer read, a repartition,
-the wire synthesis, the cast/enrich analyses and a parquet scan.
+pinned in Spark's in-memory columnar cache (`weather_domain.pinned_frame`).
+The enriched plan is memoized per (applicationId, sf_dir) and events
+frame of `tables.load` (which changes when events.parquet is rewritten),
+so a panel costs one small aggregate, not the wire synthesis, the
+cast/enrich analyses and a parquet scan.
 Invalidation: a rewritten events.parquet rebuilds the plan and unpersists
 the old pin before the new one is pinned; a pin dropped from the cache
 (`spark.catalog.clearCache()`) is re-pinned on the next panel. The pin
 uses the default MEMORY_AND_DISK level, so a working set larger than
-executor memory spills to local disk instead of failing. A working set of
-one partition is pinned declared `SinglePartition` (`coalesce(1)`, which
-moves no data), so the panels' aggregates, distincts and sorts over it
-plan no shuffle: one job per panel, plus a broadcast where a panel
-cross-joins its 1-row bounds.
+executor memory spills to local disk instead of failing. The enriched
+plan has no exchange, so the pin follows the events scan's splits: a
+one-split scan (every shipped fixture and the benchmark's file) is
+pinned declared `SinglePartition` (`coalesce(1)`, which moves no data),
+so the panels' aggregates, distincts and sorts over it plan no shuffle:
+one job per panel, plus a broadcast where a panel cross-joins its 1-row
+bounds. A multi-split scan is pinned as the bare projection.
 
 Scale notes (100 TB design stance):
 - every aggregation here is a hash aggregate with map-side partial

@@ -148,18 +148,13 @@ def get_spark(app_name: str = "weather_bigdata_project_spark", cpus: int | str |
         # partitions) is the recommended setting; this is a
         # data-volume-dependent knob, not a universal best.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Cache-build cost knob for the persist() materialization
+        # Cache-build cost of the persist() materialization
         # strategy (operators/textops.materialize): columnar cache
         # COMPRESSION is pure CPU overhead when the cached frames fit
         # memory uncompressed — A/B on the persist-heavy queries
         # measured 28% wall saved with it off (cohort 2.3s -> 1.4s,
-        # minhash 4.3s -> 2.9s). On a memory-pressured cluster flip it
-        # back on (SPARK_GRAFT_CACHE_COMPRESS=true): trading CPU for
-        # cache residency is right when DISK spill is the alternative.
-        .config(
-            "spark.sql.inMemoryColumnarStorage.compressed",
-            os.environ.get("SPARK_GRAFT_CACHE_COMPRESS", "false"),
-        )
+        # minhash 4.3s -> 2.9s).
+        .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")

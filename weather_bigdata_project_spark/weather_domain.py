@@ -266,23 +266,12 @@ def wire_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthetic weather wire stream: 14 all-string columns, the exact
     reference wire schema (ref:spark-apps/weather_streaming.py:28-43).
 
-    The base scan is spread across cores before the synthesis chain:
-    the fixture parquet is a single row group (= one scan task), and
-    everything downstream of here is narrow (timestamp formatting +
-    string casts are the most expensive scalar work in the repo), so an
-    unspread scan pins the whole weather family to one core. The spread
-    moves two int columns — measured ~2x on the sf0.1 flagship; no-op
-    at production scale where the scan has thousands of splits."""
-    return _wire(spark, sf_dir)[0]
-
-
-def _wire(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame | None]:
-    """:func:`wire_frame`, and the events scan under it when that scan
-    was not spread (None when it was)."""
-    from .operators.textops import spread_small_scan
-
-    scan = tables.load(spark, sf_dir, "events").select("event_id", "user_id")
-    ev = spread_small_scan(scan, spark, f"{sf_dir}/events.parquet")
+    Synthesized straight over the events scan, with no exchange: every
+    stage downstream is narrow, so the plan runs in the scan's own
+    splits. Round-robin spreading a one-row-group scan across the cores
+    was measured a loss on this path (sf0.1 on 4 cores, 23 weather/geo
+    queries: 0.82x the wall and 0.61x the CPU without it)."""
+    ev = tables.load(spark, sf_dir, "events")
     num = ev.select(
         "event_id",
         "user_id",
@@ -292,14 +281,13 @@ def _wire(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame | None
         "*",
         *[F.expr(_adapt(s, "spark")).alias(k) for k, s in WIRE_DERIVED.items()],
     )
-    wire = num.select(
+    return num.select(
         "event_id",
         *[
             F.expr(_adapt(s, "spark")).alias(k)
             for k, s in wire_wide_sql("é").items()
         ],
     )
-    return wire, (scan if ev is scan else None)
 
 
 def cast_wire(df: DataFrame) -> DataFrame:
@@ -328,21 +316,19 @@ def enrich(df: DataFrame) -> DataFrame:
 
 @dataclass
 class _Snapshot:
-    """One memo entry: the enriched plan over one snapshot of
-    events.parquet, the bare events scan when the plan did not spread it,
-    and its PINNED_COLUMNS projection once pinned."""
+    """One memo entry: the enriched plan over one events frame of
+    tables.load, and its PINNED_COLUMNS projection once pinned."""
 
-    sig: tuple | None
+    events: DataFrame
     frame: DataFrame
-    scan: DataFrame | None
     pin: DataFrame | None = None
 
 
 #: (applicationId, sf_dir) -> the enriched plan of the current
-#: events.parquet snapshot. Building it costs a footer read, a repartition
-#: and ~5 plan analyses (~0.25 s), which every dashboard panel would
-#: otherwise pay.
-#: A rewritten events.parquet rebuilds the entry and drops the old pin;
+#: events.parquet snapshot. Building it costs ~5 plan analyses, which
+#: every dashboard panel would otherwise pay. An entry serves while
+#: tables.load returns the events frame it was built over (tables owns
+#: the rule for a rewritten file); a rebuild drops the old pin, and
 #: entries of dead sessions are dropped.
 _ENRICHED: dict[tuple[str, str], _Snapshot] = {}
 _LOCK = threading.RLock()
@@ -350,17 +336,16 @@ _LOCK = threading.RLock()
 
 def _snapshot(spark: SparkSession, sf_dir: str) -> _Snapshot:
     app_id = spark.sparkContext.applicationId
-    sig = tables.signature(sf_dir, "events")
+    events = tables.load(spark, sf_dir, "events")
     with _LOCK:
         snap = _ENRICHED.get((app_id, sf_dir))
-        if snap is None or snap.sig != sig:
+        if snap is None or snap.events is not events:
             if snap is not None and snap.pin is not None:
                 snap.pin.unpersist()
             tables.live_only(_ENRICHED, app_id)
-            wire, scan = _wire(spark, sf_dir)
-            frame = enrich(cast_wire(wire))
+            frame = enrich(cast_wire(wire_frame(spark, sf_dir)))
             snap = _ENRICHED[(app_id, sf_dir)] = _Snapshot(
-                sig, frame.select(*ENRICHED_COLUMNS), scan
+                events, frame.select(*ENRICHED_COLUMNS)
             )
         return snap
 
@@ -378,26 +363,18 @@ def pinned_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet. Re-pinned when the cache entry was dropped (``clearCache``)
     and rebuilt for a new events.parquet snapshot.
 
-    A projection of one partition is pinned as ``coalesce(1)``: over one
-    partition that moves no data, but it declares the cached plan's
-    partitioning ``SinglePartition``, which the in-memory scan passes
-    on, so a group-by, global aggregate, distinct or sort over the pin
-    plans no shuffle exchange and runs as one job. A pin of several
-    partitions (a spread scan, a multi-split table) is the bare
-    projection."""
+    The pin shape follows the events scan's split count. One split is
+    pinned as ``coalesce(1)``: over one partition that moves no data,
+    but it declares the cached plan's partitioning ``SinglePartition``,
+    which the in-memory scan passes on, so a group-by, global aggregate,
+    distinct or sort over the pin plans no shuffle exchange and runs as
+    one job. Several splits are pinned as the bare projection. The plan
+    has no exchange, so reading the split count runs no Spark job."""
     with _LOCK:
         snap = _snapshot(spark, sf_dir)
         if snap.pin is None or not snap.pin.storageLevel.useMemory:
             pin = snap.frame.select(*PINNED_COLUMNS)
-            # known without a Spark job: a bare scan plans no exchange, so
-            # reading its splits runs nothing, where on the spread plan AQE
-            # would run the repartition's shuffle stage to answer
-            parts = (
-                spark.sparkContext.defaultParallelism
-                if snap.scan is None
-                else snap.scan.rdd.getNumPartitions()
-            )
-            if parts == 1:
+            if snap.events.rdd.getNumPartitions() == 1:
                 pin = pin.coalesce(1)
             snap.pin = pin.persist()
         return snap.pin

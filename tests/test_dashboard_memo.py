@@ -1,12 +1,15 @@
-"""The dashboard's enriched-frame memo and pin (queries/analytics._enr ->
-weather_domain.pinned_frame): one plan per events.parquet snapshot, one
-pinned narrow projection serving every panel. A stale memo or pin is a
-correctness bug, so every test here compares panels with their DuckDB
-oracles over the file as it is on disk at that moment."""
+"""The dashboard's enriched-frame memo, pin and prepared frames
+(weather_domain.pinned_frame and weather_domain.prepared): one plan per
+events.parquet snapshot, one pinned narrow projection serving every
+panel, and one prepared frame per panel and pin. A stale memo, pin or
+prepared frame is a correctness bug, so every test here compares panels
+with their DuckDB oracles over the file as it is on disk at that
+moment."""
 
 from __future__ import annotations
 
 import os
+import sys
 import threading
 
 import pyarrow.parquet as pq
@@ -16,7 +19,6 @@ from tests.conftest import SF_SMOKE
 from tools.check_oracle import compare, duck_connect
 from weather_bigdata_project_spark import tables
 from weather_bigdata_project_spark import weather_domain as wd
-from weather_bigdata_project_spark.queries import analytics
 from weather_bigdata_project_spark.registry import ORACLES, QUERIES
 
 PANELS = ["weather_city_stats", "weather_global_stats"]
@@ -39,14 +41,18 @@ def lake(tmp_path):
     return str(tmp_path)
 
 
-def _assert_panels_match(spark, sf_dir: str) -> None:
-    con = duck_connect(sf_dir)
+def _assert_matches(name: str, df, oracle_dir: str) -> None:
+    con = duck_connect(oracle_dir)
     try:
-        for name in PANELS:
-            got = compare(name, QUERIES[name](spark, sf_dir), ORACLES[name], con)
-            assert got == [], (name, got)
+        got = compare(name, df, ORACLES[name], con)
     finally:
         con.close()
+    assert got == [], (name, got)
+
+
+def _assert_panels_match(spark, sf_dir: str) -> None:
+    for name in PANELS:
+        _assert_matches(name, QUERIES[name](spark, sf_dir), sf_dir)
 
 
 def _next_rdd_id(spark) -> int:
@@ -66,15 +72,15 @@ def test_rewritten_events_are_never_served_stale(spark, lake):
     cache matches plans by file path, so it reports the new pin's.)"""
     first_id = _next_rdd_id(spark)
     _assert_panels_match(spark, lake)
-    old = analytics._enr(spark, lake)
+    old = wd.pinned_frame(spark, lake)
     old_plan = wd.enriched_frame(spark, lake)
     assert _pinned_since(spark, first_id) == 1
 
     _write_events(lake, slice(300, 1000))  # overlapping, different rows
     _assert_panels_match(spark, lake)
     assert wd.enriched_frame(spark, lake) is not old_plan
-    assert analytics._enr(spark, lake) is not old
-    assert analytics._enr(spark, lake).count() == 700
+    assert wd.pinned_frame(spark, lake) is not old
+    assert wd.pinned_frame(spark, lake).count() == 700
     assert _pinned_since(spark, first_id) == 1
 
 
@@ -124,12 +130,12 @@ def test_panels_repin_after_clear_cache(spark):
     """(b) `spark.catalog.clearCache()` (run between queries by the
     benchmark suite) drops the pin; the next panel pins it again and
     still matches its oracle."""
-    pin = analytics._enr(spark, SF_SMOKE)
+    pin = wd.pinned_frame(spark, SF_SMOKE)
     pin.count()
     spark.catalog.clearCache()
     assert not pin.storageLevel.useMemory
     _assert_panels_match(spark, SF_SMOKE)
-    assert analytics._enr(spark, SF_SMOKE).storageLevel.useMemory
+    assert wd.pinned_frame(spark, SF_SMOKE).storageLevel.useMemory
 
 
 def test_concurrent_cold_memo_pins_once(spark, lake):
@@ -142,7 +148,7 @@ def test_concurrent_cold_memo_pins_once(spark, lake):
     def client(cid: int) -> None:
         try:
             start.wait()
-            got[cid] = analytics._enr(spark, lake)
+            got[cid] = wd.pinned_frame(spark, lake)
             QUERIES[PANELS[cid]](spark, lake).collect()
         except Exception as e:  # noqa: BLE001 - reported below
             errors.append(e)
@@ -157,6 +163,155 @@ def test_concurrent_cold_memo_pins_once(spark, lake):
     assert _pinned_since(spark, first_id) == 1
     _assert_panels_match(spark, lake)
     assert _pinned_since(spark, first_id) == 1
+
+
+def _jobs(spark, group: str, action):
+    """Run `action` under job group `group`: its result, and the number
+    of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(pdf):
+    return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+
+
+def test_prepared_frame_is_served_again_and_still_runs(spark, lake):
+    """Within one snapshot the registry serves the frame it prepared,
+    counted as a hit; every toPandas() on it still runs a Spark job
+    and gives the oracle's answer."""
+    name = "weather_temp_histogram"
+    before = wd.memo_stats()
+    df = QUERIES[name](spark, lake)
+    assert QUERIES[name](spark, lake) is df
+    after = wd.memo_stats()
+    assert after["panel_builds"] - before["panel_builds"] == 1
+    assert after["panel_hits"] - before["panel_hits"] == 1
+    results = []
+    for i in range(2):
+        pdf, jobs = _jobs(spark, f"prepared {lake} {i}", df.toPandas)
+        assert jobs >= 1
+        results.append(_rows(pdf))
+    assert results[0].equals(results[1])
+    _assert_matches(name, df, lake)
+
+
+def test_prepared_frames_follow_a_repin(spark, lake):
+    """After `clearCache` the next panel is built over the new pin, not
+    served from a plan over the dropped one: that plan would rebuild the
+    old pin's buffers as a second cached RDD the cache does not track."""
+    name = "weather_city_stats"
+    old = QUERIES[name](spark, lake)
+    old.toPandas()
+    first_id = _next_rdd_id(spark)
+    spark.catalog.clearCache()
+    new = QUERIES[name](spark, lake)
+    assert new is not old
+    _assert_matches(name, new, lake)
+    wd.pinned_frame(spark, lake).count()
+    assert _pinned_since(spark, first_id) == 1
+
+
+def test_rewritten_events_get_new_prepared_frames(spark, lake):
+    """A rewritten events.parquet is a new snapshot: every panel gets a
+    new prepared frame, which matches its oracle over the new file."""
+    old = {name: QUERIES[name](spark, lake) for name in PANELS}
+    _write_events(lake, slice(300, 1000))
+    for name in PANELS:
+        assert QUERIES[name](spark, lake) is not old[name], name
+    _assert_panels_match(spark, lake)
+
+
+def test_threads_share_one_prepared_frame(spark, lake):
+    """Two clients at once get one prepared frame, and each runs it five
+    times with no error and the same answer."""
+    name = "weather_temp_histogram"
+    start = threading.Barrier(2)
+    frames, results, errors = {}, {0: [], 1: []}, []
+
+    def client(cid: int) -> None:
+        try:
+            start.wait()
+            frames[cid] = df = QUERIES[name](spark, lake)
+            for _ in range(5):
+                results[cid].append(_rows(df.toPandas()))
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=client, args=(c,)) for c in (0, 1)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+        assert not t.is_alive()
+    assert not errors, errors
+    assert frames[0] is frames[1]
+    want = results[0][0]
+    assert all(r.equals(want) for rs in results.values() for r in rs)
+    _assert_matches(name, frames[0], lake)
+
+
+def test_memo_counters_lose_no_update_under_contention(spark, lake):
+    """More clients than cores, switching threads as often as the
+    interpreter allows, all asking for one panel: one frame is built and
+    every other call is counted as a hit."""
+    name, clients, calls = "weather_minmax", 8, 20
+    before = wd.memo_stats()
+    frames, errors = set(), []
+    start = threading.Barrier(clients)
+
+    def client() -> None:
+        try:
+            start.wait()
+            for _ in range(calls):
+                frames.add(id(QUERIES[name](spark, lake)))
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=client) for _ in range(clients)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(interval)
+    assert not errors, errors
+    assert len(frames) == 1
+    after = wd.memo_stats()
+    assert after["panel_builds"] - before["panel_builds"] == 1
+    assert after["panel_hits"] - before["panel_hits"] == clients * calls - 1
+
+
+def test_multi_split_prepared_frame_reruns_its_shuffle(spark, tmp_path):
+    """Over a multi-split pin a grouped panel shuffles. Its prepared
+    frame runs again over the final adaptive plan and the shuffle
+    output of the first run, and matches the oracle both times (the
+    rows are sf0.001's, split in two part files)."""
+    for t in tables.TABLES:
+        if t != "events":
+            os.symlink(f"{SF_SMOKE}/{t}.parquet", tmp_path / f"{t}.parquet")
+    os.mkdir(tmp_path / "events.parquet")
+    events = pq.read_table(f"{SF_SMOKE}/events.parquet")
+    half = events.num_rows // 2
+    for i, part in enumerate((events.slice(0, half), events.slice(half))):
+        pq.write_table(part, tmp_path / "events.parquet" / f"part-{i}.parquet")
+    lake = str(tmp_path)
+    name = "weather_city_stats"
+    df = QUERIES[name](spark, lake)
+    for _ in range(2):
+        assert QUERIES[name](spark, lake) is df
+        _assert_matches(name, df, SF_SMOKE)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ShuffleQueryStage" in plan, plan
 
 
 def test_memos_keep_only_the_live_session(spark):

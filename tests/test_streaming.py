@@ -277,6 +277,23 @@ def test_alerts_stream_filter(spark, wire_dir):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
+def test_console_sink_drains_and_await_any_sees_it_stop(spark, wire_dir):
+    """S7 + T7: the console sink reads every wire row and stops, and
+    await_any returns once it has."""
+    spark.streams.resetTerminated()  # forget queries other tests ended
+    q = jobs.start_console_sink(
+        jobs.enriched_stream(jobs.wire_file_stream(spark, wire_dir))
+    )
+    try:
+        assert jobs.await_any(spark, timeout_s=120) is True
+        assert not q.isActive
+        assert q.exception() is None
+        read = sum(p["numInputRows"] for p in q.recentProgress)
+        assert read == wd.wire_frame(spark, SF_SMOKE).count()
+    finally:
+        q.stop()
+
+
 def _drain_backlog(spark, wire: str, root: str):
     """availableNow-drain `wire` into a parquet lake and a JSON alerts feed
     under `root` (two queries, as scripts/run_pipeline.py wires them).

@@ -88,7 +88,9 @@ def alerts_stream(enriched: DataFrame) -> DataFrame:
 
 
 def start_console_sink(enriched: DataFrame):
-    """S7 (ref:...:148-165): debug console sink, append mode."""
+    """S7 (ref:...:148-165): debug console sink, append mode. Like
+    :func:`start_lake_sink` it drains all pending input and stops
+    (availableNow)."""
     return (
         enriched.select(
             "timestamp_dt", "city_name", "temperature", "humidity", "pressure",
@@ -97,6 +99,7 @@ def start_console_sink(enriched: DataFrame):
         .writeStream.outputMode("append")
         .format("console")
         .option("truncate", False)
+        .trigger(availableNow=True)
         .start()
     )
 
@@ -272,12 +275,11 @@ def start_foreach_batch_dedup_sink(df: DataFrame, path: str, checkpoint: str):
     )
 
 
-def await_any(spark: SparkSession, timeout_s: int | None = None) -> None:
-    """T7 (ref:...:216): multi-query coordination."""
-    if timeout_s is None:
-        spark.streams.awaitAnyTermination()
-    else:
-        spark.streams.awaitAnyTermination(timeout_s * 1000)
+def await_any(spark: SparkSession, timeout_s: float | None = None) -> bool | None:
+    """T7 (ref:...:216): multi-query coordination. Waits until a query
+    of the session has terminated; with `timeout_s`, at most that many
+    seconds, and returns whether one has."""
+    return spark.streams.awaitAnyTermination(timeout_s)
 
 
 # --- stream-stream and stream-static joins (extension surface) ------------

@@ -25,7 +25,8 @@ Semantics preserved from the reference, line-for-line:
 from __future__ import annotations
 
 import threading
-from dataclasses import dataclass
+from collections.abc import Callable
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -317,11 +318,13 @@ def enrich(df: DataFrame) -> DataFrame:
 @dataclass
 class _Snapshot:
     """One memo entry: the enriched plan over one events frame of
-    tables.load, and its PINNED_COLUMNS projection once pinned."""
+    tables.load, its PINNED_COLUMNS projection once pinned, and the
+    prepared query frames built over that pin (:func:`prepared`)."""
 
     events: DataFrame
     frame: DataFrame
     pin: DataFrame | None = None
+    panels: dict[str, DataFrame] = field(default_factory=dict)
 
 
 #: (applicationId, sf_dir) -> the enriched plan of the current
@@ -332,6 +335,19 @@ class _Snapshot:
 #: entries of dead sessions are dropped.
 _ENRICHED: dict[tuple[str, str], _Snapshot] = {}
 _LOCK = threading.RLock()
+#: cumulative memo counters, updated under _LOCK (see memo_stats)
+_STATS = dict.fromkeys(
+    ("snapshots_built", "pins_built", "panel_builds", "panel_hits"), 0
+)
+
+
+def memo_stats() -> dict[str, int]:
+    """Cumulative counts of this process's memo: enriched plans built
+    (``snapshots_built``), pins built (``pins_built``, a re-pin after
+    ``clearCache`` counts), query frames built over a pin
+    (``panel_builds``) and served again (``panel_hits``)."""
+    with _LOCK:
+        return dict(_STATS)
 
 
 def _snapshot(spark: SparkSession, sf_dir: str) -> _Snapshot:
@@ -347,6 +363,7 @@ def _snapshot(spark: SparkSession, sf_dir: str) -> _Snapshot:
             snap = _ENRICHED[(app_id, sf_dir)] = _Snapshot(
                 events, frame.select(*ENRICHED_COLUMNS)
             )
+            _STATS["snapshots_built"] += 1
         return snap
 
 
@@ -354,6 +371,22 @@ def enriched_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full wire -> cast -> enrich pipeline, reference parity end-to-end.
     One memoized plan per events.parquet snapshot."""
     return _snapshot(spark, sf_dir).frame
+
+
+def _pinned(spark: SparkSession, sf_dir: str) -> _Snapshot:
+    """The current snapshot with its pin in the cache: pinned again when
+    the cache entry was dropped, which also drops the prepared frames,
+    since their plans read the old in-memory relation."""
+    with _LOCK:
+        snap = _snapshot(spark, sf_dir)
+        if snap.pin is None or not snap.pin.storageLevel.useMemory:
+            pin = snap.frame.select(*PINNED_COLUMNS)
+            if snap.events.rdd.getNumPartitions() == 1:
+                pin = pin.coalesce(1)
+            snap.pin = pin.persist()
+            snap.panels.clear()
+            _STATS["pins_built"] += 1
+        return snap
 
 
 def pinned_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -370,14 +403,31 @@ def pinned_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct or sort over the pin plans no shuffle exchange and runs as
     one job. Several splits are pinned as the bare projection. The plan
     has no exchange, so reading the split count runs no Spark job."""
+    return _pinned(spark, sf_dir).pin
+
+
+def prepared(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    body: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The frame ``body(pinned_frame(spark, sf_dir))``, built once per
+    pin and served again under ``name`` while the pin is unchanged: a
+    repeated query skips construction, analysis, optimization and
+    physical planning, and every action on the frame still runs its own
+    Spark job over the pin. The re-pin check runs first: a frame built
+    over a pin dropped by ``clearCache`` would rebuild the old pin's
+    buffers as a second, untracked cached RDD."""
     with _LOCK:
-        snap = _snapshot(spark, sf_dir)
-        if snap.pin is None or not snap.pin.storageLevel.useMemory:
-            pin = snap.frame.select(*PINNED_COLUMNS)
-            if snap.events.rdd.getNumPartitions() == 1:
-                pin = pin.coalesce(1)
-            snap.pin = pin.persist()
-        return snap.pin
+        snap = _pinned(spark, sf_dir)
+        frame = snap.panels.get(name)
+        if frame is None:
+            frame = snap.panels[name] = body(snap.pin)
+            _STATS["panel_builds"] += 1
+        else:
+            _STATS["panel_hits"] += 1
+        return frame
 
 
 def alerts_frame(spark: SparkSession, sf_dir: str) -> DataFrame:

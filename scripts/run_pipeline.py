@@ -55,8 +55,13 @@ def run(sf_dir: str, work_dir: str, cpus: int | str | None = None) -> dict[str, 
         os.path.join(ckpt, "alerts"),
         fmt="json",
     )
-    q1.awaitTermination(300)
-    q2.awaitTermination(300)
+    stuck = [q for q in (q1, q2) if not q.awaitTermination(300)]
+    if stuck:
+        for q in (q1, q2):
+            q.stop()
+        raise TimeoutError(
+            f"streams {[q.name or q.id for q in stuck]} did not drain in 300 s"
+        )
 
     # 3. QUERY the lake
     lake_df = spark.read.parquet(lake)

@@ -23,9 +23,6 @@ PKG = os.path.join(
 
 #: function -> why its .collect() is scale-safe (driver-loop state only)
 COLLECT_ALLOWED = {
-    "session.py:_warm_collation_init":
-        "ICU class-init warmup: one throwaway 1-row lower() at session "
-        "setup (guarded per applicationId) — never row data",
     "queries/geo.py:join_geo_nearest_station":
         "station dim guarded <= 128 rows, collapses to one broadcast row",
     "queries/ml.py:ml_logreg_gd":

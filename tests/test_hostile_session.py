@@ -1,8 +1,9 @@
 """The driver builds its OWN SparkSession with unknown confs — queries
 must self-tune (session.tune) and not rely on session-construction
-settings. This probe flips the two most dangerous runtime confs (ANSI
+settings. This probe flips the most dangerous runtime confs (ANSI
 mode changes cast/overflow semantics; a non-UTC zone changes every
-epoch<->string function) and asserts oracle parity still holds."""
+epoch<->string function; ICU case mappings change which code path
+lower()/upper() take) and asserts oracle parity still holds."""
 
 from __future__ import annotations
 
@@ -52,6 +53,9 @@ PROBES = [
     "join_asof_tolerance",           # epoch-us staleness bound
     "join_asof_strict_before",       # tie-exclusion ordering
     "events_snaive_mase_backtest",   # weekday split + rank windows
+    # case mappings: the fixture presets ICU case mappings on
+    "sql_string_functions",          # UPPER/LOWER in the string battery
+    "corpus_url_canonicalize",       # lower() over URL columns
 ]
 
 
@@ -62,9 +66,13 @@ def hostile(spark):
         "spark.sql.session.timeZone": spark.conf.get(
             "spark.sql.session.timeZone"
         ),
+        "spark.sql.icu.caseMappings.enabled": spark.conf.get(
+            "spark.sql.icu.caseMappings.enabled"
+        ),
     }
     spark.conf.set("spark.sql.ansi.enabled", "true")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    spark.conf.set("spark.sql.icu.caseMappings.enabled", "true")
     yield spark
     for k, v in saved.items():
         spark.conf.set(k, v)
@@ -76,6 +84,8 @@ def test_query_survives_hostile_confs(hostile, name):
     duck = duck_connect(SF_SMOKE)
     try:
         df = qs[name](hostile, SF_SMOKE)
+        # building the query self-tuned the session (tables.load -> tune)
+        assert hostile.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
         problems = compare(name, df, oracles[name], duck)
         assert not problems, "\n".join(problems)
     finally:

@@ -88,6 +88,33 @@ def test_checkout_takes_a_revision_with_a_slash(tmp_path, monkeypatch):
         shutil.rmtree(tree)
 
 
+def test_run_one_reads_printed_metrics_and_phases(monkeypatch):
+    stdout = "\n".join([
+        "workload ingest seed 7: attempted 3, failed 0, latency samples 9, "
+        "rounds 3, window 10.00 s",
+        "phases: setup 5.32 s, prepare 3.10 s, untraced round 1.20 s, "
+        "window 10.01 s, gate 0.40 s",
+        "freshness_p50_s = 0.45 s",
+        "sinks.files_per_batch = 4 count",
+        json.dumps({"correct": True, "attempted": 3, "failed": 0,
+                    "metrics": {"setup_s": {"value": 5.32, "unit": "s"}}}),
+    ])
+    done = subprocess.CompletedProcess([], 0, stdout=stdout, stderr="")
+    monkeypatch.setattr(ab.subprocess, "run", lambda *a, **k: done)
+    rec = ab.run_one("unused", "head", "ingest", 7, 10, 0)
+    assert rec["correct"] and rec["failed"] == 0
+    assert rec["metrics"] == {"setup_s": 5.32}
+    assert rec["printed"] == {
+        "phase.setup": 5.32, "phase.prepare": 3.1, "phase.untraced_round": 1.2,
+        "phase.window": 10.01, "phase.gate": 0.4,
+        "freshness_p50_s": 0.45, "sinks.files_per_batch": 4.0,
+    }
+    s = ab.summarize([dict(rec, side="base"), rec], ab.metric_specs(
+        {"end_to_end": [{"name": "setup_s", "better": "lower"}]}, 0,
+        ["phase.prepare"]))
+    assert s["rows"]["phase.prepare"]["ratio"] == 1.0
+
+
 def test_runs_last_the_benchmark_s_run_seconds(monkeypatch, capsys):
     calls = []
 

@@ -7,6 +7,8 @@ import shutil
 import sys
 import tempfile
 
+import pytest
+
 from tests.conftest import SF_SMOKE
 from weather_bigdata_project_spark import weather_domain as wd
 
@@ -28,6 +30,37 @@ def test_run_pipeline_end_to_end(spark):
         assert out["cities"] == 8
     finally:
         shutil.rmtree(work, ignore_errors=True)
+
+
+def test_run_pipeline_raises_when_a_stream_does_not_drain(spark, monkeypatch):
+    """A stream still running after the wait is an error, not a
+    partial lake reported as success."""
+    from scripts.run_pipeline import run
+    from weather_bigdata_project_spark.streaming import jobs
+
+    class Running:
+        name, id, stopped = "stuck", "stuck-id", False
+
+        def awaitTermination(self, timeout=None):
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    started = []
+
+    def start_lake_sink(*a, **k):
+        started.append(Running())
+        return started[-1]
+
+    monkeypatch.setattr(jobs, "start_lake_sink", start_lake_sink)
+    work = tempfile.mkdtemp(prefix="pipeline_")
+    try:
+        with pytest.raises(TimeoutError, match="stuck"):
+            run(SF_SMOKE, work, cpus=8)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    assert len(started) == 2 and all(q.stopped for q in started)
 
 
 def test_dashboard_script_runs():

@@ -12,7 +12,9 @@ with T the `run_seconds` of `BENCHMARK.json`, once in each tree, base
 first on even-indexed seeds and head first on odd ones, and summarizes
 every metric `BENCHMARK.json` declares for the mode: median with q1-q3
 per side, the head/base ratio of the medians, how many seed pairs head
-won, and the `correct`/`failed` of every run.
+won, and the `correct`/`failed` of every run. `--also NAME` adds a
+metric perfbench prints as a `NAME = value unit` line, or a phase of
+its `phases:` line as `phase.<name>` (e.g. `--also phase.prepare`).
 A pair in which either run is incorrect is refused: it is listed, left
 out of the summary, and the tool exits 1.
 
@@ -64,10 +66,22 @@ def checkout(rev: str) -> str:
     return tree
 
 
+def parse_phases(line: str) -> dict[str, float]:
+    """perfbench's "phases: setup 5.32 s, prepare 3.10 s, ..." line as
+    {"phase.setup": 5.32, "phase.prepare": 3.1, ...}; spaces in a phase
+    name become underscores ("phase.untraced_round")."""
+    out = {}
+    for part in line.removeprefix("phases: ").split(", "):
+        name, _, secs = part.removesuffix(" s").rpartition(" ")
+        out["phase." + name.replace(" ", "_")] = float(secs)
+    return out
+
+
 def run_one(tree: str, side: str, workload: str, seed: int, seconds: float,
             trace: int) -> dict:
     """One perfbench run in `tree`, as a record: its JSON result's
-    `correct`, `failed` and metric values, plus every printed metric."""
+    `correct`, `failed` and metric values, plus every printed metric
+    and every phase (`phase.<name>`, see :func:`parse_phases`)."""
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
          "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
@@ -77,6 +91,8 @@ def run_one(tree: str, side: str, workload: str, seed: int, seconds: float,
     rec = {"side": side, "workload": workload, "seed": seed, "rc": proc.returncode,
            "correct": False, "failed": None, "metrics": {}, "printed": {}}
     for line in lines[:-1]:
+        if line.startswith("phases: "):
+            rec["printed"].update(parse_phases(line))
         m = _PRINTED.match(line)
         if m:
             try:

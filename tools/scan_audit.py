@@ -42,7 +42,10 @@ which re-derives every kind from the tool's own adjudicate().
 
 Usage:
     python3 tools/scan_audit.py [--sf /root/testdata/sf0.01]
-        [--flag 1.9] [--stages name] [names...]
+        [--flag 1.9] [--stages name] [--out FILE] [names...]
+With no names every registry query is measured and --out is rewritten.
+With names only those are measured, and their entries replace the ones
+of the same query in an existing --out (the rest are kept).
 Prints flagged queries (ratio >= --flag) sorted worst-first.
 """
 
@@ -82,6 +85,14 @@ def adjudicate(entry: dict, flag: float = 1.9) -> str | None:
     if fs_ratio <= PARQUET_BOUND:
         return "mixed"
     return "parquet"
+
+
+def merge(record: list[dict], fresh: list[dict]) -> list[dict]:
+    """`record` with each entry of `fresh` replacing the one of the same
+    `query` in place; queries the record lacks are appended."""
+    by_query = {e["query"]: e for e in fresh}
+    out = [by_query.pop(e["query"], e) for e in record]
+    return out + list(by_query.values())
 
 
 def _disk_bytes(path: str) -> int:
@@ -200,6 +211,9 @@ def main() -> None:
         if (i + 1) % 50 == 0:
             print(f"...{i + 1}/{len(names)}", file=sys.stderr, flush=True)
 
+    if args.names and os.path.exists(args.out):
+        with open(args.out) as f:
+            out = merge(json.load(f), out)
     with open(args.out, "w") as f:
         json.dump(out, f, indent=1)
     flagged = sorted(

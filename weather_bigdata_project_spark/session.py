@@ -21,52 +21,6 @@ import os
 from pyspark.sql import SparkSession
 
 
-#: the applicationId of the live session once its JVM has paid the ICU
-#: collation class-init (see _warm_collation_init). A process runs one
-#: SparkContext at a time, so a new session replaces the entry (and
-#: re-warms) instead of adding one per session forever.
-_ICU_WARMED: set[str] = set()
-
-
-def _warm_collation_init(spark: SparkSession) -> None:
-    """Pay Spark 4's ICU collation class-init at session setup, not inside
-    the first case-folding query.
-
-    Spark 4 codegen routes lower()/upper() and collated comparisons through
-    CollationSupport.*.execBinaryICU even for the default UTF8_BINARY
-    collation; the first such call per JVM triggers
-    CollationAwareUTF8String.<clinit>, which builds ICU case-mapping
-    tables. Stack-sampled on this box (CaseMapImpl.toTitle under the
-    <clinit> frame): 7-100 s wall depending on CPU contention, ONCE per
-    JVM. Left lazy, that spike lands inside whichever registered query
-    case-folds first — corpus_url_canonicalize's gate wall read 119 s at
-    sf0.001 while its warm wall is 1.1 s. One throwaway NON-FOLDABLE
-    lower() (constant-folding evaluates interpreted, which takes the
-    non-ICU UTF8String.toLowerCase path and would NOT trigger the init)
-    moves the cost here.
-
-    The class-init is per EXECUTOR JVM, so one 1-row task would warm
-    only the one executor that ran it — every other JVM would still pay
-    the spike inside the first case-folding query scheduled onto it
-    (round-8 ADVICE). The warmup therefore runs one task per scheduler
-    slot (`defaultParallelism` single-row partitions, submitted
-    together): with a slot-count's worth of simultaneous tasks every
-    executor receives at least one, the standard per-executor warmup
-    shape. Locally this is one trivial task per local core (~0.1 s);
-    on a cluster the inits run in parallel, paid once, amortized over
-    the job.
-    """
-    app_id = spark.sparkContext.applicationId
-    if app_id in _ICU_WARMED:
-        return
-    _ICU_WARMED.clear()
-    _ICU_WARMED.add(app_id)
-    slots = spark.sparkContext.defaultParallelism
-    spark.range(0, slots, 1, slots).selectExpr(
-        "max(lower(concat('WARM', CAST(id AS STRING)))) AS v"
-    ).collect()
-
-
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime confs required for deterministic, oracle-parity plans.
 
@@ -75,13 +29,12 @@ def tune(spark: SparkSession) -> SparkSession:
     - nanosAsLong: the driver's events.parquet carries TIMESTAMP(NANOS)
       which Spark's parquet reader rejects; reading nanos as long and
       converting explicitly (tables.load_events) keeps the scan vectorized.
-    - ICU warmup: the first codegen'd case-fold per JVM pays a 7-100 s
-      one-time ICU table build; _warm_collation_init moves it out of
-      measured query walls.
+    - JVM case mappings: lower()/upper() skip ICU's per-JVM class-init
+      (1-100 s in the first case-fold); only initcap's output differs.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    _warm_collation_init(spark)
+    spark.conf.set("spark.sql.icu.caseMappings.enabled", "false")
     return spark
 
 
@@ -158,7 +111,6 @@ def get_spark(app_name: str = "weather_bigdata_project_spark", cpus: int | str |
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

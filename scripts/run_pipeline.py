@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import shutil
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -38,7 +39,11 @@ def run(sf_dir: str, work_dir: str, cpus: int | str | None = None) -> dict[str, 
     alerts = os.path.join(work_dir, "lake", "weather_alerts")
     ckpt = os.path.join(work_dir, "checkpoints")
 
-    # 1. FEED
+    # 1. FEED: a re-run starts from an empty lake. The new wire files
+    # carry new names, so a kept checkpoint would take them as new input
+    # and append every record a second time.
+    for d in (os.path.join(work_dir, "lake"), ckpt):
+        shutil.rmtree(d, ignore_errors=True)
     wd.wire_frame(spark, sf_dir).repartition(8).write.mode("overwrite").json(
         wire_dir
     )

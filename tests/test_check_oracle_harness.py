@@ -17,6 +17,7 @@ from check_oracle import (  # noqa: E402
     canon_value,
     compare,
     compare_streaming,
+    sweep,
 )
 
 
@@ -100,6 +101,25 @@ def test_streaming_compare_handles_nulls_floats_and_dupes(spark, con):
         con,
     )
     assert any("rowcount" in p for p in got)
+
+
+def test_sweep_budget_times_out_only_the_slow_query(spark, monkeypatch):
+    """With a budget, a query whose oracle runs past it is a TIMEOUT and
+    the next query still runs clean: the watchdog of the timed-out
+    query must not cancel its successor."""
+    sys.path.insert(0, _REPO)
+    from tests.conftest import SF_SMOKE
+    from weather_bigdata_project_spark import registry
+
+    a, b = "weather_city_stats", "weather_global_stats"
+    # warm both plans first: a cold first job alone can outrun the budget
+    assert sweep(spark, SF_SMOKE, [a, b])["ok"] == 2
+    monkeypatch.setitem(
+        registry.ORACLES, a, "SELECT SUM(hash(i)) FROM range(100000000000) t(i)"
+    )
+    r = sweep(spark, SF_SMOKE, [a, b], budget_s=5)
+    assert r["timeout"] == [a]
+    assert (r["ok"], r["fail"], r["weak"]) == (1, 0, 0), r["failures"]
 
 
 def test_canon_value_distinguishes_float_ulps():

@@ -16,7 +16,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from tests.conftest import SF_SMOKE
-from tools.check_oracle import compare, duck_connect
+from tools.check_oracle import compare, duck_connect, sweep
 from weather_bigdata_project_spark import tables
 from weather_bigdata_project_spark import weather_domain as wd
 from weather_bigdata_project_spark.registry import ORACLES, QUERIES
@@ -51,8 +51,8 @@ def _assert_matches(name: str, df, oracle_dir: str) -> None:
 
 
 def _assert_panels_match(spark, sf_dir: str) -> None:
-    for name in PANELS:
-        _assert_matches(name, QUERIES[name](spark, sf_dir), sf_dir)
+    r = sweep(spark, sf_dir, PANELS)
+    assert r["ok"] == len(PANELS), r["failures"]
 
 
 def _next_rdd_id(spark) -> int:
@@ -340,13 +340,8 @@ def test_rewritten_documents_rebuild_the_shingle_memo(spark, tmp_path):
     names = ["dedup_ngram_jaccard", "dedup_minhash_lsh"]
 
     def assert_dedup_matches() -> None:
-        con = duck_connect(lake)
-        try:
-            for name in names:
-                got = compare(name, QUERIES[name](spark, lake), ORACLES[name], con)
-                assert got == [], (name, got)
-        finally:
-            con.close()
+        r = sweep(spark, lake, names)
+        assert r["ok"] == len(names), r["failures"]
 
     assert_dedup_matches()
     old = textops.doc_gram_arrays_shared(spark, lake)

@@ -10,11 +10,8 @@ from __future__ import annotations
 import duckdb
 import pyarrow.parquet as pq
 
-from tools.check_oracle import compare, duck_connect
+from tools.check_oracle import sweep
 from tools.fixture_fuzz import gen_tables
-from weather_bigdata_project_spark.registry import ORACLES, QUERIES, load
-
-load()
 
 #: one query per family: weather synth, TPC-H join/agg, window, asof,
 #: dedup shingles, ANN, text, curation split, sketch, multimodal kernel
@@ -32,14 +29,9 @@ SLICE = [
 ]
 
 
-def _sweep(spark, d):
-    con = duck_connect(d)
-    bad = []
-    for name in SLICE:
-        problems = compare(name, QUERIES[name](spark, d), ORACLES[name], con)
-        if problems:
-            bad.append((name, problems[:2]))
-    return bad
+def _sweep(spark, d, names=SLICE):
+    r = sweep(spark, d, names)
+    assert r["ok"] == len(names), r["failures"]
 
 
 def test_generator_matches_driver_physical_schemas(tmp_path):
@@ -60,7 +52,7 @@ def test_generator_matches_driver_physical_schemas(tmp_path):
 def test_fresh_seed_slice_is_oracle_green(spark, tmp_path):
     d = str(tmp_path / "s7")
     gen_tables(7, d, scale=0.1)
-    assert _sweep(spark, d) == []
+    _sweep(spark, d)
 
 
 def test_tiny_variant_slice_is_oracle_green(spark, tmp_path):
@@ -70,15 +62,7 @@ def test_tiny_variant_slice_is_oracle_green(spark, tmp_path):
     sample."""
     d = str(tmp_path / "t29")
     gen_tables(29, d, tiny=True)
-    con = duck_connect(d)
-    bad = []
-    for name in SLICE + ["events_survival_km", "events_kmv_setops"]:
-        problems = compare(
-            name, QUERIES[name](spark, d), ORACLES[name], con
-        )
-        if problems:
-            bad.append((name, problems[:2]))
-    assert bad == []
+    _sweep(spark, d, SLICE + ["events_survival_km", "events_kmv_setops"])
 
 
 def test_fuzz_record_json_matches_md_table():
@@ -122,7 +106,7 @@ def test_skewed_variant_slice_is_oracle_green(spark, tmp_path):
     near-constant measures, dup mass, single-token docs."""
     d = str(tmp_path / "sk13")
     gen_tables(13, d, skew=True, scale=0.1)
-    assert _sweep(spark, d) == []
+    _sweep(spark, d)
     # the skew knobs actually engage: dominant source + exact dup mass
     con = duckdb.connect()
     (top_src,) = con.execute(

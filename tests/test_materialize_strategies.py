@@ -1,68 +1,24 @@
-"""The reuse-materialization strategy knob (SCALE.md materialization
-section) must be a pure performance/durability choice: every strategy
-returns identical results on the materialize-heavy dedup chain, and the
-reliable-checkpoint path actually writes to the checkpoint dir."""
+"""The lineage-cut contract of `textops.materialize` (SCALE.md
+materialization section): iterative callers get a frame whose logical
+plan no longer carries whatever produced it."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
-
-from tests.conftest import SF_SMOKE
-from weather_bigdata_project_spark import registry
 from weather_bigdata_project_spark.operators import textops
 
-registry.load()
 
-
-def _run_lsh(spark):
-    textops.clear_shingle_memo()
-    spark.catalog.clearCache()
-    for rdd in list(
-        spark.sparkContext._jsc.getPersistentRDDs().values()
-    ):
-        rdd.unpersist()
-    rows = registry.QUERIES["dedup_minhash_lsh"](spark, SF_SMOKE).collect()
-    return sorted((r["doc1"], r["doc2"], r["jaccard"]) for r in rows)
-
-
-@pytest.mark.parametrize("strategy", ["local", "checkpoint"])
-def test_strategy_matches_default_persist(spark, tmp_path, strategy, monkeypatch):
-    want = _run_lsh(spark)  # default: persist
-    assert len(want) > 0
-    if strategy == "checkpoint":
-        monkeypatch.setenv(
-            "SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ckpt")
-        )
-        # a prior test may have pinned a dir on the shared context;
-        # force re-resolution from the env for this test
-        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    monkeypatch.setattr(textops, "_STRATEGY", strategy)
-    got = _run_lsh(spark)
-    assert got == want
-    if strategy == "checkpoint":
-        # the reliable checkpoint actually landed on the configured dir
-        ckpt = str(tmp_path / "ckpt")
-        assert os.path.isdir(ckpt) and len(os.listdir(ckpt)) > 0
-
-
-def test_cut_lineage_truncates_plan(spark, monkeypatch):
-    """cut_lineage=True must return a LEAF-rooted frame under every
-    strategy (the iterative-loop contract): its logical plan cannot
-    keep growing with whatever produced it."""
+def test_cut_lineage_truncates_plan(spark):
+    """cut_lineage=True must return a LEAF-rooted frame (the
+    iterative-loop contract): its logical plan cannot keep growing with
+    whatever produced it."""
     from pyspark.sql import functions as F
 
     df = spark.range(100).select(
         "id", (F.col("id") * 2).alias("v")
     ).groupBy((F.col("id") % 7).alias("k")).agg(F.sum("v").alias("s"))
-    for strategy in ("persist", "local"):
-        monkeypatch.setattr(textops, "_STRATEGY", strategy)
-        cut = textops.materialize(df, cut_lineage=True)
-        plan = cut._jdf.queryExecution().logical().toString()
-        assert "Aggregate" not in plan, (
-            f"{strategy}: lineage not truncated:\n{plan}"
-        )
-        assert sorted(r["s"] for r in cut.collect()) == sorted(
-            r["s"] for r in df.collect()
-        )
+    cut = textops.materialize(df, cut_lineage=True)
+    plan = cut._jdf.queryExecution().logical().toString()
+    assert "Aggregate" not in plan, f"lineage not truncated:\n{plan}"
+    assert sorted(r["s"] for r in cut.collect()) == sorted(
+        r["s"] for r in df.collect()
+    )

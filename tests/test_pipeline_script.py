@@ -28,6 +28,8 @@ def test_run_pipeline_end_to_end(spark):
         assert out["wire_rows"] == out["lake_rows"] == want.count()
         assert out["alert_rows"] == wd.alerts_frame(spark, SF_SMOKE).count()
         assert out["cities"] == 8
+        # a re-run into the same work dir rebuilds the lake, not doubles it
+        assert run(SF_SMOKE, work, cpus=8) == out
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

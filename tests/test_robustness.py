@@ -523,8 +523,7 @@ def test_unicode_documents_keep_oracle_parity(spark, tmp_path):
     hash split. Oracle parity must hold bit-for-bit."""
     import shutil
 
-    from tools.check_oracle import compare, duck_connect
-    from weather_bigdata_project_spark.registry import ORACLES
+    from tools.check_oracle import sweep
 
     for t in ["region", "nation", "customer", "supplier", "part",
               "orders", "lineitem", "events", "embeddings"]:
@@ -559,9 +558,7 @@ def test_unicode_documents_keep_oracle_parity(spark, tmp_path):
         str(tmp_path / "documents.parquet"),
     )
 
-    con = duck_connect(str(tmp_path))
-    bad = []
-    for name in [
+    names = [
         "multimodal_ppm_decode_stats",
         "multimodal_wav_decode_stats",
         "multimodal_y4m_frame_stats",
@@ -569,10 +566,6 @@ def test_unicode_documents_keep_oracle_parity(spark, tmp_path):
         "text_token_stats",
         "dedup_ngram_jaccard",
         "corpus_split_assign",
-    ]:
-        problems = compare(
-            name, QUERIES[name](spark, str(tmp_path)), ORACLES[name], con
-        )
-        if problems:
-            bad.append((name, problems[:2]))
-    assert bad == []
+    ]
+    r = sweep(spark, str(tmp_path), names)
+    assert r["ok"] == len(names), r["failures"]

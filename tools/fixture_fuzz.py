@@ -9,14 +9,17 @@ single-token documents) and a SPARSE variant (whole categories absent:
 no purchases, no benchmark source, no returns, one lang, sub-shingle
 docs) and a TINY variant (single-digit group sizes, 12-document/
 12-vector corpora — the n=1/empty-sketch hammer) — and re-runs the
-full Spark-vs-DuckDB oracle sweep against each. The comparison is differential (both engines
-read the SAME generated parquet), so any fresh seed is a valid probe:
-what it catches is data-dependent engine divergence (float paths,
-overflow, degenerate ranges, empty groups) that one lucky seed can hide.
+full Spark-vs-DuckDB oracle sweep (`tools/check_oracle.sweep`, one
+OK/FAIL/WEAK line per query) against each. The comparison is
+differential (both engines read the SAME generated parquet), so any
+fresh seed is a valid probe: what it catches is data-dependent engine
+divergence (float paths, overflow, degenerate ranges, empty groups)
+that one lucky seed can hide.
 
 Usage:
     python3 tools/fixture_fuzz.py [--out /tmp/spark_graft_fuzz]
-        [--seeds 7 101] [--no-skew] [--no-sparse] [--write-md] [names...]
+        [--seeds 7 101] [--no-skew] [--no-sparse] [--no-tiny]
+        [--quick] [--write-md] [names...]
 
 Writes per-variant results and, with --write-md, the FUZZ.md summary.
 """
@@ -34,7 +37,7 @@ import numpy as np
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO_ROOT)
 
-from tools.check_oracle import compare, duck_connect  # noqa: E402
+from tools.check_oracle import sweep  # noqa: E402
 
 # --- value domains (profiled from /root/testdata/sf0.01, FIXTURES.md §B) ---
 
@@ -82,7 +85,7 @@ _DEFECTS_MD = """
   variants and the full sf0.1 sweep because a lag delta in
   (-0.005, 0) needs near-equal ADJACENT values, which 10k-100k-event
   fixtures never produced. The budgeted sf1-shape sweep
-  (`tools/oracle_sweep_budgeted.py`, 1M events) surfaced it on its
+  (`tools/check_oracle.py --budget`, 1M events) surfaced it on its
   first run: DuckDB ROUND keeps the sign bit ('-0.0') where Spark's
   BigDecimal round does not, plus the latent .xx5 divergence. Both
   sides now share one `exprs.rnd` spelling (`_LAG_DELTA`);
@@ -459,40 +462,6 @@ def gen_tables(
         ),
         "label": pa2.array(label, pa2.int32()),
     }))
-
-
-def sweep(spark, sf_dir: str, names: list[str]) -> dict:
-    """Run the check_oracle comparison for `names` against `sf_dir`."""
-    import __spark_entry__ as entrymod
-
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    con = duck_connect(sf_dir)
-    res = {"ok": 0, "fail": 0, "weak": 0, "failures": []}
-    for name in names:
-        t0 = time.time()
-        try:
-            sdf = qs[name](spark, sf_dir)
-            if name not in oracles:
-                sdf.count()
-                res["weak"] += 1
-                continue
-            problems = compare(name, sdf, oracles[name], con)
-        except Exception as e:  # noqa: BLE001
-            problems = [f"EXCEPTION: {type(e).__name__}: {e}"]
-        if problems:
-            res["fail"] += 1
-            res["failures"].append({"name": name, "problems": problems})
-            print(f"  FAIL {name}: {problems[:2]}", flush=True)
-        else:
-            res["ok"] += 1
-        if (res["ok"] + res["fail"]) % 50 == 0:
-            print(
-                f"  ... {res['ok'] + res['fail'] + res['weak']}"
-                f"/{len(names)} ({time.time() - t0:.1f}s last)",
-                flush=True,
-            )
-    return res
 
 
 def main() -> None:

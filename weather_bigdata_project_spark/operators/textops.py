@@ -234,23 +234,6 @@ def sampled_table_duck(sql: str, table: str, pred: str) -> str:
     )
 
 
-#: Reuse-materialization strategy, settable per deployment via
-#: SPARK_GRAFT_MATERIALIZE:
-#:   persist (default) — persist(MEMORY_AND_DISK). Lineage stays
-#:       RECOMPUTABLE: on a 1000-executor preemptible cluster a lost
-#:       executor just recomputes the lost blocks from the parquet
-#:       lineage, where a local checkpoint would abort the query
-#:       (its lineage is truncated, blocks unrecoverable). Same reuse:
-#:       the frame computes once and serves every downstream reference.
-#:   checkpoint — reliable checkpoint to SPARK_GRAFT_CHECKPOINT_DIR
-#:       (point it at the lake / HDFS in production): survives executor
-#:       loss AND cuts lineage — the right mode for very long dedup
-#:       chains where recompute-from-scratch is itself too expensive.
-#:   local — localCheckpoint (executor-storage, lineage cut): fastest
-#:       on a single box; opt-in for single-node benching only.
-_STRATEGY = __import__("os").environ.get("SPARK_GRAFT_MATERIALIZE", "persist")
-
-
 def _reliable_checkpoint(df: DataFrame) -> DataFrame:
     import os
     import tempfile
@@ -268,26 +251,22 @@ def materialize(df: DataFrame, cut_lineage: bool = False) -> DataFrame:
     """Materialize a frame that downstream logic reuses several times
     (self-joins, dict + sizes + candidate verification). Without this
     Catalyst re-derives the whole upstream chain per reference — 8 scans
-    of the corpus in the MinHash plan. Strategy is pluggable (see
-    _STRATEGY above); the default keeps lineage recomputable so executor
-    loss never kills a query.
+    of the corpus in the MinHash plan. persist(MEMORY_AND_DISK) keeps
+    lineage recomputable: a lost executor's blocks are recomputed from
+    the parquet lineage, so executor loss never kills a query.
 
     `cut_lineage=True` is for ITERATIVE callers (label propagation,
     pagerank, BPE merge folds) whose loop state frame is reassigned each
     round: there the logical plan itself must be truncated or analysis
-    cost grows with the iteration count. Under the default strategy this
-    uses the reliable checkpoint when a checkpoint dir is configured
-    (cluster mode) and localCheckpoint otherwise (single box). The
-    single-box localCheckpoint is EAGER: a lazy one defers every
-    round's materialization to the final action, where the per-round
-    sub-DAGs re-derive to the source once each (the round-7 scan audit
-    measured one parquet scan per BPE merge round); eager per-round
-    checkpoints are the MLlib iterative pattern — round k reads round
-    k-1's blocks, the source is scanned once."""
-    if _STRATEGY == "local":
-        return df.localCheckpoint(eager=False)
-    if _STRATEGY == "checkpoint":
-        return _reliable_checkpoint(df)
+    cost grows with the iteration count. This uses the reliable
+    checkpoint when a checkpoint dir is configured (on the context or by
+    SPARK_GRAFT_CHECKPOINT_DIR, cluster mode) and localCheckpoint
+    otherwise (single box). The single-box localCheckpoint is EAGER: a
+    lazy one defers every round's materialization to the final action,
+    where the per-round sub-DAGs re-derive to the source once each (the
+    round-7 scan audit measured one parquet scan per BPE merge round);
+    eager per-round checkpoints are the MLlib iterative pattern — round
+    k reads round k-1's blocks, the source is scanned once."""
     if cut_lineage:
         sc = df.sparkSession.sparkContext
         if sc.getCheckpointDir() is not None or __import__("os").environ.get(
@@ -347,11 +326,11 @@ def doc_shingle_ids_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def clear_shingle_memo() -> None:
-    """Drop memoized shingle checkpoints. MUST be called by any harness
+    """Drop the memoized shingle frames. MUST be called by any harness
     that force-unpersists the session's RDDs (bench.py does, for
-    per-query isolation): an unpersisted localCheckpoint block cannot
-    be recomputed, so a stale memo entry would throw
-    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on next use."""
+    per-query isolation): a stale memo entry would otherwise serve an
+    unpersisted frame, which re-derives the md5 shingling at every
+    reference instead of once."""
     _GRAM_MEMO.clear()
 
 

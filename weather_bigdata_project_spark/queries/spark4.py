@@ -215,14 +215,13 @@ def sql_udf_dew_point(spark, sf_dir):
         "CREATE OR REPLACE TEMPORARY FUNCTION dew_point_udf(t INT, h INT) "
         f"RETURNS INT RETURN {_DP}"
     )
-    casted = wd.cast_wire(wd.wire_frame(spark, sf_dir))
-    casted.createOrReplaceTempView("udf_casted")
+    wd.enriched_frame(spark, sf_dir).createOrReplaceTempView("udf_enriched")
     return spark.sql(
         "SELECT city_name, COUNT(dp) AS n, "
         "MIN(dp) AS min_dp, MAX(dp) AS max_dp, "
         + rnd("CAST(SUM(dp) AS DOUBLE) / COUNT(dp)", 2)
         + " AS avg_dp FROM (SELECT city_name, "
-        "dew_point_udf(temperature, humidity) AS dp FROM udf_casted) "
+        "dew_point_udf(temperature, humidity) AS dp FROM udf_enriched) "
         "GROUP BY city_name"
     )
 
@@ -319,8 +318,7 @@ def weather_collated_city_stats(spark, sf_dir):
     group per city; the output key is lowered because the collated
     group's representative casing is partition-order-dependent — the
     group COUNTS are what the collation guarantees."""
-    casted = wd.cast_wire(wd.wire_frame(spark, sf_dir))
-    mixed = casted.select(
+    mixed = wd.enriched_frame(spark, sf_dir).select(
         F.expr(
             "CASE WHEN event_id % 2 = 0 THEN UPPER(city_name) "
             "ELSE city_name END COLLATE UTF8_LCASE"

@@ -6,9 +6,10 @@ reference spread across Airflow + NiFi + docker exec
               NiFi InvokeHTTP -> EvaluateJsonPath -> AttributesToJSON ->
               PublishKafka; in production, point the engine at Kafka via
               sources.readers.kafka_stream_source instead)
-  2. STREAM — Structured Streaming over the wire files: cast + enrich
-              (the SAME functions the batch path runs), append to a
-              checkpointed parquet lake + a JSON alerts feed
+  2. STREAM — Structured Streaming over the wire files
+              (jobs.start_ingest): cast + enrich (the SAME functions the
+              batch path runs), append to a checkpointed parquet lake
+              (WORK/out/lake) + a JSON alerts feed (WORK/out/alerts)
   3. QUERY  — run the dashboard queries against the fresh lake
 
 Usage:
@@ -35,41 +36,28 @@ def run(sf_dir: str, work_dir: str, cpus: int | str | None = None) -> dict[str, 
 
     spark = get_spark("run_pipeline", cpus=cpus)
     wire_dir = os.path.join(work_dir, "wire")
-    lake = os.path.join(work_dir, "lake", "weather_enriched")
-    alerts = os.path.join(work_dir, "lake", "weather_alerts")
-    ckpt = os.path.join(work_dir, "checkpoints")
+    out_dir = os.path.join(work_dir, "out")
 
     # 1. FEED: a re-run starts from an empty lake. The new wire files
     # carry new names, so a kept checkpoint would take them as new input
     # and append every record a second time.
-    for d in (os.path.join(work_dir, "lake"), ckpt):
-        shutil.rmtree(d, ignore_errors=True)
+    shutil.rmtree(out_dir, ignore_errors=True)
     wd.wire_frame(spark, sf_dir).repartition(8).write.mode("overwrite").json(
         wire_dir
     )
 
     # 2. STREAM (two concurrent checkpointed queries, drained availableNow)
-    stream = jobs.wire_file_stream(spark, wire_dir)
-    enriched = jobs.enriched_stream(stream).select(*wd.ENRICHED_COLUMNS)
-    q1 = jobs.start_lake_sink(
-        enriched, lake, os.path.join(ckpt, "enriched"), fmt="parquet"
-    )
-    q2 = jobs.start_lake_sink(
-        jobs.alerts_stream(jobs.enriched_stream(jobs.wire_file_stream(spark, wire_dir))),
-        alerts,
-        os.path.join(ckpt, "alerts"),
-        fmt="json",
-    )
-    stuck = [q for q in (q1, q2) if not q.awaitTermination(300)]
+    queries = jobs.start_ingest(spark, wire_dir, out_dir)
+    stuck = [q for q in queries if not q.awaitTermination(300)]
     if stuck:
-        for q in (q1, q2):
+        for q in queries:
             q.stop()
         raise TimeoutError(
             f"streams {[q.name or q.id for q in stuck]} did not drain in 300 s"
         )
 
     # 3. QUERY the lake
-    lake_df = spark.read.parquet(lake)
+    lake_df = spark.read.parquet(os.path.join(out_dir, "lake"))
     stats = (
         lake_df.groupBy("city_name")
         .agg(F.count(F.lit(1)).alias("n"), F.avg("temperature").alias("avg_t"))
@@ -77,10 +65,12 @@ def run(sf_dir: str, work_dir: str, cpus: int | str | None = None) -> dict[str, 
     )
     out = {
         "wire_rows": int(
-            spark.read.json(wire_dir).count()
+            spark.read.schema(jobs.WIRE_SCHEMA).json(wire_dir).count()
         ),
         "lake_rows": int(lake_df.count()),
-        "alert_rows": int(spark.read.json(alerts).count()),
+        "alert_rows": int(
+            spark.read.json(os.path.join(out_dir, "alerts")).count()
+        ),
         "cities": len(stats),
     }
     print(out)

@@ -74,3 +74,20 @@ def test_unflagged_entries_carry_no_kind():
     for e in _entries():
         if e.get("ratio") is None or e["ratio"] < FLAG:
             assert "kind" not in e, e["query"]
+
+
+def test_first_query_is_not_charged_for_cold_table_loads(spark, monkeypatch):
+    """A cold tables.load reads the parquet footer through the 'file'
+    scheme; measure() pays it before the first query, so two queries
+    over the same table read the same bytes in either order."""
+    from tests.conftest import SF_CORRECT
+    from weather_bigdata_project_spark import tables
+
+    names = ["sql_udf_dew_point", "weather_collated_city_stats"]
+    fs_bytes = []
+    for order in (names, names[::-1]):
+        monkeypatch.setattr(tables, "_CACHE", {})  # a fresh process's memo
+        entries = scan_audit.measure(spark, SF_CORRECT, order)
+        fs_bytes.append({e["query"]: e["fs_bytes"] for e in entries})
+    assert fs_bytes[0] == fs_bytes[1]
+    assert all(n > 0 for n in fs_bytes[0].values())

@@ -26,24 +26,11 @@ def wire_dir(spark):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_stream_equals_batch(spark, wire_dir):
-    out = tempfile.mkdtemp(prefix="stream_out_")
-    ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
-    try:
-        stream = jobs.wire_file_stream(spark, wire_dir)
-        enriched = jobs.enriched_stream(stream).select(*wd.ENRICHED_COLUMNS)
-        q = jobs.start_lake_sink(enriched, out, ckpt, fmt="parquet")
-        q.awaitTermination(120)
-
-        got = spark.read.parquet(out)
-        want = wd.enriched_frame(spark, SF_SMOKE)
-        assert got.count() == want.count() == 1000
-        # full-row equivalence, order-insensitive
-        assert got.select(*wd.ENRICHED_COLUMNS).subtract(want).count() == 0
-        assert want.subtract(got.select(*wd.ENRICHED_COLUMNS)).count() == 0
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+def _same_rows(got, want) -> bool:
+    """`got` and `want` hold the same rows as multisets."""
+    return (
+        got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    )
 
 
 def test_streaming_windowed_stats(spark, wire_dir):
@@ -188,47 +175,43 @@ def test_stateful_city_extremes(spark, wire_dir):
 
 
 def test_incremental_resume_exactly_once(spark):
-    """Checkpointed file-sink across three runs: drain half the lake,
+    """Checkpointed file sinks across three runs: drain half the lake,
     drain the rest, then re-run with nothing new — every wire row lands
-    exactly once, resume picks up only unprocessed files."""
+    in the lake, and every alert in the alerts feed, exactly once;
+    resume picks up only unprocessed files."""
     wire3 = tempfile.mkdtemp(prefix="wirelake_inc_")
     out = tempfile.mkdtemp(prefix="inc_out_")
-    ckpt = tempfile.mkdtemp(prefix="inc_ckpt_")
     try:
         w = wd.wire_frame(spark, SF_SMOKE)
         first = w.filter(F.col("event_id") % 2 == 0)
         second = w.filter(F.col("event_id") % 2 == 1)
         first.repartition(4).write.mode("overwrite").json(wire3)
+        alerts = wd.alerts_frame(spark, SF_SMOKE)
 
-        def drain():
-            stream = jobs.wire_file_stream(spark, wire3)
-            enriched = jobs.enriched_stream(stream).select(
-                *wd.ENRICHED_COLUMNS
-            )
-            q = jobs.start_lake_sink(enriched, out, ckpt, fmt="parquet")
-            q.awaitTermination(120)
+        def drain(n_lake, n_alerts):
+            for q in jobs.start_ingest(spark, wire3, out):
+                q.awaitTermination(120)
+            for got, n in (
+                (spark.read.parquet(f"{out}/lake"), n_lake),
+                (spark.read.json(f"{out}/alerts"), n_alerts),
+            ):
+                assert got.count() == n
+                assert got.select("event_id").distinct().count() == n
 
-        drain()
-        n1 = spark.read.parquet(out).count()
-        assert n1 == first.count()
-
+        drain(first.count(), alerts.filter(F.col("event_id") % 2 == 0).count())
         second.repartition(4).write.mode("append").json(wire3)
-        drain()
-        lake = spark.read.parquet(out)
-        assert lake.count() == w.count()
-        assert lake.select("event_id").distinct().count() == w.count()
-
-        drain()  # nothing new: exactly-once means nothing added
-        assert spark.read.parquet(out).count() == w.count()
+        drain(w.count(), alerts.count())
+        drain(w.count(), alerts.count())  # nothing new: nothing added
     finally:
-        for d in (wire3, out, ckpt):
+        for d in (wire3, out):
             shutil.rmtree(d, ignore_errors=True)
 
 
 def test_foreach_batch_dedup_upsert(spark):
     """Source-side duplicates (the same wire rows written twice) must
     collapse to unique event_ids in the lake; a restart with the same
-    checkpoint must add nothing."""
+    checkpoint must add nothing. deduped_stream keeps the same one row
+    per event_id, equal to the batch enriched view."""
     wire2 = tempfile.mkdtemp(prefix="wirelake_dup_")
     out = tempfile.mkdtemp(prefix="fb_out_")
     ckpt = tempfile.mkdtemp(prefix="fb_ckpt_")
@@ -240,9 +223,7 @@ def test_foreach_batch_dedup_upsert(spark):
 
         def run():
             stream = jobs.wire_file_stream(spark, wire2)
-            enriched = jobs.enriched_stream(stream).select(
-                *wd.ENRICHED_COLUMNS
-            )
+            enriched = jobs.enriched_stream(stream)
             q = jobs.start_foreach_batch_dedup_sink(enriched, out, ckpt)
             q.awaitTermination(120)
 
@@ -254,27 +235,24 @@ def test_foreach_batch_dedup_upsert(spark):
 
         run()  # restart: checkpoint says everything is processed
         assert spark.read.parquet(out).count() == n
+
+        # T6: the same duplicates through dropDuplicatesWithinWatermark
+        q = (
+            jobs.deduped_stream(
+                jobs.enriched_stream(jobs.wire_file_stream(spark, wire2))
+            )
+            .writeStream.format("memory")
+            .queryName("deduped")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        got = spark.table("deduped")
+        assert got.count() == got.select("event_id").distinct().count() == n
+        assert _same_rows(got, wd.enriched_frame(spark, SF_SMOKE))
     finally:
         for d in (wire2, out, ckpt):
             shutil.rmtree(d, ignore_errors=True)
-
-
-def test_alerts_stream_filter(spark, wire_dir):
-    stream = jobs.wire_file_stream(spark, wire_dir)
-    alerts = jobs.alerts_stream(jobs.enriched_stream(stream))
-    assert alerts.isStreaming
-    out = tempfile.mkdtemp(prefix="stream_alerts_")
-    ckpt = tempfile.mkdtemp(prefix="stream_alerts_ckpt_")
-    try:
-        q = jobs.start_lake_sink(alerts, out, ckpt, fmt="json")
-        q.awaitTermination(120)
-        got = spark.read.json(out)
-        want = wd.alerts_frame(spark, SF_SMOKE).count()
-        assert got.count() == want
-        assert got.filter(F.col("alert_type") == "NORMAL").count() == 0
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def test_console_sink_drains_and_await_any_sees_it_stop(spark, wire_dir):
@@ -295,53 +273,46 @@ def test_console_sink_drains_and_await_any_sees_it_stop(spark, wire_dir):
 
 
 def _drain_backlog(spark, wire: str, root: str):
-    """availableNow-drain `wire` into a parquet lake and a JSON alerts feed
-    under `root` (two queries, as scripts/run_pipeline.py wires them).
-    Returns the input-row counts of each query's data micro-batches and
-    whether both outputs equal the batch twin as multisets."""
-    enriched = jobs.enriched_stream(
-        jobs.wire_file_stream(spark, wire)
-    ).select(*wd.ENRICHED_COLUMNS)
-    alerts = jobs.alerts_stream(
-        jobs.enriched_stream(jobs.wire_file_stream(spark, wire))
-    )
-    qs = [
-        jobs.start_lake_sink(enriched, f"{root}/lake", f"{root}/ck/lake"),
-        jobs.start_lake_sink(
-            alerts, f"{root}/alerts", f"{root}/ck/alerts", fmt="json"
-        ),
-    ]
+    """Drain `wire` through jobs.start_ingest under `root`. Returns the
+    input-row counts of each query's data micro-batches, and the lake
+    and the alerts feed each paired with its batch twin over the same
+    wire files."""
+    qs = jobs.start_ingest(spark, wire, root)
     for q in qs:
         q.awaitTermination(120)
     batches = [
         [p.numInputRows for p in q.recentProgress if p.numInputRows > 0]
         for q in qs
     ]
-    schema = jobs.wire_file_stream(spark, wire).schema
-    twin = wd.enrich(wd.cast_wire(spark.read.schema(schema).json(wire)))
+    wire_rows = spark.read.schema(jobs.WIRE_SCHEMA).json(wire)
+    twin = wd.enrich(wd.cast_wire(wire_rows))
     want_alerts = jobs.alerts_stream(twin)
-    pairs = [
-        (spark.read.parquet(f"{root}/lake"), twin.select(*wd.ENRICHED_COLUMNS)),
+    return batches, [
+        (spark.read.parquet(f"{root}/lake"), twin),
         (spark.read.schema(want_alerts.schema).json(f"{root}/alerts"),
          want_alerts),
     ]
-    equal = all(
-        got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-        for got, want in pairs
-    )
-    return batches, equal
 
 
 def test_backlog_drains_in_one_micro_batch(spark, tmp_path):
     """A backlog that fits one round of input splits (trigger_bytes) is
     admitted whole: each query commits exactly one micro-batch with
-    input rows, and lake and alerts equal the batch twin."""
+    input rows, and lake and alerts equal the batch twin, which is the
+    batch enriched view and its alerts."""
     wire = str(tmp_path / "wire")
     wd.wire_frame(spark, SF_SMOKE).repartition(12).write.json(wire)
     assert len([f for f in os.listdir(wire) if f.endswith(".json")]) == 12
-    batches, equal = _drain_backlog(spark, wire, str(tmp_path))
+    assert (
+        jobs.enriched_stream(jobs.wire_file_stream(spark, wire)).columns
+        == wd.ENRICHED_COLUMNS
+        == wd.enrich(wd.cast_wire(wd.wire_frame(spark, SF_SMOKE))).columns
+    )
+    batches, pairs = _drain_backlog(spark, wire, str(tmp_path))
     assert batches == [[1000], [1000]]
-    assert equal
+    assert all(_same_rows(got, want) for got, want in pairs)
+    (_, twin), (_, twin_alerts) = pairs
+    assert _same_rows(twin, wd.enriched_frame(spark, SF_SMOKE))
+    assert _same_rows(twin_alerts, wd.alerts_frame(spark, SF_SMOKE))
 
 
 def test_trigger_bytes_bounds_each_micro_batch(spark, tmp_path):
@@ -364,12 +335,12 @@ def test_trigger_bytes_bounds_each_micro_batch(spark, tmp_path):
         assert jobs.trigger_bytes(spark) == slots * 2**26
         # a trigger fits about three files
         spark.conf.set(split, str(3 * max(sizes) // slots))
-        batches, equal = _drain_backlog(spark, wire, str(tmp_path))
+        batches, pairs = _drain_backlog(spark, wire, str(tmp_path))
     finally:
         spark.conf.set(split, old)
     for rows in batches:
         assert len(rows) >= 4 and sum(rows) == 1000
-    assert equal
+    assert all(_same_rows(got, want) for got, want in pairs)
 
 
 # --- stream-stream + stream-static joins ----------------------------------
@@ -1600,7 +1571,6 @@ def test_step_spike_qc_stream_equals_batch_twin(spark, tmp_path):
     import shutil
 
     from pyspark.sql import Window
-    from pyspark.sql import types as Ty
 
     src = str(tmp_path / "wire_ranged")
     w = wd.wire_frame(spark, SF_SMOKE)
@@ -1615,12 +1585,8 @@ def test_step_spike_qc_stream_equals_batch_twin(spark, tmp_path):
     )
     for i, f in enumerate(sorted(glob.glob(os.path.join(src, "part-*")))):
         os.utime(f, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-    schema = Ty.StructType(
-        [Ty.StructField(n, Ty.StringType()) for n in wd.wire_wide_sql("é")]
-        + [Ty.StructField("event_id", Ty.LongType())]
-    )
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(jobs.WIRE_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .json(src)
     )

@@ -106,6 +106,98 @@ def _disk_bytes(path: str) -> int:
     return total
 
 
+def _meter(spark, sf: str):
+    """``run(name) -> (new stages, fs bytes read, tables loaded)`` for
+    one registry query on a cold cache. Every table is loaded once
+    first: a cold ``tables.load`` reads the parquet footer through the
+    'file' scheme, which would be charged to the first query loading it."""
+    from tools.shuffle_ledger import _stage_map
+    from weather_bigdata_project_spark import registry, tables
+    from weather_bigdata_project_spark.operators import textops
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    jvm, gw = sc._jvm, sc._gateway
+    # physical 'file'-scheme reads (parquet scans, disk checkpoints —
+    # not cache blocks, not shuffle): the cache-vs-parquet discriminator
+    fs_stats = jvm.org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics().get("file")
+
+    orig_load = tables.load
+    for t in TABLES:
+        orig_load(spark, sf, t)
+    loaded: set[str] = set()
+
+    def spy_load(spark_, sf_dir, name, *a, **kw):
+        loaded.add(name)
+        return orig_load(spark_, sf_dir, name, *a, **kw)
+
+    def run(name):
+        spark.catalog.clearCache()
+        for rdd in list(sc._jsc.getPersistentRDDs().values()):
+            rdd.unpersist()
+        textops.clear_shingle_memo()
+        loaded.clear()
+        before = set(_stage_map(store, jvm, gw))
+        fs_before = fs_stats.getLong("bytesRead")
+        tables.load = spy_load
+        try:
+            registry.QUERIES[name](spark, sf).write.format(
+                "noop"
+            ).mode("overwrite").save()
+        finally:
+            tables.load = orig_load
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        fs_delta = fs_stats.getLong("bytesRead") - fs_before
+        return {
+            k: v
+            for k, v in _stage_map(store, jvm, gw).items()
+            if k not in before
+        }, fs_delta, sorted(loaded)
+
+    return run
+
+
+def measure(spark, sf: str, names: list[str], flag: float = 1.9) -> list[dict]:
+    """One audit entry per query of `names`, measured in that order over
+    the fixture `sf`; a query that raises gets an ``err`` entry."""
+    import duckdb
+
+    with duckdb.connect() as con:
+        rows = {
+            t: con.execute(
+                f"SELECT COUNT(*) FROM read_parquet('{sf}/{t}.parquet')"
+            ).fetchone()[0]
+            for t in TABLES
+        }
+    disk = {
+        t: _disk_bytes(os.path.join(sf, f"{t}.parquet")) for t in TABLES
+    }
+    out = []
+    run = _meter(spark, sf)
+    for i, n in enumerate(names):
+        try:
+            new, fs_delta, loaded = run(n)
+            ir = sum(v["ir"] for v in new.values())
+            exp = sum(rows[t] for t in loaded)
+            ratio = round(ir / exp, 2) if exp else None
+            pq = sum(disk[t] for t in loaded)
+            entry = {
+                "query": n, "input_records": ir, "expected": exp,
+                "ratio": ratio, "tables": loaded,
+                "fs_bytes": fs_delta, "parquet_bytes": pq,
+                "fs_ratio": round(fs_delta / pq, 2) if pq else None,
+            }
+            kind = adjudicate(entry, flag)
+            if kind:
+                entry["kind"] = kind
+            out.append(entry)
+        except Exception as e:  # noqa: BLE001
+            out.append({"query": n, "err": f"{type(e).__name__}: {e}"})
+        if (i + 1) % 50 == 0:
+            print(f"...{i + 1}/{len(names)}", file=sys.stderr, flush=True)
+    return out
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -122,64 +214,14 @@ def main() -> None:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    import duckdb
-
-    from tools.shuffle_ledger import _stage_map
-    from weather_bigdata_project_spark import registry, tables
-    from weather_bigdata_project_spark.operators import textops
+    from weather_bigdata_project_spark import registry
     from weather_bigdata_project_spark.session import get_spark
-
-    con = duckdb.connect()
-    rows = {
-        t: con.execute(
-            f"SELECT COUNT(*) FROM read_parquet('{args.sf}/{t}.parquet')"
-        ).fetchone()[0]
-        for t in TABLES
-    }
-    disk = {
-        t: _disk_bytes(os.path.join(args.sf, f"{t}.parquet"))
-        for t in TABLES
-    }
 
     registry.load()
     spark = get_spark("scan-audit", cpus=16)
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    jvm, gw = sc._jvm, sc._gateway
-    # physical 'file'-scheme reads (parquet scans, disk checkpoints —
-    # not cache blocks, not shuffle): the cache-vs-parquet discriminator
-    fs_stats = jvm.org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics().get("file")
-
-    loaded: set[str] = set()
-    orig_load = tables.load
-
-    def spy_load(spark_, sf_dir, name, *a, **kw):
-        loaded.add(name)
-        return orig_load(spark_, sf_dir, name, *a, **kw)
-
-    tables.load = spy_load
-
-    def run(name):
-        spark.catalog.clearCache()
-        for rdd in list(sc._jsc.getPersistentRDDs().values()):
-            rdd.unpersist()
-        textops.clear_shingle_memo()
-        loaded.clear()
-        before = set(_stage_map(store, jvm, gw))
-        fs_before = fs_stats.getLong("bytesRead")
-        registry.QUERIES[name](spark, args.sf).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        fs_delta = fs_stats.getLong("bytesRead") - fs_before
-        return {
-            k: v
-            for k, v in _stage_map(store, jvm, gw).items()
-            if k not in before
-        }, fs_delta
 
     if args.stages:
-        new, fs_delta = run(args.stages)
+        new, fs_delta, _ = _meter(spark, args.sf)(args.stages)
         for (sid, _a), v in sorted(new.items()):
             if v["ir"] > 0:
                 print(f"stage {sid}: ir={v['ir']:,} ib={v['ib']:,}")
@@ -188,28 +230,7 @@ def main() -> None:
         return
 
     names = args.names or sorted(registry.QUERIES)
-    out = []
-    for i, n in enumerate(names):
-        try:
-            new, fs_delta = run(n)
-            ir = sum(v["ir"] for v in new.values())
-            exp = sum(rows[t] for t in loaded)
-            ratio = round(ir / exp, 2) if exp else None
-            pq = sum(disk[t] for t in loaded)
-            entry = {
-                "query": n, "input_records": ir, "expected": exp,
-                "ratio": ratio, "tables": sorted(loaded),
-                "fs_bytes": fs_delta, "parquet_bytes": pq,
-                "fs_ratio": round(fs_delta / pq, 2) if pq else None,
-            }
-            kind = adjudicate(entry, args.flag)
-            if kind:
-                entry["kind"] = kind
-            out.append(entry)
-        except Exception as e:  # noqa: BLE001
-            out.append({"query": n, "err": f"{type(e).__name__}: {e}"})
-        if (i + 1) % 50 == 0:
-            print(f"...{i + 1}/{len(names)}", file=sys.stderr, flush=True)
+    out = measure(spark, args.sf, names, args.flag)
 
     if args.names and os.path.exists(args.out):
         with open(args.out) as f:

@@ -37,29 +37,12 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StringType, StructField, StructType
 
+from .. import weather_domain as wd
+
 #: wire field order, ref:spark-apps/weather_streaming.py:28-43
-WIRE_FIELDS = [
-    "date", "weather_description", "latitude", "pression", "humidité",
-    "feels_like", "city_name", "local_time", "min_temp", "wind_speed",
-    "température", "max_temp", "timestamp", "longitude",
-]
+WIRE_FIELDS = list(wd.wire_wide_sql("é"))
 
 _EPOCH0 = 1_700_000_000
-_CITIES = [
-    "Casablanca", "Rabat", "Marrakech", "Fes",
-    "Tangier", "Agadir", "Oujda", "Essaouira",
-]
-_DESCRIPTIONS = [
-    "clear sky", "few clouds", "scattered clouds", "overcast clouds",
-    "light rain", "moderate rain", "thunderstorm", "light snow",
-    "fog", "mist",
-]
-
-
-def wire_schema() -> StructType:
-    return StructType(
-        [StructField(f, StringType(), True) for f in WIRE_FIELDS]
-    )
 
 
 def _fmt(epoch_s: int) -> str:
@@ -86,12 +69,12 @@ def _record(event_id: int) -> tuple:
     temp = "N/A" if event_id % 97 == 0 else str(t_raw)
     return (
         _fmt(epoch_s),
-        _DESCRIPTIONS[event_id % 10],
+        wd.DESCRIPTIONS[event_id % 10],
         str(lat),
         str(press),
         str(hum),
         str(feels),
-        _CITIES[user_id % 8],
+        wd.CITIES[user_id % 8],
         _fmt(epoch_s + 3600),
         str(min_t),
         str(wind),
@@ -154,7 +137,9 @@ class WeatherApiDataSource(DataSource):
         return "weather_api"
 
     def schema(self):
-        return wire_schema()
+        return StructType(
+            [StructField(f, StringType(), True) for f in WIRE_FIELDS]
+        )
 
     def reader(self, schema):
         return _BatchReader(self.options)

@@ -18,9 +18,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as Ty
 
 from .. import weather_domain as wd
 from ..session import tune
+
+#: the Kafka wire schema (ref:spark-apps/weather_streaming.py:28-43) in
+#: ``wd.wire_frame``'s column order, record key first, so the enriched
+#: stream has ``wd.ENRICHED_COLUMNS`` order, as the batch twin has
+WIRE_SCHEMA = Ty.StructType(
+    [Ty.StructField("event_id", Ty.LongType())]
+    + [Ty.StructField(n, Ty.StringType()) for n in wd.wire_wide_sql("é")]
+)
 
 
 def trigger_bytes(spark: SparkSession) -> int:
@@ -44,14 +53,8 @@ def wire_file_stream(spark: SparkSession, wire_dir: str) -> DataFrame:
     took every pending record, and a backlog that fits one round of
     splits still does here."""
     tune(spark)
-    from pyspark.sql import types as Ty
-
-    schema = Ty.StructType(
-        [Ty.StructField(n, Ty.StringType()) for n in wd.wire_wide_sql("é")]
-        + [Ty.StructField("event_id", Ty.LongType())]
-    )
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(WIRE_SCHEMA)
         .option("maxBytesPerTrigger", trigger_bytes(spark))
         .json(wire_dir)
     )
@@ -100,6 +103,22 @@ def start_lake_sink(df: DataFrame, path: str, checkpoint: str, fmt: str = "parqu
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
+    )
+
+
+def start_ingest(spark: SparkSession, wire_dir: str, out: str):
+    """The hot path (ref:spark-apps/weather_streaming.py:170-201): one
+    enriched stream over the wire files under `wire_dir`, drained
+    availableNow into the parquet lake ``{out}/lake`` and the JSON alerts
+    feed ``{out}/alerts``, checkpointed under ``{out}/ckpt/lake`` and
+    ``{out}/ckpt/alerts``. Returns ``(lake_query, alerts_query)``."""
+    enriched = enriched_stream(wire_file_stream(spark, wire_dir))
+    return (
+        start_lake_sink(enriched, f"{out}/lake", f"{out}/ckpt/lake"),
+        start_lake_sink(
+            alerts_stream(enriched), f"{out}/alerts", f"{out}/ckpt/alerts",
+            fmt="json",
+        ),
     )
 
 

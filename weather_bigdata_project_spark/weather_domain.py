@@ -360,9 +360,7 @@ def _snapshot(spark: SparkSession, sf_dir: str) -> _Snapshot:
                 snap.pin.unpersist()
             tables.live_only(_ENRICHED, app_id)
             frame = enrich(cast_wire(wire_frame(spark, sf_dir)))
-            snap = _ENRICHED[(app_id, sf_dir)] = _Snapshot(
-                events, frame.select(*ENRICHED_COLUMNS)
-            )
+            snap = _ENRICHED[(app_id, sf_dir)] = _Snapshot(events, frame)
             _STATS["snapshots_built"] += 1
         return snap
 

@@ -56,7 +56,11 @@ def run(sf_dir: str, work_dir: str, cpus: int | str | None = None) -> dict[str, 
             f"streams {[q.name or q.id for q in stuck]} did not drain in 300 s"
         )
 
-    # 3. QUERY the lake
+    # 3. QUERY the lake; the two JSON feeds are read with the schemas
+    # they were written with, so neither count runs a schema-inference job
+    alerts_schema = jobs.alerts_stream(
+        jobs.enriched_stream(jobs.wire_file_stream(spark, wire_dir))
+    ).schema
     lake_df = spark.read.parquet(os.path.join(out_dir, "lake"))
     stats = (
         lake_df.groupBy("city_name")
@@ -69,7 +73,9 @@ def run(sf_dir: str, work_dir: str, cpus: int | str | None = None) -> dict[str, 
         ),
         "lake_rows": int(lake_df.count()),
         "alert_rows": int(
-            spark.read.json(os.path.join(out_dir, "alerts")).count()
+            spark.read.schema(alerts_schema)
+            .json(os.path.join(out_dir, "alerts"))
+            .count()
         ),
         "cities": len(stats),
     }

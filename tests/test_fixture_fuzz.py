@@ -119,3 +119,18 @@ def test_skewed_variant_slice_is_oracle_green(spark, tmp_path):
         "GROUP BY text HAVING COUNT(*) > 1)"
     ).fetchone()
     assert dups > 0
+
+
+def test_fuzz_md_is_generated_from_the_record():
+    """FUZZ.md is exactly what a full run writes from FUZZ_results.json,
+    so neither can be edited without the other."""
+    import json
+    import os
+
+    from tools.fixture_fuzz import fuzz_md
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "FUZZ_results.json")) as f:
+        rows = json.load(f)
+    with open(os.path.join(root, "FUZZ.md")) as f:
+        assert f.read() == fuzz_md(rows)

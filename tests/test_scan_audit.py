@@ -13,9 +13,9 @@ import json
 import os
 
 from tools import scan_audit
+from tools.scan_audit import FLAG
 
 _RECORD = os.path.join(os.path.dirname(__file__), "..", "SCAN_AUDIT.json")
-FLAG = 1.9  # the committed record's flag threshold
 
 
 def _entries():
@@ -24,8 +24,12 @@ def _entries():
 
 
 def test_record_measures_every_query_without_errors():
+    from weather_bigdata_project_spark import registry
+
+    registry.load()
     entries = _entries()
-    assert len(entries) >= 400
+    assert {e["query"] for e in entries} == set(registry.QUERIES)
+    assert len(entries) == len(registry.QUERIES)
     errs = [e for e in entries if "err" in e]
     assert errs == []
 
@@ -42,7 +46,7 @@ def test_every_flagged_entry_is_adjudicated_and_rederivable():
         assert e.get("fs_bytes") is not None, e["query"]
         assert e.get("parquet_bytes"), e["query"]
         assert e.get("fs_ratio") is not None, e["query"]
-        want = scan_audit.adjudicate(e, FLAG)
+        want = scan_audit.adjudicate(e)
         assert e.get("kind") == want, (
             f"{e['query']}: committed kind {e.get('kind')!r} does not "
             f"re-derive ({want!r}) from its own fs_ratio "
@@ -59,7 +63,7 @@ def test_no_parquet_rescans():
         or (
             e.get("ratio") is not None
             and e["ratio"] >= FLAG
-            and scan_audit.adjudicate(e, FLAG) == "parquet"
+            and scan_audit.adjudicate(e) == "parquet"
         )
     ]
     assert rescans == [], (

@@ -26,7 +26,9 @@ from tools.shuffle_ledger import (
     FLAT_CAP,
     LINEAR_RECORDS_K,
     classify,
+    derive,
     measure,
+    update_record,
 )
 from bench import HEADLINE
 from weather_bigdata_project_spark.registry import QUERIES, load
@@ -147,22 +149,36 @@ def test_input_records_prove_single_scans(ledger):
 def test_extractor_reports_real_shuffles(spark):
     """Live guard: the stage-diff extractor must see nonzero shuffle
     bytes for a groupBy query and count its side-job stages."""
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    jvm, gw = sc._jvm, sc._gateway
-    got = measure(
-        spark,
-        QUERIES["tpch_q1_pricing_summary"],
-        SF_SMOKE,
-        store,
-        jvm,
-        gw,
-    )
+    got = measure(spark, QUERIES["tpch_q1_pricing_summary"], SF_SMOKE)
     assert got["shuffle_write_bytes"] > 0
     assert got["shuffle_write_records"] > 0
     assert got["input_bytes"] > 0
     assert got["n_stages"] >= 2
     assert got["peak_task_shuffle_write_bytes"] > 0
+
+
+def test_named_run_replaces_measured_keeps_rest_drops_unregistered(ledger):
+    """The record rule, without Spark: a run over one named query
+    replaces that entry (here with a 2-point series), keeps every other
+    entry as it was, longer sf1/sf3 series included, and drops an entry
+    whose query is no longer registered."""
+    old = ledger["queries"]
+    name = "tpch_q1_pricing_summary"
+    fresh = derive(
+        name, [0.01, 0.1], {k: old[name]["points"][k] for k in ("0.01", "0.1")}
+    )
+    got = update_record(
+        {**old, "no_longer_registered": old[name]}, {name: fresh}, QUERIES
+    )
+    assert got[name] is fresh and fresh["sfs"] == [0.01, 0.1]
+    assert "no_longer_registered" not in got
+    assert {n: e for n, e in got.items() if n != name} == {
+        n: e for n, e in old.items() if n != name
+    }
+    # the kept entries re-derive to themselves, so a run rewrites them
+    # unchanged
+    for n, e in old.items():
+        assert derive(n, e["sfs"], e["points"]) == e, n
 
 
 def test_segment_exponents_recorded(ledger):

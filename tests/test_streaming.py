@@ -255,6 +255,64 @@ def test_foreach_batch_dedup_upsert(spark):
             shutil.rmtree(d, ignore_errors=True)
 
 
+def _dedup_sink(spark, wire, out, ckpt):
+    return jobs.start_foreach_batch_dedup_sink(
+        jobs.enriched_stream(jobs.wire_file_stream(spark, wire)), out, ckpt
+    )
+
+
+def test_foreach_batch_dedup_restarts_a_crashed_first_write(spark):
+    """A lake left by a crash inside the first write (an uncommitted
+    task attempt under _temporary, no _SUCCESS) holds no committed
+    batch: the restarted query takes its batch as the first and lands
+    every record once."""
+    wire, out, ckpt = (tempfile.mkdtemp(prefix=p) for p in ("w_", "o_", "c_"))
+    try:
+        w = wd.wire_frame(spark, SF_SMOKE)
+        w.repartition(2).write.mode("overwrite").json(wire)
+        crashed = os.path.join(
+            out, "_temporary", "0", "_temporary", "attempt_0_0000_m_000000_0"
+        )
+        os.makedirs(crashed)
+        with open(os.path.join(crashed, "part-00000.parquet"), "wb") as f:
+            f.write(b"half a parquet file")
+        q = _dedup_sink(spark, wire, out, ckpt)
+        q.awaitTermination(120)
+        assert q.exception() is None
+        got = spark.read.parquet(out)
+        assert got.count() == got.select("event_id").distinct().count()
+        assert got.count() == w.count()
+    finally:
+        for d in (wire, out, ckpt):
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def test_foreach_batch_dedup_fails_a_batch_it_cannot_dedup(spark):
+    """Once a batch has committed, a lake the merge cannot read (here
+    every part file is unreadable) fails the batch: it is not appended
+    without the existing-key anti-join."""
+    wire, out, ckpt = (tempfile.mkdtemp(prefix=p) for p in ("w_", "o_", "c_"))
+    try:
+        w = wd.wire_frame(spark, SF_SMOKE)
+        w.repartition(2).write.mode("overwrite").json(wire)
+        _dedup_sink(spark, wire, out, ckpt).awaitTermination(120)
+        assert os.path.exists(os.path.join(out, "_SUCCESS"))
+        for name in os.listdir(out):
+            if name.startswith("part-"):
+                with open(os.path.join(out, name), "wb") as f:
+                    f.write(b"not parquet")
+        before = sorted(os.listdir(out))
+        w.repartition(2).write.mode("append").json(wire)  # redelivery
+        q = _dedup_sink(spark, wire, out, ckpt)
+        with pytest.raises(Exception):
+            q.awaitTermination(120)
+        assert q.exception() is not None
+        assert sorted(os.listdir(out)) == before
+    finally:
+        for d in (wire, out, ckpt):
+            shutil.rmtree(d, ignore_errors=True)
+
+
 def test_console_sink_drains_and_await_any_sees_it_stop(spark, wire_dir):
     """S7 + T7: the console sink reads every wire row and stops, and
     await_any returns once it has."""

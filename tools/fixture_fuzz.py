@@ -19,9 +19,12 @@ that one lucky seed can hide.
 Usage:
     python3 tools/fixture_fuzz.py [--out /tmp/spark_graft_fuzz]
         [--seeds 7 101] [--no-skew] [--no-sparse] [--no-tiny]
-        [--quick] [--write-md] [names...]
+        [--scale X] [--scale-docs] [--quick] [names...]
 
-Writes per-variant results and, with --write-md, the FUZZ.md summary.
+A full run updates FUZZ_results.json by the ledger's rule
+(`shuffle_ledger.update_record`): its variants replace the rows of the
+same tag, every other row is kept. It then rewrites FUZZ.md from the
+merged rows. A --quick run prints its verdicts and writes no record.
 """
 
 from __future__ import annotations
@@ -38,6 +41,7 @@ _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO_ROOT)
 
 from tools.check_oracle import sweep  # noqa: E402
+from tools.shuffle_ledger import update_record  # noqa: E402
 
 # --- value domains (profiled from /root/testdata/sf0.01, FIXTURES.md §B) ---
 
@@ -464,6 +468,64 @@ def gen_tables(
     }))
 
 
+def fuzz_md(rows: list[dict]) -> str:
+    """FUZZ.md: the table of every recorded variant, its failures and
+    the defect history."""
+    lines = [
+        "# FUZZ — differential fixture fuzz results",
+        "",
+        "Full oracle sweep (Spark vs DuckDB on the SAME generated",
+        "parquet) re-run on fresh fixture seeds + a skewed and a",
+        "sparse (absent-category) variant",
+        "(`tools/fixture_fuzz.py`; shapes per FIXTURES.md §B at the",
+        "driver's sf0.01 gate scale unless the scale column says",
+        "otherwise — skew is scale-dependent, so the record keeps",
+        "one skew row at scale 10 ~ sf0.1-shape with the driver's",
+        "doc growth law). A green here means every",
+        "oracle-gated query agrees with DuckDB on data the engine",
+        "has never seen — distribution-level proof, not single-seed.",
+        "",
+        "| variant | seed | profile | scale | queries | ok | fail "
+        "| weak | secs |",
+        "|---|---|---|---|---|---|---|---|---|",
+    ]
+    for r in rows:
+        lines.append(
+            f"| {r['tag']} | {r['seed']} | {r['profile']} | "
+            f"{r.get('scale', 1.0):g} | "
+            f"{r['n_queries']} | {r['ok']} | {r['fail']} | "
+            f"{r['weak']} | {r['secs']} |"
+        )
+    lines.append("")
+    fails = [f for r in rows for f in r["failures"]]
+    if fails:
+        lines.append("## Failures")
+        for f in fails:
+            lines.append(f"- `{f['name']}`: {f['problems'][0]}")
+    else:
+        lines.append("No failures across all variants.")
+    lines.append(_DEFECTS_MD)
+    return "\n".join(lines)
+
+
+def write_record(results: list[dict]) -> None:
+    """Merge `results` into FUZZ_results.json by tag and rewrite FUZZ.md
+    from the merged rows."""
+    path = os.path.join(_REPO_ROOT, "FUZZ_results.json")
+    prev = {}
+    if os.path.exists(path):
+        with open(path) as f:
+            prev = {r["tag"]: r for r in json.load(f)}
+    rows = list(
+        update_record(prev, {r["tag"]: r for r in results}).values()
+    )
+    with open(path, "w") as f:
+        json.dump(rows, f, indent=1)
+    with open(os.path.join(_REPO_ROOT, "FUZZ.md"), "w") as f:
+        f.write(fuzz_md(rows))
+    print(f"wrote {path} and FUZZ.md")
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", default="/tmp/spark_graft_fuzz")
@@ -498,16 +560,6 @@ def main() -> None:
         "growth law at scale > 1 (docs ~ scale, embeddings ~ "
         "scale^0.6) instead of pinning them at the 500-row gate size",
     )
-    ap.add_argument(
-        "--merge",
-        action="store_true",
-        help="merge this run's rows into the existing committed "
-        "FUZZ_results.json (replacing same-tag rows) instead of "
-        "overwriting it, and regenerate FUZZ.md from the MERGED set — "
-        "how the scale-10 skew row joins the per-round scale-1 record "
-        "without a second file",
-    )
-    ap.add_argument("--write-md", action="store_true")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
@@ -520,7 +572,6 @@ def main() -> None:
     if args.quick:
         scale = 0.1
         args.seeds = args.seeds[:1]
-        args.write_md = False  # never let a sample overwrite FUZZ.md
         if not args.names:
             # cross-family sample incl. the families past fuzz rounds
             # caught defects in (stats/ml/dedup/sketch/behavior)
@@ -575,64 +626,10 @@ def main() -> None:
               f"{r['weak']} weak in {r['secs']}s", flush=True)
         results.append(r)
 
-    # quick runs report to stdout only — the committed record files
-    # belong to the full per-round run
-    out_json = os.path.join(
-        "/tmp" if args.quick else _REPO_ROOT, "FUZZ_results.json"
-    )
-    if args.merge and not args.quick and os.path.exists(out_json):
-        try:
-            with open(out_json) as f:
-                prev = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            prev = []
-        mine = {r["tag"] for r in results}
-        results = [
-            r for r in prev if r.get("tag") not in mine
-        ] + results
-    with open(out_json, "w") as f:
-        json.dump(results, f, indent=1)
-    print(f"wrote {out_json}")
-
-    if args.write_md:
-        lines = [
-            "# FUZZ — differential fixture fuzz results",
-            "",
-            "Full oracle sweep (Spark vs DuckDB on the SAME generated",
-            "parquet) re-run on fresh fixture seeds + a skewed and a",
-            "sparse (absent-category) variant",
-            "(`tools/fixture_fuzz.py`; shapes per FIXTURES.md §B at the",
-            "driver's sf0.01 gate scale unless the scale column says",
-            "otherwise — skew is scale-dependent, so the record keeps",
-            "one skew row at scale 10 ~ sf0.1-shape with the driver's",
-            "doc growth law). A green here means every",
-            "oracle-gated query agrees with DuckDB on data the engine",
-            "has never seen — distribution-level proof, not single-seed.",
-            "",
-            "| variant | seed | profile | scale | queries | ok | fail "
-            "| weak | secs |",
-            "|---|---|---|---|---|---|---|---|---|",
-        ]
-        for r in results:
-            lines.append(
-                f"| {r['tag']} | {r['seed']} | {r['profile']} | "
-                f"{r.get('scale', 1.0):g} | "
-                f"{r['n_queries']} | {r['ok']} | {r['fail']} | "
-                f"{r['weak']} | {r['secs']} |"
-            )
-        lines.append("")
-        fails = [f for r in results for f in r["failures"]]
-        if fails:
-            lines.append("## Failures")
-            for f in fails:
-                lines.append(f"- `{f['name']}`: {f['problems'][0]}")
-        else:
-            lines.append("No failures across all variants.")
-        lines.append(_DEFECTS_MD)
-        with open(os.path.join(_REPO_ROOT, "FUZZ.md"), "w") as f:
-            f.write("\n".join(lines))
-        print("wrote FUZZ.md")
-
+    # a quick sample reports to stdout only: the committed record
+    # belongs to the full runs
+    if not args.quick:
+        write_record(results)
     sys.exit(1 if any(r["fail"] for r in results) else 0)
 
 

@@ -42,11 +42,13 @@ which re-derives every kind from the tool's own adjudicate().
 
 Usage:
     python3 tools/scan_audit.py [--sf /root/testdata/sf0.01]
-        [--flag 1.9] [--stages name] [--out FILE] [names...]
-With no names every registry query is measured and --out is rewritten.
-With names only those are measured, and their entries replace the ones
-of the same query in an existing --out (the rest are kept).
-Prints flagged queries (ratio >= --flag) sorted worst-first.
+        [--stages name] [--out FILE] [names...]
+With no names every registry query is measured. Every run updates --out
+by the ledger's rule (`shuffle_ledger.update_record`): the entries it
+measured replace the old ones, every other entry is kept, and entries
+of queries no longer registered are dropped. Each query is metered by
+`shuffle_ledger.stage_diff`, the one meter of both tools. Prints the
+flagged queries (ratio >= FLAG) sorted worst-first.
 """
 
 from __future__ import annotations
@@ -59,23 +61,27 @@ import sys
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO_ROOT)
 
+from tools.shuffle_ledger import stage_diff, update_record  # noqa: E402
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
 ]
 
+#: status-store input ratio at which an entry is flagged and adjudicated
+FLAG = 1.9
 #: fs_ratio bounds of the cache / mixed / parquet verdicts (module
 #: docstring); shared with tests/test_scan_audit.py via adjudicate()
 CACHE_BOUND = 1.1
 PARQUET_BOUND = 1.5
 
 
-def adjudicate(entry: dict, flag: float = 1.9) -> str | None:
+def adjudicate(entry: dict) -> str | None:
     """The committed record's `kind` re-derived from its own numbers —
     None for unflagged entries, else cache|mixed|parquet per the
     fs_ratio bounds in the module docstring."""
     ratio = entry.get("ratio")
-    if ratio is None or ratio < flag:
+    if ratio is None or ratio < FLAG:
         return None
     fs_ratio = entry.get("fs_ratio")
     if fs_ratio is None:
@@ -85,14 +91,6 @@ def adjudicate(entry: dict, flag: float = 1.9) -> str | None:
     if fs_ratio <= PARQUET_BOUND:
         return "mixed"
     return "parquet"
-
-
-def merge(record: list[dict], fresh: list[dict]) -> list[dict]:
-    """`record` with each entry of `fresh` replacing the one of the same
-    `query` in place; queries the record lacks are appended."""
-    by_query = {e["query"]: e for e in fresh}
-    out = [by_query.pop(e["query"], e) for e in record]
-    return out + list(by_query.values())
 
 
 def _disk_bytes(path: str) -> int:
@@ -108,19 +106,16 @@ def _disk_bytes(path: str) -> int:
 
 def _meter(spark, sf: str):
     """``run(name) -> (new stages, fs bytes read, tables loaded)`` for
-    one registry query on a cold cache. Every table is loaded once
-    first: a cold ``tables.load`` reads the parquet footer through the
-    'file' scheme, which would be charged to the first query loading it."""
-    from tools.shuffle_ledger import _stage_map
+    one registry query, metered by ``shuffle_ledger.stage_diff``. Every
+    table is loaded once first: a cold ``tables.load`` reads the parquet
+    footer through the 'file' scheme, which would be charged to the
+    first query loading it."""
     from weather_bigdata_project_spark import registry, tables
-    from weather_bigdata_project_spark.operators import textops
 
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    jvm, gw = sc._jvm, sc._gateway
     # physical 'file'-scheme reads (parquet scans, disk checkpoints —
     # not cache blocks, not shuffle): the cache-vs-parquet discriminator
-    fs_stats = jvm.org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics().get("file")
+    fs_stats = spark.sparkContext._jvm.org.apache.hadoop.fs.FileSystem \
+        .getGlobalStorageStatistics().get("file")
 
     orig_load = tables.load
     for t in TABLES:
@@ -132,32 +127,19 @@ def _meter(spark, sf: str):
         return orig_load(spark_, sf_dir, name, *a, **kw)
 
     def run(name):
-        spark.catalog.clearCache()
-        for rdd in list(sc._jsc.getPersistentRDDs().values()):
-            rdd.unpersist()
-        textops.clear_shingle_memo()
         loaded.clear()
-        before = set(_stage_map(store, jvm, gw))
         fs_before = fs_stats.getLong("bytesRead")
         tables.load = spy_load
         try:
-            registry.QUERIES[name](spark, sf).write.format(
-                "noop"
-            ).mode("overwrite").save()
+            new, _wall = stage_diff(spark, registry.QUERIES[name], sf)
         finally:
             tables.load = orig_load
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        fs_delta = fs_stats.getLong("bytesRead") - fs_before
-        return {
-            k: v
-            for k, v in _stage_map(store, jvm, gw).items()
-            if k not in before
-        }, fs_delta, sorted(loaded)
+        return new, fs_stats.getLong("bytesRead") - fs_before, sorted(loaded)
 
     return run
 
 
-def measure(spark, sf: str, names: list[str], flag: float = 1.9) -> list[dict]:
+def measure(spark, sf: str, names: list[str]) -> list[dict]:
     """One audit entry per query of `names`, measured in that order over
     the fixture `sf`; a query that raises gets an ``err`` entry."""
     import duckdb
@@ -187,7 +169,7 @@ def measure(spark, sf: str, names: list[str], flag: float = 1.9) -> list[dict]:
                 "fs_bytes": fs_delta, "parquet_bytes": pq,
                 "fs_ratio": round(fs_delta / pq, 2) if pq else None,
             }
-            kind = adjudicate(entry, flag)
+            kind = adjudicate(entry)
             if kind:
                 entry["kind"] = kind
             out.append(entry)
@@ -201,7 +183,6 @@ def measure(spark, sf: str, names: list[str], flag: float = 1.9) -> list[dict]:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--flag", type=float, default=1.9)
     ap.add_argument(
         "--stages",
         default=None,
@@ -230,15 +211,16 @@ def main() -> None:
         return
 
     names = args.names or sorted(registry.QUERIES)
-    out = measure(spark, args.sf, names, args.flag)
-
-    if args.names and os.path.exists(args.out):
+    fresh = {e["query"]: e for e in measure(spark, args.sf, names)}
+    record = {}
+    if os.path.exists(args.out):
         with open(args.out) as f:
-            out = merge(json.load(f), out)
+            record = {e["query"]: e for e in json.load(f)}
+    out = list(update_record(record, fresh, registry.QUERIES).values())
     with open(args.out, "w") as f:
         json.dump(out, f, indent=1)
     flagged = sorted(
-        (o for o in out if o.get("ratio") and o["ratio"] >= args.flag),
+        (o for o in out if o.get("ratio") and o["ratio"] >= FLAG),
         key=lambda o: -o["ratio"],
     )
     for o in flagged:

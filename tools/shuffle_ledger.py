@@ -22,10 +22,17 @@ query's exponent against the declared bounds below — a refactor that
 reintroduces a quadratic shuffle fails CI even when wall time looks fine.
 
 Usage:
-    python tools/shuffle_ledger.py                      # headline suite
+    python tools/shuffle_ledger.py                      # HEADLINE + EXTENDED
     python tools/shuffle_ledger.py --queries a,b,c
-    python tools/shuffle_ledger.py --sfs /root/testdata/sf0.01,/root/testdata/sf0.1
-Writes SHUFFLE_LEDGER.json at the repo root.
+    python tools/shuffle_ledger.py --sfs DIR,DIR,DIR,DIR --queries a,b
+    python tools/shuffle_ledger.py --reverdict          # measure nothing
+Every run updates SHUFFLE_LEDGER.json (or --out) by one rule
+(`update_record`): the entries it measured replace the old ones, every
+other entry is kept with its own `sfs` series, and entries of queries
+no longer registered are dropped. Every entry's exponents, bound and
+verdict are then re-derived from its stored points (`derive`). The run
+exits nonzero when any verdict is EXCEEDED. `stage_diff` is the one
+query meter; tools/scan_audit.py measures with it too.
 """
 
 from __future__ import annotations
@@ -212,14 +219,26 @@ BYTES_FLOOR = 64 * 1024
 FLAT_CAP = 64 * 1024 * 1024
 
 
-def _stage_map(store, jvm, gw):
-    """stageId -> metrics dict for every stage the status store retains."""
-    empty_statuses = jvm.java.util.ArrayList()
-    quantiles = gw.new_array(gw.jvm.double, 0)
-    task_statuses = jvm.java.util.ArrayList()
+def update_record(record: dict, fresh: dict, known=None) -> dict:
+    """The update rule of every evidence record (this ledger,
+    SCAN_AUDIT.json, FUZZ_results.json): each entry of `fresh` replaces
+    the one under the same key, every other entry of `record` is kept,
+    and, given `known`, entries whose key is not in it (queries no
+    longer registered) are dropped."""
+    merged = {**record, **fresh}
+    return {k: v for k, v in merged.items() if known is None or k in known}
+
+
+def _stage_map(sc) -> dict:
+    """(stageId, attemptId) -> metrics for every stage the status store
+    retains."""
+    store = sc._jsc.sc().statusStore()
+    jvm, gw = sc._jvm, sc._gateway
     out = {}
-    sl = store.stageList(empty_statuses, False, False, quantiles,
-                         task_statuses)
+    sl = store.stageList(
+        jvm.java.util.ArrayList(), False, False,
+        gw.new_array(gw.jvm.double, 0), jvm.java.util.ArrayList(),
+    )
     for i in range(sl.size()):
         s = sl.apply(i)
         out[(s.stageId(), s.attemptId())] = {
@@ -232,14 +251,39 @@ def _stage_map(store, jvm, gw):
     return out
 
 
-def _peak_task_swb(store, stage_id, attempt, n_tasks):
+def stage_diff(spark, fn, sf_dir: str) -> tuple[dict, float]:
+    """The one query meter of the evidence tools: run registry query
+    `fn` over `sf_dir` through the noop sink on a cleared session (no
+    cached table, persisted RDD or shingle memo left by an earlier
+    query) and return the status-store metrics of the stages the run
+    added, keyed (stageId, attemptId), with its wall seconds. The
+    listener bus is drained before the diff, so every stage is counted,
+    materialize()/localCheckpoint side jobs too."""
+    from weather_bigdata_project_spark.operators import textops
+
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    for rdd in list(sc._jsc.getPersistentRDDs().values()):
+        rdd.unpersist()
+    textops.clear_shingle_memo()
+    sc._jvm.System.gc()
+    before = set(_stage_map(sc))
+    t0 = time.time()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    wall = round(time.time() - t0, 3)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return {k: v for k, v in _stage_map(sc).items() if k not in before}, wall
+
+
+def _peak_task_swb(sc, stage_id, attempt, n_tasks):
     """Max single-task shuffle-write bytes for one stage."""
     peak = 0
     try:
-        tl = store.taskList(stage_id, attempt, max(1, n_tasks))
+        tl = sc._jsc.sc().statusStore().taskList(
+            stage_id, attempt, max(1, n_tasks)
+        )
         for i in range(tl.size()):
-            t = tl.apply(i)
-            tm = t.taskMetrics()
+            tm = tl.apply(i).taskMetrics()
             if tm.isDefined():
                 peak = max(
                     peak, tm.get().shuffleWriteMetrics().bytesWritten()
@@ -249,19 +293,10 @@ def _peak_task_swb(store, stage_id, attempt, n_tasks):
     return peak
 
 
-def measure(spark, fn, sf_dir, store, jvm, gw):
-    """Run one query through the noop sink; return the stage-diff metrics."""
-    sc = spark.sparkContext
-    before = set(_stage_map(store, jvm, gw))
-    t0 = time.time()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    wall = round(time.time() - t0, 3)
-    try:  # let the listener bus drain so the store sees every stage
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-    except Exception:
-        time.sleep(0.3)
-    after = _stage_map(store, jvm, gw)
-    new = {k: v for k, v in after.items() if k not in before}
+def measure(spark, fn, sf_dir: str) -> dict:
+    """One ledger point: query `fn` over `sf_dir`, metered by
+    stage_diff and summed over its stages."""
+    new, wall = stage_diff(spark, fn, sf_dir)
     tot = {
         "shuffle_write_bytes": sum(v["swb"] for v in new.values()),
         "shuffle_write_records": sum(v["swr"] for v in new.values()),
@@ -274,7 +309,7 @@ def measure(spark, fn, sf_dir, store, jvm, gw):
     heavy = max(new.items(), key=lambda kv: kv[1]["swb"], default=None)
     if heavy and heavy[1]["swb"] > 0:
         (sid, att), hv = heavy
-        peak = _peak_task_swb(store, sid, att, hv["tasks"])
+        peak = _peak_task_swb(spark.sparkContext, sid, att, hv["tasks"])
         tot["peak_task_shuffle_write_bytes"] = peak
         avg = hv["swb"] / max(1, hv["tasks"])
         tot["heavy_stage_skew"] = round(peak / avg, 2) if avg else None
@@ -284,10 +319,77 @@ def measure(spark, fn, sf_dir, store, jvm, gw):
     return tot
 
 
-def exponent(small, big, sf_ratio):
-    if small >= BYTES_FLOOR:
+def exponent(small, big, sf_ratio, floor=BYTES_FLOOR):
+    if small >= floor:
         return round(math.log(max(big, 1) / small) / math.log(sf_ratio), 3)
     return None
+
+
+def derive(name: str, sfs: list[float], points: dict) -> dict:
+    """One ledger entry from its measured `points` (keyed str(sf)) over
+    the ascending series `sfs`: the per-segment and last-segment
+    exponents, the declared bound and the verdict. Every run re-derives
+    every entry with it, so a BOUNDS or classify() edit lands on the
+    whole record without re-measuring."""
+    small, big = points[str(sfs[-2])], points[str(sfs[-1])]
+    ratio = sfs[-1] / sfs[-2]
+
+    def e(key, floor=BYTES_FLOOR):
+        return exponent(small[key], big[key], ratio, floor)
+
+    entry = {
+        "points": points,
+        "sfs": sfs,
+        # the two LARGEST points drive the verdict
+        "small": small,
+        "big": big,
+        # per-segment exponents across all consecutive sf pairs: a
+        # stable sequence means measured growth, a falling one means
+        # fixed costs still washing out at the small end
+        "exponent_bytes_segments": [
+            exponent(
+                points[str(lo)]["shuffle_write_bytes"],
+                points[str(hi)]["shuffle_write_bytes"],
+                hi / lo,
+            )
+            for lo, hi in zip(sfs, sfs[1:])
+        ],
+        "exponent_bytes": e("shuffle_write_bytes"),
+        "exponent_records": e("shuffle_write_records"),
+        "exponent_input_bytes": e("input_bytes"),
+        # records, not bytes, are the cross-fixture-safe re-read signal:
+        # the sf1 fixture's 65-row-group layout carries ~7x more BYTES
+        # per row than the single-row-group driver testdata (more
+        # dictionaries, shorter RLE runs), so a bytes exponent across
+        # the generator boundary reads ~1.8 on single-scan queries.
+        # input_records scale exactly with SF; a double scan doubles
+        # them regardless of layout. Column-pruning regressions are
+        # gated separately by test_plans' ReadSchema assertions.
+        "exponent_input_records": e("input_records", floor=10000),
+        "bound": BOUNDS.get(name, DEFAULT_BOUND),
+    }
+    entry["verdict"] = classify(entry, entry["bound"])
+    return entry
+
+
+def scream(bad: list[str], entries: dict) -> None:
+    """A red verdict must be impossible to miss: print each offending
+    series in full (round-6 landed an EXCEEDED entry silently; the
+    commit ritual runs the ledger tests after any run, and this makes
+    the run itself shout)."""
+    for n in bad:
+        e = entries[n]
+        print(
+            f"\n!!! EXCEEDED: {n} — exponent_bytes "
+            f"{e['exponent_bytes']} > bound {e['bound']}\n"
+            f"    sfs={e['sfs']} segments={e['exponent_bytes_segments']}\n"
+            f"    bytes="
+            f"{[e['points'][str(s)]['shuffle_write_bytes'] for s in e['sfs']]}\n"
+            "    DO NOT COMMIT this ledger red — fix the plan or "
+            "declare a justified per-query bound first "
+            "(tests/test_shuffle_ledger.py gates it).",
+            file=sys.stderr,
+        )
 
 
 def main() -> None:
@@ -303,246 +405,97 @@ def main() -> None:
         "still fixed-cost-dominated; the verdict gates on the LARGEST "
         "segment (closest to the scale regime).",
     )
-    ap.add_argument("--queries", default=None)
+    ap.add_argument(
+        "--queries",
+        default=None,
+        help="comma-separated query names (default: HEADLINE + EXTENDED)",
+    )
     ap.add_argument(
         "--out", default=os.path.join(_REPO_ROOT, "SHUFFLE_LEDGER.json")
     )
     ap.add_argument(
         "--reverdict",
         action="store_true",
-        help="no measurement: reload --out, recompute every entry's "
-        "bound + verdict from its STORED numbers with the current "
-        "BOUNDS/classify logic, rewrite. How a bound edit or a verdict "
-        "reclassification (e.g. the transition rule) lands without "
-        "re-running 81 queries x 4 SFs.",
-    )
-    ap.add_argument(
-        "--merge",
-        action="store_true",
-        help="update only the named queries inside the existing --out "
-        "ledger instead of rewriting it — how the sf1 fourth point "
-        "lands on the 10 shuffle-heaviest entries without re-measuring "
-        "all 81. Each entry records its own 'sfs' series; the global "
-        "'sfs' stays the base run's.",
+        help="measure nothing: re-derive every entry of --out from its "
+        "STORED points with the current BOUNDS/classify logic and "
+        "rewrite it — how a bound edit lands without re-running "
+        "81 queries x 4 SFs",
     )
     args = ap.parse_args()
 
-    if args.reverdict:
-        with open(args.out) as f:
-            base = json.load(f)
-        qs = base["queries"]
-        for name, ent in qs.items():
-            bound = BOUNDS.get(name, DEFAULT_BOUND)
-            ent["bound"] = bound
-            ent["verdict"] = classify(ent, bound)
-            sfs = ent.get("sfs", base["sfs"])
-            ratio = sfs[-1] / sfs[-2]
-            sir = ent["small"]["input_records"]
-            ent["exponent_input_records"] = (
-                round(
-                    math.log(max(ent["big"]["input_records"], 1) / sir)
-                    / math.log(ratio),
-                    3,
-                )
-                if sir >= 10000
-                else None
-            )
-        bad = [n for n, v in qs.items() if v["verdict"] == "EXCEEDED"]
-        base.update(n_exceeded=len(bad), exceeded=bad)
-        with open(args.out, "w") as f:
-            json.dump(base, f, indent=1, sort_keys=True)
-        print(json.dumps({
-            "ledger": args.out, "n": len(qs), "exceeded": bad,
-            "transitions": sorted(
-                n for n, v in qs.items() if v["verdict"] == "transition"
-            ),
-        }))
-        for n in bad:
-            e = qs[n]
-            print(
-                f"!!! EXCEEDED: {n} — exponent_bytes "
-                f"{e['exponent_bytes']} > bound {e['bound']}",
-                file=sys.stderr,
-            )
-        sys.exit(1 if bad else 0)
-
     sf_dirs = [s.strip() for s in args.sfs.split(",") if s.strip()]
     assert len(sf_dirs) >= 2, "need at least two sf dirs"
-
-    def sf_of(d):
-        return float(d.rstrip("/").rsplit("sf", 1)[-1])
-
-    small_dir, big_dir = sf_dirs[-2], sf_dirs[-1]
-    sf_ratio = sf_of(big_dir) / sf_of(small_dir)
+    sfs = [float(d.rstrip("/").rsplit("sf", 1)[-1]) for d in sf_dirs]
 
     from bench import HEADLINE
-    from weather_bigdata_project_spark.session import get_spark
     from weather_bigdata_project_spark import registry
-    from weather_bigdata_project_spark.operators import textops
 
     registry.load()
-    names = (
-        [n.strip() for n in args.queries.split(",") if n.strip()]
-        if args.queries
-        else list(HEADLINE) + EXTENDED
-    )
+    if args.reverdict:
+        names = []
+    elif args.queries:
+        names = [n.strip() for n in args.queries.split(",") if n.strip()]
+    else:
+        names = list(HEADLINE) + EXTENDED
 
-    spark = get_spark("shuffle_ledger")
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    jvm, gw = sc._jvm, sc._gateway
+    fresh = {}
+    if names:
+        from weather_bigdata_project_spark.session import get_spark
 
-    def clear():
-        spark.catalog.clearCache()
-        for rdd in list(sc._jsc.getPersistentRDDs().values()):
-            rdd.unpersist()
-        textops.clear_shingle_memo()
-        jvm.System.gc()
-
-    ledger = {}
-    for name in names:
-        fn = registry.QUERIES[name]
-        points = {}
-        for d in sf_dirs:
-            clear()
-            points[str(sf_of(d))] = measure(spark, fn, d, store, jvm, gw)
-        entry = {
-            "points": points,
-            # per-entry series: with --merge, entries can carry MORE
-            # points than the base run (the sf1 extension); consumers
-            # and tests read this, falling back to the global "sfs"
-            "sfs": [sf_of(d) for d in sf_dirs],
-            # back-compat keys: the two LARGEST points drive the verdict
-            "small": points[str(sf_of(small_dir))],
-            "big": points[str(sf_of(big_dir))],
-        }
-        # per-segment exponents across all consecutive sf pairs: a
-        # stable sequence means measured growth, a falling one means
-        # fixed costs still washing out at the small end
-        segs = []
-        for lo, hi in zip(sf_dirs, sf_dirs[1:]):
-            segs.append(
-                exponent(
-                    points[str(sf_of(lo))]["shuffle_write_bytes"],
-                    points[str(sf_of(hi))]["shuffle_write_bytes"],
-                    sf_of(hi) / sf_of(lo),
-                )
-            )
-        entry["exponent_bytes_segments"] = segs
-        sb, bb = (
-            entry["small"]["shuffle_write_bytes"],
-            entry["big"]["shuffle_write_bytes"],
-        )
-        e_b = exponent(sb, bb, sf_ratio)
-        e_r = exponent(
-            entry["small"]["shuffle_write_records"],
-            entry["big"]["shuffle_write_records"],
-            sf_ratio,
-        ) if entry["small"]["shuffle_write_records"] >= 1000 else None
-        e_in = exponent(
-            entry["small"]["input_bytes"],
-            entry["big"]["input_bytes"],
-            sf_ratio,
-        )
-        # records, not bytes, are the cross-fixture-safe re-read signal:
-        # the sf1 fixture's 65-row-group layout carries ~7x more BYTES
-        # per row than the single-row-group driver testdata (more
-        # dictionaries, shorter RLE runs), so a bytes exponent across
-        # the generator boundary reads ~1.8 on single-scan queries.
-        # input_records scale exactly with SF; a double scan doubles
-        # them regardless of layout. Column-pruning regressions are
-        # gated separately by test_plans' ReadSchema assertions.
-        sir = entry["small"]["input_records"]
-        e_inr = (
-            round(
-                math.log(max(entry["big"]["input_records"], 1) / sir)
-                / math.log(sf_ratio),
-                3,
-            )
-            if sir >= 10000
-            else None
-        )
-        bound = BOUNDS.get(name, DEFAULT_BOUND)
-        entry.update(
-            {
-                "exponent_bytes": e_b,
-                "exponent_records": e_r,
-                "exponent_input_bytes": e_in,
-                "exponent_input_records": e_inr,
-                "bound": bound,
+        spark = get_spark("shuffle_ledger")
+        for name in names:
+            fn = registry.QUERIES[name]
+            points = {
+                str(sf): measure(spark, fn, d) for sf, d in zip(sfs, sf_dirs)
             }
-        )
-        entry["verdict"] = classify(entry, bound)
-        ledger[name] = entry
-        print(
-            f"# {name}: small={sb} big={bb} e={e_b} "
-            f"bound={bound} {entry['verdict']} "
-            f"peak_task={entry['big']['peak_task_shuffle_write_bytes']}",
-            file=sys.stderr,
-        )
-
-    def scream(bad, entries):
-        """A red verdict must be impossible to miss: print each
-        offending series in full and exit nonzero (round-6 landed an
-        EXCEEDED entry silently; the commit ritual now runs the ledger
-        tests after any regen, and this makes the regen itself shout)."""
-        for n in bad:
-            e = entries[n]
+            entry = fresh[name] = derive(name, sfs, points)
             print(
-                f"\n!!! EXCEEDED: {n} — exponent_bytes "
-                f"{e['exponent_bytes']} > bound {e['bound']}\n"
-                f"    sfs={e['sfs']} segments="
-                f"{e['exponent_bytes_segments']}\n"
-                f"    bytes="
-                f"{[e['points'][str(s)]['shuffle_write_bytes'] for s in e['sfs']]}\n"
-                "    DO NOT COMMIT this ledger red — fix the plan or "
-                "declare a justified per-query bound first "
-                "(tests/test_shuffle_ledger.py gates it).",
+                f"# {name}: small={entry['small']['shuffle_write_bytes']} "
+                f"big={entry['big']['shuffle_write_bytes']} "
+                f"e={entry['exponent_bytes']} bound={entry['bound']} "
+                f"{entry['verdict']} "
+                f"peak_task={entry['big']['peak_task_shuffle_write_bytes']}",
                 file=sys.stderr,
             )
-
-    if args.merge and os.path.exists(args.out):
-        with open(args.out) as f:
-            base = json.load(f)
-        merged = dict(base["queries"])
-        merged.update(ledger)
-        bad = [n for n, v in merged.items() if v["verdict"] == "EXCEEDED"]
-        payload = {
-            **{k: v for k, v in base.items() if k != "queries"},
-            "n_queries": len(merged),
-            "n_exceeded": len(bad),
-            "exceeded": bad,
-            "queries": merged,
-        }
-        with open(args.out, "w") as f:
-            json.dump(payload, f, indent=1, sort_keys=True)
-        print(json.dumps({"ledger": args.out, "n": len(merged),
-                          "merged": sorted(ledger), "exceeded": bad}))
-        scream(bad, merged)
         spark.stop()
-        sys.exit(1 if bad else 0)
 
-    bad = [n for n, v in ledger.items() if v["verdict"] == "EXCEEDED"]
-    payload = {
-        "sfs": [sf_of(d) for d in sf_dirs],
-        "sf_small": sf_of(small_dir),
-        "sf_big": sf_of(big_dir),
-        "sf_ratio": sf_ratio,
-        "bytes_floor": BYTES_FLOOR,
-        "flat_cap": FLAT_CAP,
-        "n_queries": len(ledger),
-        "n_exceeded": len(bad),
-        "exceeded": bad,
-        "queries": ledger,
+    if os.path.exists(args.out):
+        with open(args.out) as f:
+            record = json.load(f)
+    else:
+        record = {
+            "sfs": sfs,
+            "sf_small": sfs[-2],
+            "sf_big": sfs[-1],
+            "sf_ratio": sfs[-1] / sfs[-2],
+            "queries": {},
+        }
+    ledger = {
+        n: derive(n, e["sfs"], e["points"])
+        for n, e in update_record(
+            record["queries"], fresh, registry.QUERIES
+        ).items()
     }
+    bad = [n for n, v in ledger.items() if v["verdict"] == "EXCEEDED"]
+    record.update(
+        bytes_floor=BYTES_FLOOR,
+        flat_cap=FLAT_CAP,
+        n_queries=len(ledger),
+        n_exceeded=len(bad),
+        exceeded=bad,
+        queries=ledger,
+    )
     with open(args.out, "w") as f:
-        json.dump(payload, f, indent=1, sort_keys=True)
-    print(json.dumps({"ledger": args.out, "n": len(ledger),
-                      "exceeded": bad}))
+        json.dump(record, f, indent=1, sort_keys=True)
+    print(json.dumps({
+        "ledger": args.out, "n": len(ledger), "measured": sorted(fresh),
+        "exceeded": bad,
+        "transitions": sorted(
+            n for n, v in ledger.items() if v["verdict"] == "transition"
+        ),
+    }))
     scream(bad, ledger)
-    spark.stop()
-    if bad:
-        sys.exit(1)
+    sys.exit(1 if bad else 0)
 
 
 if __name__ == "__main__":

@@ -16,6 +16,8 @@ downstream plan)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
@@ -261,13 +263,13 @@ def start_foreach_batch_dedup_sink(df: DataFrame, path: str, checkpoint: str):
     real MERGE (Delta/Iceberg) — the foreachBatch structure is identical."""
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         new = batch_df.dropDuplicates(["event_id"])
-        try:
-            existing = spark.read.parquet(path).select("event_id")
-            new = new.join(existing, "event_id", "left_anti")
-        except Exception:
-            pass  # first batch: lake does not exist yet
+        # no batch has committed until the first write leaves _SUCCESS, so
+        # a crash inside that write restarts as a first batch; once one
+        # has, any failure to read the lake fails the batch
+        if os.path.exists(os.path.join(path, "_SUCCESS")):
+            existing = batch_df.sparkSession.read.parquet(path)
+            new = new.join(existing.select("event_id"), "event_id", "left_anti")
         new.write.mode("append").parquet(path)
 
     return (

@@ -54,3 +54,29 @@ def spark():
     s = get_spark("pytest", cpus=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def crash_lake_rename(monkeypatch):
+    """`arm(second=True, skip=0)` makes one lake-swap rename raise
+    OSError, as a crash there would stop the writer: the swap's second
+    rename (`path__X` -> `path`), or its first (`path` -> `path__X`)
+    with `second=False`, after `skip` matching renames went through.
+    Later renames are real."""
+    real = os.rename
+
+    def arm(second: bool = True, skip: int = 0) -> None:
+        left = [skip]
+
+        def rename(src, dst):
+            live, side = (dst, src) if second else (src, dst)
+            if str(side).startswith(str(live).rstrip("/") + "__"):
+                left[0] -= 1
+                if left[0] < 0:
+                    monkeypatch.setattr(os, "rename", real)
+                    raise OSError("crash inside a lake swap")
+            real(src, dst)
+
+        monkeypatch.setattr(os, "rename", rename)
+
+    return arm

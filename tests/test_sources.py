@@ -4,9 +4,11 @@ readers."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
 
@@ -211,6 +213,7 @@ def test_compaction_shrinks_files_keeps_rows(spark, tmp_path):
     got = spark.read.parquet(lake)
     assert got.count() == src.count()
     assert got.subtract(src).count() == 0 and src.subtract(got).count() == 0
+    assert not [d for d in os.listdir(tmp_path) if "__" in d]
 
 
 def test_lake_schema_evolution_merge(spark, tmp_path):
@@ -358,7 +361,8 @@ def test_lake_upsert_merge(spark, tmp_path):
 
 def test_lake_delete_where(spark, tmp_path):
     """DELETE WHERE removes exactly the TRUE-predicate rows (NULL keeps,
-    SQL semantics) and reports the deleted count."""
+    SQL semantics) and reports the deleted count; no scratch dirs
+    survive the swap."""
     from weather_bigdata_project_spark.sources.readers import (
         delete_from_parquet_lake,
     )
@@ -376,6 +380,78 @@ def test_lake_delete_where(spark, tmp_path):
         2,
         4,
     ]
+    assert not [d for d in os.listdir(tmp_path) if "__" in d]
+
+
+def _lake_rows(spark, lake) -> set:
+    return {tuple(r) for r in spark.read.parquet(lake).collect()}
+
+
+@pytest.mark.parametrize("writer", ["compact", "upsert", "delete"])
+def test_lake_writer_finishes_a_swap_a_crash_cut_short(
+    spark, tmp_path, crash_lake_rename, writer
+):
+    """A crash between the swap's two renames (live dir renamed away,
+    new dir not yet renamed in): re-running the writer settles the cut
+    swap, and the lake then equals the no-crash result, no scratch dir
+    is left, and a further rewrite succeeds."""
+    lake = str(tmp_path / "lake")
+    base = [(i, "eu" if i % 2 else "us", float(i)) for i in range(40)]
+    schema = "id long, region string, v double"
+    spark.createDataFrame(base, schema).repartition(8).write.parquet(lake)
+    updates = spark.createDataFrame([(2, "us", 2.5), (99, "eu", 99.0)], schema)
+    rewrite, want = {
+        "compact": (
+            lambda: readers.compact_parquet_lake(spark, lake),
+            set(base),
+        ),
+        "upsert": (
+            lambda: readers.upsert_parquet_lake(spark, lake, updates, ["id"]),
+            {r for r in base if r[0] != 2} | {(2, "us", 2.5), (99, "eu", 99.0)},
+        ),
+        "delete": (
+            lambda: readers.delete_from_parquet_lake(spark, lake, "region = 'eu'"),
+            {r for r in base if r[1] != "eu"},
+        ),
+    }[writer]
+
+    crash_lake_rename(second=True)
+    with pytest.raises(OSError, match="crash inside a lake swap"):
+        rewrite()
+    assert not os.path.exists(lake)  # the crash fell between the renames
+    rewrite()
+    assert _lake_rows(spark, lake) == want
+    assert not [d for d in os.listdir(tmp_path) if "__" in d]
+    more = spark.createDataFrame([(500, "us", 5.0)], schema)
+    readers.upsert_parquet_lake(spark, lake, more, ["id"])
+    assert _lake_rows(spark, lake) == want | {(500, "us", 5.0)}
+
+
+def test_rewrite_lake_discards_a_write_cut_before_the_swap(
+    spark, tmp_path, crash_lake_rename
+):
+    """A crash after the new dir is written but before the first rename
+    leaves the old lake live; the next call discards the unfinished
+    write and applies the rewrite once, and a replay of the same batch
+    id is skipped."""
+    lake = str(tmp_path / "lake")
+
+    def add(i):
+        row = spark.createDataFrame([(i,)], "id long")
+        return lambda cur: row if cur is None else cur.unionByName(row)
+
+    assert readers.rewrite_lake(spark, lake, add(1), batch_id=0)
+    crash_lake_rename(second=False)
+    with pytest.raises(OSError, match="crash inside a lake swap"):
+        readers.rewrite_lake(spark, lake, add(2), batch_id=1)
+    assert _lake_rows(spark, lake) == {(1,)}
+    assert readers.lake_batch_id(lake) == 0
+    assert os.path.isdir(lake + "__rewriting")
+    assert readers.rewrite_lake(spark, lake, add(2), batch_id=1)
+    assert not readers.rewrite_lake(spark, lake, add(2), batch_id=1)
+    assert sorted(r.id for r in spark.read.parquet(lake).collect()) == [1, 2]
+    assert readers.lake_batch_id(lake) == 1
+    assert sorted(os.listdir(tmp_path)) == ["lake"]
 
 
 def test_lake_snapshot_time_travel(spark):

@@ -9,10 +9,12 @@ import shutil
 import tempfile
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
 from weather_bigdata_project_spark import weather_domain as wd
+from weather_bigdata_project_spark.sources import readers
 from weather_bigdata_project_spark.streaming import jobs
 
 
@@ -553,7 +555,7 @@ def test_incremental_agg_mv(spark, wire_dir):
             q.awaitTermination(120)
 
         run()
-        assert jobs._mv_last_batch(out) >= 0  # marker installed with data
+        assert readers.lake_batch_id(out) >= 0  # marker installed with data
         got = {
             r["city_name"]: r
             for r in jobs.read_incremental_agg_mv(spark, out).collect()
@@ -583,17 +585,65 @@ def test_incremental_agg_mv(spark, wire_dir):
             assert got[c]["min_temp"] == exp[c]["min_temp"]
             assert got[c]["max_temp"] == exp[c]["max_temp"]
 
-        before = jobs._mv_last_batch(out)
+        before = readers.lake_batch_id(out)
         run()  # restart: checkpoint replays nothing, MV unchanged
         got2 = {
             r["city_name"]: r["n_events"]
             for r in jobs.read_incremental_agg_mv(spark, out).collect()
         }
         assert got2 == {c: exp[c]["n_events"] for c in exp}
-        assert jobs._mv_last_batch(out) == before
+        assert readers.lake_batch_id(out) == before
     finally:
         shutil.rmtree(os.path.dirname(out), ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def test_incremental_agg_mv_survives_a_crash_between_renames(
+    spark, tmp_path, monkeypatch, crash_lake_rename
+):
+    """Two micro-batches (one wire file each); the second fold crashes
+    between its swap's two renames. The restart from the checkpoint
+    replays that batch, which settles the cut swap and folds nothing
+    twice: the MV equals the batch aggregate, no scratch dir is left,
+    and a further batch folds in."""
+    src = str(tmp_path / "wire")
+    wd.wire_frame(spark, SF_SMOKE).repartition(2).write.json(src)
+    monkeypatch.setattr(jobs, "trigger_bytes", lambda _spark: 1)
+    out, ckpt = str(tmp_path / "mv"), str(tmp_path / "ckpt")
+
+    def run():
+        stream = jobs.wire_file_stream(spark, src)
+        enriched = jobs.enriched_stream(stream).select("city_name", "temperature")
+        jobs.start_incremental_agg_sink(enriched, out, ckpt).awaitTermination(120)
+
+    def mv() -> dict:
+        return {r[0]: tuple(r[1:]) for r in spark.read.parquet(out).collect()}
+
+    crash_lake_rename(second=True, skip=1)  # batch 0 only renames in
+    with pytest.raises(
+        StreamingQueryException, match="crash inside a lake swap"
+    ):
+        run()
+    run()
+    exp = wd.enriched_frame(spark, SF_SMOKE).groupBy("city_name").agg(
+        F.count(F.lit(1)),
+        F.sum(F.expr("cast(round(temperature * 100e0, 0) as bigint)")),
+        F.min("temperature"),
+        F.max("temperature"),
+    )
+    assert mv() == {r[0]: tuple(r[1:]) for r in exp.collect()}
+    assert readers.lake_batch_id(out) == 1
+    assert sorted(os.listdir(tmp_path)) == ["ckpt", "mv", "wire"]
+
+    first = sorted(f for f in os.listdir(src) if f.endswith(".json"))[0]
+    shutil.copy(os.path.join(src, first), os.path.join(src, "again-" + first))
+    n_again = spark.read.schema(jobs.WIRE_SCHEMA).json(
+        os.path.join(src, first)
+    ).count()
+    n_before = sum(v[0] for v in mv().values())
+    run()
+    assert sum(v[0] for v in mv().values()) == n_before + n_again
+    assert readers.lake_batch_id(out) == 2
 
 
 @pytest.mark.parametrize(
@@ -1157,13 +1207,52 @@ def test_compacting_lake_sink_heals_small_files(spark, tmp_path):
     # in-line compactions collapse all but the post-compaction tail
     assert n_files <= 8
     assert lake_layout_doctor(lake, target_file_mb=0)["verdict"] == "ok"
-    # restart with the same checkpoint and no new input: the drained
-    # stream replays nothing — the appends are checkpoint-fenced
+    # a clean restart with the same checkpoint and no new input replays
+    # nothing: every batch committed. The appends are at-least-once
+    # across a crash (see the crash case below).
     q2 = jobs.start_compacting_lake_sink(
         stream, lake, ckpt, target_file_mb=64, every=3
     )
     q2.awaitTermination(120)
     assert spark.read.parquet(lake).count() == ev.count()
+
+
+def test_compacting_lake_sink_loses_no_row_to_a_crash_in_compaction(
+    spark, tmp_path, crash_lake_rename
+):
+    """The first in-line compaction crashes between its swap's two
+    renames. The restart replays that batch, which settles the cut swap
+    before it appends: no source event_id is missing. A replayed
+    batch's rows may land twice (at-least-once appends)."""
+    from weather_bigdata_project_spark import tables
+
+    src = str(tmp_path / "ev_src")
+    lake = str(tmp_path / "lake")
+    ckpt = str(tmp_path / "ckpt")
+    ev = tables.load(spark, SF_SMOKE, "events")
+    ev.repartition(8).write.mode("overwrite").parquet(src)
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+
+    def run():
+        jobs.start_compacting_lake_sink(
+            stream, lake, ckpt, target_file_mb=64, every=3
+        ).awaitTermination(180)
+
+    crash_lake_rename(second=True)
+    with pytest.raises(
+        StreamingQueryException, match="crash inside a lake swap"
+    ):
+        run()
+    run()
+    back = spark.read.parquet(lake)
+    assert back.select("event_id").subtract(ev.select("event_id")).count() == 0
+    assert ev.select("event_id").subtract(back.select("event_id")).count() == 0
+    assert back.count() >= ev.count()
+    assert sorted(os.listdir(tmp_path)) == ["ckpt", "ev_src", "lake"]
 
 
 def test_stream_stream_full_outer_interval_join(spark, tmp_path):

@@ -13,6 +13,10 @@ win over the reference).
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as Ty
 
@@ -249,11 +253,83 @@ def write_bucketed_table(
     w.saveAsTable(name)
 
 
+def _parquet_sizes(path: str) -> list[int]:
+    """Byte sizes of the `*.parquet` files directly under `path`."""
+    return [
+        e.stat().st_size
+        for e in os.scandir(path)
+        if e.is_file() and e.name.endswith(".parquet")
+    ]
+
+
+def _swap_dirs(path: str) -> tuple[str, str]:
+    """`rewrite_lake`'s new-lake and old-lake sidecars of `path`."""
+    return path.rstrip("/") + "__rewriting", path.rstrip("/") + "__replaced"
+
+
+def settle_lake(path: str) -> None:
+    """Finish or discard a `rewrite_lake` that a crash cut short; every
+    lake writer calls it before it reads or writes. `path__replaced`
+    means the crash fell between the swap's two renames: the new lake
+    (`path__rewriting`) is complete, so it moves in if `path` is
+    missing, and the old one is deleted. Any other `path__rewriting` is
+    an unfinished write and is deleted: the live dir is renamed away
+    only after the new dir and its marker are complete."""
+    new, old = _swap_dirs(path)
+    if os.path.isdir(old):
+        if not os.path.isdir(path):
+            os.rename(new, path)
+        shutil.rmtree(old)
+    shutil.rmtree(new, ignore_errors=True)
+
+
+def lake_batch_id(path: str) -> int:
+    """The batch id `rewrite_lake` last committed into `path`, or -1."""
+    marker = os.path.join(path, "_batch.json")
+    if not os.path.exists(marker):
+        return -1
+    with open(marker) as fh:
+        return json.load(fh)["batch_id"]
+
+
+def rewrite_lake(
+    spark: SparkSession, path: str, fn, batch_id: int | None = None
+) -> bool:
+    """Replace the parquet directory `path` with `fn(current lake)`
+    (`fn(None)` when there is no lake yet): the one copy-on-write rule
+    of compaction, upsert, delete and the incremental MV. Returns False,
+    writing nothing, when `batch_id` is given and not above the lake's
+    committed `lake_batch_id`, so a replayed micro-batch is folded once.
+
+    The new lake is written to `path__rewriting` (with a `_batch.json`
+    marker holding `batch_id`, so data and marker install together) and
+    swapped in by two renames: live -> `path__replaced`, new -> live. A
+    crash anywhere leaves a state `settle_lake` turns into either the
+    old or the new lake on the next write. A reader that lists `path`
+    between the two renames finds no directory; readers do not settle.
+    One writer per lake is assumed. Rename is atomic on POSIX and
+    single-key-range on object stores with a manifest layer."""
+    settle_lake(path)
+    if batch_id is not None and batch_id <= lake_batch_id(path):
+        return False
+    new, old = _swap_dirs(path)
+    current = spark.read.parquet(path) if os.path.isdir(path) else None
+    fn(current).write.mode("overwrite").parquet(new)
+    if batch_id is not None:
+        with open(os.path.join(new, "_batch.json"), "w") as fh:
+            json.dump({"batch_id": batch_id}, fh)
+    if current is not None:
+        os.rename(path, old)
+    os.rename(new, path)
+    shutil.rmtree(old, ignore_errors=True)
+    return True
+
+
 def compact_parquet_lake(
     spark: SparkSession, path: str, target_file_mb: int = 128
 ) -> int:
     """Small-files compaction: rewrite a fragmented parquet directory
-    into ceil(total_bytes / target) files and atomically swap it in.
+    into ceil(total_bytes / target) files through `rewrite_lake`.
     Returns the new file count.
 
     This is the direct cure for the reference's worst scale pathology —
@@ -263,30 +339,17 @@ def compact_parquet_lake(
     doing O(files) sequential GETs (ref:streamlit/app.py:72-99). A
     100 TB lake run instead compacts per partition directory (hour/day),
     on a schedule or from foreachBatch every N batches — same routine,
-    scoped to the partitions the stream touched.
-
-    The swap is two renames (fragmented -> trash, compacted -> live), so
-    readers never observe a half-written directory; rename is atomic on
-    POSIX and single-key-range on object stores with a manifest layer."""
+    scoped to the partitions the stream touched."""
     import math
-    import os
-    import shutil
 
-    total = sum(
-        e.stat().st_size
-        for e in os.scandir(path)
-        if e.is_file() and e.name.endswith(".parquet")
-    )
-    n = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
-    tmp = path.rstrip("/") + "__compacting"
-    old = path.rstrip("/") + "__fragmented"
-    spark.read.parquet(path).repartition(n).write.mode("overwrite").parquet(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return sum(
-        1 for e in os.scandir(path) if e.is_file() and e.name.endswith(".parquet")
-    )
+    def compact(current: DataFrame) -> DataFrame:
+        total = sum(_parquet_sizes(path))
+        return current.repartition(
+            max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
+        )
+
+    rewrite_lake(spark, path, compact)
+    return len(_parquet_sizes(path))
 
 
 def lake_layout_doctor(
@@ -303,14 +366,9 @@ def lake_layout_doctor(
     O(files) GETs, ref:minio-connector.json:14, streamlit/app.py:72-99).
     At object-store scale the scandir becomes a LIST call per partition
     directory; verdicts stay per-partition so compaction is scoped."""
-    import os
     import statistics
 
-    sizes = sorted(
-        e.stat().st_size
-        for e in os.scandir(path)
-        if e.is_file() and e.name.endswith(".parquet")
-    )
+    sizes = sorted(_parquet_sizes(path))
     if not sizes:
         return {
             "n_files": 0,
@@ -348,9 +406,6 @@ def expire_lake_partitions(path: str, partition_col: str, cutoff: str) -> int:
     O(files-in-lake) objects (ref:streamlit/app.py:53-57 lists the
     whole bucket on every dashboard load). On an object store, swap the
     rmtree for a prefix delete."""
-    import os
-    import shutil
-
     removed = 0
     prefix = partition_col + "="
     for entry in sorted(os.listdir(path)):
@@ -419,29 +474,14 @@ def write_parquet_zorder(
     )
 
 
-def _atomic_lake_swap(df: DataFrame, path: str) -> None:
-    """Write `df` beside the live directory, then swap with two renames
-    (live -> trash, new -> live) — the same reader-safe protocol as
-    compact_parquet_lake: no reader ever observes a half-written lake."""
-    import os
-    import shutil
-
-    tmp = path.rstrip("/") + "__rewriting"
-    old = path.rstrip("/") + "__replaced"
-    df.write.mode("overwrite").parquet(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-
-
 def upsert_parquet_lake(
     spark: SparkSession, path: str, updates: DataFrame, key_cols: list[str]
 ) -> None:
     """Batch MERGE (upsert) into a plain-parquet lake: lake rows whose
     key matches an update row are REPLACED, unmatched update rows are
-    INSERTED, everything else is carried over — copy-on-write, swapped
-    in atomically (`_atomic_lake_swap`), so readers see the old or the
-    new lake, never a mix. The batch twin of the streaming
+    INSERTED, everything else is carried over — copy-on-write through
+    `rewrite_lake`, so the next writer sees the old or the new lake,
+    never a mix, even after a crash. The batch twin of the streaming
     `start_foreach_batch_dedup_sink` (streaming/jobs.py) MERGE shape.
 
     Plan shape: the carried-over side is a LEFT ANTI join of the lake
@@ -456,11 +496,13 @@ def upsert_parquet_lake(
     tune(spark)
     from pyspark.sql import functions as F
 
-    current = spark.read.parquet(path)
     keys = updates.select(*key_cols).distinct()
-    kept = current.join(F.broadcast(keys), key_cols, "left_anti")
-    _atomic_lake_swap(
-        kept.unionByName(updates.select(*current.columns)), path
+    rewrite_lake(
+        spark,
+        path,
+        lambda current: current.join(
+            F.broadcast(keys), key_cols, "left_anti"
+        ).unionByName(updates.select(*current.columns)),
     )
 
 
@@ -469,25 +511,27 @@ def delete_from_parquet_lake(
 ) -> int:
     """DELETE WHERE for a plain-parquet lake (the GDPR-erasure /
     retract-bad-batch primitive): rewrite keeping the complement of the
-    predicate, atomic-swap, return the number of rows deleted. NULL
-    predicate results keep the row (SQL DELETE semantics: only TRUE
+    predicate through `rewrite_lake`, return the number of rows deleted.
+    NULL predicate results keep the row (SQL DELETE semantics: only TRUE
     deletes).
 
     At 100 TB the predicate should lead with the partition column so
     only matching partition directories rewrite (expire_lake_partitions
     is the O(1)-data special case when the predicate IS the partition
     bound); within a rewrite the filter is a pushdown-friendly narrow
-    scan, and row counts come from the same two jobs that write."""
+    scan. The deleted count is the lake's row count before the rewrite
+    minus after it."""
     tune(spark)
     from pyspark.sql import functions as F
 
-    current = spark.read.parquet(path)
-    before = current.count()
-    keep = current.filter(
-        ~F.coalesce(F.expr(predicate), F.lit(False))
-    )
-    _atomic_lake_swap(keep, path)
-    return before - spark.read.parquet(path).count()
+    before = []
+
+    def keep(current: DataFrame) -> DataFrame:
+        before.append(current.count())
+        return current.filter(~F.coalesce(F.expr(predicate), F.lit(False)))
+
+    rewrite_lake(spark, path, keep)
+    return before[0] - spark.read.parquet(path).count()
 
 
 # --- snapshot versioning (time travel) ------------------------------------
@@ -512,15 +556,11 @@ def delete_from_parquet_lake(
 
 
 def _versions_dir(path: str) -> str:
-    import os
-
     return os.path.join(path, "_versions")
 
 
 def snapshot_versions(path: str) -> list[int]:
     """Committed versions, ascending. O(manifest count) listing."""
-    import os
-
     vd = _versions_dir(path)
     if not os.path.isdir(vd):
         return []
@@ -532,9 +572,6 @@ def snapshot_versions(path: str) -> list[int]:
 
 
 def _read_manifest(path: str, version: int) -> dict:
-    import json
-    import os
-
     with open(os.path.join(_versions_dir(path), f"v{version}.json")) as fh:
         return json.load(fh)
 
@@ -556,8 +593,6 @@ def snapshot_commit(
     loser's bytes shipped under the winner's manifest
     (tests/test_sources.py::test_lake_snapshot_commit_race). Data is
     written exactly once; only the cheap manifest link retries."""
-    import json
-    import os
     import uuid
 
     if mode not in ("append", "overwrite"):
@@ -592,8 +627,6 @@ def read_lake_snapshot(
 ) -> DataFrame:
     """Read a snapshot (latest if `version` is None) — time travel.
     Loads exactly the manifest's directories; never lists data/."""
-    import os
-
     tune(spark)
     versions = snapshot_versions(path)
     if not versions:
@@ -618,8 +651,6 @@ def snapshot_diff(
     except(). Overwrite commits replace the dir set, so the diff after
     an overwrite is that whole new version — the consumer sees it as a
     full refresh, which is what an overwrite means."""
-    import os
-
     tune(spark)
     old = set(_read_manifest(path, from_version)["dirs"])
     new = [
@@ -637,9 +668,6 @@ def vacuum_lake_snapshots(path: str, keep_last: int = 1) -> int:
     directories no retained manifest references; returns directories
     removed. O(retained manifests + dirs) metadata work — data deletion
     is directory unlink, no scan."""
-    import os
-    import shutil
-
     versions = snapshot_versions(path)
     keep = versions[-keep_last:] if keep_last > 0 else []
     live: set[str] = set()

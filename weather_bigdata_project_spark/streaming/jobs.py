@@ -330,20 +330,9 @@ def sliding_event_counts_stream(
     )
 
 
-def interval_join_clicks_purchases(
-    events: DataFrame, watermark: str = "1 hour"
-) -> DataFrame:
-    """Stream-stream interval join: each purchase matched to the clicks
-    of the same user in the 10 minutes before it — the STREAMING twin of
-    the batch band join `join_range_clicks_before_purchase` (oracle-
-    checked there; the stream/batch equivalence test closes the loop).
-
-    Both sides carry watermarks and the join condition bounds event-time
-    distance, so Spark derives state-eviction: a buffered click can be
-    dropped once the purchase-side watermark passes click_ts + 10 min.
-    State is O(watermark-window of both streams), not O(stream). Tests
-    pass a watermark larger than the fixture's time span so no pair is
-    withheld and the result is exactly the batch inner join.
+def _interval_join(events: DataFrame, watermark: str, how: str) -> DataFrame:
+    """Purchases joined (`how`) to the same user's clicks in the 10
+    minutes before each, both sides watermarked by `watermark`.
 
     Watermarks require an instant-typed TIMESTAMP event-time column
     (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE on ntz), so both sides cast —
@@ -367,8 +356,25 @@ def interval_join_clicks_purchases(
             "c_user = user_id AND c_ts >= ts - INTERVAL 10 MINUTES "
             "AND c_ts < ts"
         ),
-        "inner",
+        how,
     )
+
+
+def interval_join_clicks_purchases(
+    events: DataFrame, watermark: str = "1 hour"
+) -> DataFrame:
+    """Stream-stream interval join: each purchase matched to the clicks
+    of the same user in the 10 minutes before it — the STREAMING twin of
+    the batch band join `join_range_clicks_before_purchase` (oracle-
+    checked there; the stream/batch equivalence test closes the loop).
+
+    Both sides carry watermarks and the join condition bounds event-time
+    distance, so Spark derives state-eviction: a buffered click can be
+    dropped once the purchase-side watermark passes click_ts + 10 min.
+    State is O(watermark-window of both streams), not O(stream). Tests
+    pass a watermark larger than the fixture's time span so no pair is
+    withheld and the result is exactly the batch inner join."""
+    return _interval_join(events, watermark, "inner")
 
 
 def interval_left_join_clicks_purchases(
@@ -385,26 +391,7 @@ def interval_left_join_clicks_purchases(
     O(watermark-window); the test drains a multi-batch time-ordered
     replay so watermarks actually move, and rows inside the final
     watermark tail are (correctly) withheld at termination."""
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").cast("timestamp").alias("c_ts"),
-            F.col("value").alias("c_value"),
-        )
-        .withWatermark("c_ts", watermark)
-    )
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", F.col("ts").cast("timestamp").alias("ts")
-    ).withWatermark("ts", watermark)
-    return purchases.join(
-        clicks,
-        F.expr(
-            "c_user = user_id AND c_ts >= ts - INTERVAL 10 MINUTES "
-            "AND c_ts < ts"
-        ),
-        "left_outer",
-    )
+    return _interval_join(events, watermark, "left_outer")
 
 
 def interval_full_join_clicks_purchases(
@@ -420,26 +407,7 @@ def interval_full_join_clicks_purchases(
     unmatched-click stream is exactly the input a re-marketing pipeline
     consumes, which is why the full-outer form (not two one-sided jobs
     scanning the stream twice) is the operator worth having."""
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").cast("timestamp").alias("c_ts"),
-            F.col("value").alias("c_value"),
-        )
-        .withWatermark("c_ts", watermark)
-    )
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", F.col("ts").cast("timestamp").alias("ts")
-    ).withWatermark("ts", watermark)
-    return purchases.join(
-        clicks,
-        F.expr(
-            "c_user = user_id AND c_ts >= ts - INTERVAL 10 MINUTES "
-            "AND c_ts < ts"
-        ),
-        "full_outer",
-    )
+    return _interval_join(events, watermark, "full_outer")
 
 
 def stream_static_segment_enrich(
@@ -457,23 +425,6 @@ def stream_static_segment_enrich(
 
 
 # --- incremental materialized view (exactly-once foreachBatch) ------------
-
-MV_SCHEMA = (
-    "city_name string, n_events bigint, sum_temp_cents bigint, "
-    "min_temp double, max_temp double"
-)
-
-
-def _mv_last_batch(path: str) -> int:
-    import json
-    import os
-
-    marker = os.path.join(path, "_batch.json")
-    if not os.path.exists(marker):
-        return -1
-    with open(marker) as fh:
-        return json.load(fh)["batch_id"]
-
 
 def read_incremental_agg_mv(spark: SparkSession, path: str) -> DataFrame:
     """The MV's query surface: per-city count/avg/min/max, with avg
@@ -498,12 +449,13 @@ def start_incremental_agg_sink(enriched: DataFrame, path: str, checkpoint: str):
     merge-by-re-aggregation is exact in any arrival order) into a
     parquet MV, atomically.
 
-    Exactly-once without a transaction log: the batch id is committed
-    INSIDE the swapped directory (`_batch.json` written to the staging
-    dir before the rename), so data+marker install together — a crash
-    anywhere leaves either the old MV or the new MV, never a half
-    state; on foreachBatch replay (at-least-once delivery) the marker
-    says the batch is already folded and the merge is skipped. This is
+    Exactly-once without a transaction log: each fold is one
+    `readers.rewrite_lake` call with the batch id, which commits the id
+    INSIDE the swapped directory (`_batch.json`), so data and marker
+    install together. A crash between the swap's two renames leaves the
+    new MV beside the trash of the old one; the replayed batch's
+    `rewrite_lake` settles that into the new MV, whose marker says the
+    batch is already folded, and skips the merge. This is
     the streaming twin of the batch `weather_city_stats` aggregate and
     the MV-maintenance pattern (stateless partial agg -> keyed merge)
     that scales: state lives in the MV (city-cardinality rows), not in
@@ -511,14 +463,9 @@ def start_incremental_agg_sink(enriched: DataFrame, path: str, checkpoint: str):
     O(cities) per trigger — at 100 TB the stream never re-scans the
     lake.
     """
-    import json
-    import os
-    import shutil
+    from ..sources.readers import rewrite_lake
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_id <= _mv_last_batch(path):
-            return  # replayed batch: already folded, skip (idempotence)
         partial = batch_df.groupBy("city_name").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.expr("cast(round(temperature * 100e0, 0) as bigint)")).alias(
@@ -527,10 +474,10 @@ def start_incremental_agg_sink(enriched: DataFrame, path: str, checkpoint: str):
             F.min("temperature").alias("min_temp"),
             F.max("temperature").alias("max_temp"),
         )
-        if os.path.isdir(path):
-            cur = spark.read.schema(MV_SCHEMA).parquet(path)
-            merged = (
-                cur.unionByName(partial)
+
+        def merge(cur: DataFrame | None) -> DataFrame:
+            return (
+                (partial if cur is None else cur.unionByName(partial))
                 .groupBy("city_name")
                 .agg(
                     F.sum("n_events").alias("n_events"),
@@ -538,20 +485,10 @@ def start_incremental_agg_sink(enriched: DataFrame, path: str, checkpoint: str):
                     F.min("min_temp").alias("min_temp"),
                     F.max("max_temp").alias("max_temp"),
                 )
+                .coalesce(1)
             )
-        else:
-            merged = partial
-        tmp = path.rstrip("/") + "__rewriting"
-        old = path.rstrip("/") + "__replaced"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, "_batch.json"), "w") as fh:
-            json.dump({"batch_id": batch_id}, fh)
-        if os.path.isdir(path):
-            os.rename(path, old)
-            os.rename(tmp, path)
-            shutil.rmtree(old)
-        else:
-            os.rename(tmp, path)
+
+        rewrite_lake(batch_df.sparkSession, path, merge, batch_id)
 
     return (
         enriched.writeStream.foreachBatch(fold)
@@ -1295,15 +1232,22 @@ def start_compacting_lake_sink(
     measured cure for the reference's one-file-per-message pathology
     (ref:minio-connector.json:14) applied while the stream runs, not
     as a separate nightly job. foreachBatch calls are serial, so the
-    atomic-swap rewrite never races the writer; concurrent READERS see
-    either the old or the new directory (two renames). Production
-    hardening: pair the append with the batch-id commit the
-    incremental-MV sink uses so replayed batches are idempotent; at
+    compaction (`readers.rewrite_lake`) never races the writer. Each
+    append first settles the lake (`readers.settle_lake`), so a batch
+    replayed after a crash inside a compaction appends to the compacted
+    lake, not to a fresh directory the next settle would replace. The
+    appends are at-least-once across a crash: a replayed batch whose
+    rows already landed lands again (a batch-id fence is open work). At
     100 TB scope both append and compaction to the partition
     directories the batch touched."""
-    from ..sources.readers import compact_parquet_lake, lake_layout_doctor
+    from ..sources.readers import (
+        compact_parquet_lake,
+        lake_layout_doctor,
+        settle_lake,
+    )
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
+        settle_lake(path)
         batch.write.mode("append").parquet(path)
         if every > 0 and batch_id > 0 and batch_id % every == 0:
             verdict = lake_layout_doctor(

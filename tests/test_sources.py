@@ -454,6 +454,38 @@ def test_rewrite_lake_discards_a_write_cut_before_the_swap(
     assert sorted(os.listdir(tmp_path)) == ["lake"]
 
 
+def test_append_lake_lands_each_batch_once(spark, tmp_path, monkeypatch):
+    """A replayed batch id appends nothing; a crash while an append's
+    files move into the lake is finished by the next write, which then
+    skips the replay; a compaction keeps the committed batch id."""
+    lake = str(tmp_path / "lake")
+
+    def batch(*ids):
+        return spark.createDataFrame([(i,) for i in ids], "id long").repartition(2)
+
+    assert readers.append_lake(lake, batch(1, 2), 0)
+    assert not readers.append_lake(lake, batch(1, 2), 0)
+    real, moves = os.replace, [0]
+
+    def replace(src, dst):
+        moves[0] += 1
+        if moves[0] == 2:
+            raise OSError("crash while landing an append")
+        real(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+    with pytest.raises(OSError, match="crash while landing"):
+        readers.append_lake(lake, batch(3, 4), 1)
+    monkeypatch.setattr(os, "replace", real)
+    assert readers.lake_batch_id(lake) == 0
+    assert not readers.append_lake(lake, batch(3, 4), 1)
+    readers.compact_parquet_lake(spark, lake)
+    assert readers.lake_batch_id(lake) == 1
+    assert readers.append_lake(lake, batch(5), 2)
+    assert sorted(r.id for r in spark.read.parquet(lake).collect()) == [1, 2, 3, 4, 5]
+    assert sorted(os.listdir(tmp_path)) == ["lake"]
+
+
 def test_lake_snapshot_time_travel(spark):
     """Snapshot commits: append keeps history, overwrite starts a new
     lineage, every old version stays readable (time travel), and the

@@ -1208,8 +1208,7 @@ def test_compacting_lake_sink_heals_small_files(spark, tmp_path):
     assert n_files <= 8
     assert lake_layout_doctor(lake, target_file_mb=0)["verdict"] == "ok"
     # a clean restart with the same checkpoint and no new input replays
-    # nothing: every batch committed. The appends are at-least-once
-    # across a crash (see the crash case below).
+    # nothing: every batch committed. A crash case is below.
     q2 = jobs.start_compacting_lake_sink(
         stream, lake, ckpt, target_file_mb=64, every=3
     )
@@ -1217,13 +1216,14 @@ def test_compacting_lake_sink_heals_small_files(spark, tmp_path):
     assert spark.read.parquet(lake).count() == ev.count()
 
 
-def test_compacting_lake_sink_loses_no_row_to_a_crash_in_compaction(
+def test_compacting_lake_sink_lands_a_replayed_batch_once(
     spark, tmp_path, crash_lake_rename
 ):
-    """The first in-line compaction crashes between its swap's two
-    renames. The restart replays that batch, which settles the cut swap
-    before it appends: no source event_id is missing. A replayed
-    batch's rows may land twice (at-least-once appends)."""
+    """Batch 3's in-line compaction crashes between its swap's two
+    renames. The restart replays batch 3: its append settles the cut
+    swap, finds batch 3 committed in the compacted lake and lands
+    nothing. Every source row is in the lake exactly once (an unfenced
+    append landed batch 3's 125 rows twice: 1125 rows)."""
     from weather_bigdata_project_spark import tables
 
     src = str(tmp_path / "ev_src")
@@ -1249,9 +1249,10 @@ def test_compacting_lake_sink_loses_no_row_to_a_crash_in_compaction(
         run()
     run()
     back = spark.read.parquet(lake)
-    assert back.select("event_id").subtract(ev.select("event_id")).count() == 0
+    assert ev.count() == 1000
+    assert back.count() == 1000
+    assert back.select("event_id").distinct().count() == 1000
     assert ev.select("event_id").subtract(back.select("event_id")).count() == 0
-    assert back.count() >= ev.count()
     assert sorted(os.listdir(tmp_path)) == ["ckpt", "ev_src", "lake"]
 
 

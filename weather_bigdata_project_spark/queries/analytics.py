@@ -11,21 +11,22 @@ frame of `tables.load` (which changes when events.parquet is rewritten),
 so a panel costs one small aggregate, not the wire synthesis, the
 cast/enrich analyses and a parquet scan.
 
-One plan per panel per snapshot: each query that reads the pin is a body
-`(pin) -> DataFrame` registered by `panel`, and its registry callable
-returns the frame `weather_domain.prepared` built from that body over
-the current pin. A repeated panel pays no DataFrame construction,
-analysis or planning; every action on the frame still runs its own Spark
-job over the pin, so each answer is recomputed. Inside one snapshot the
-histogram's bounds broadcast is materialized once and reused, which is
-exact because a snapshot's input never changes.
+One answer per panel per snapshot: each query that reads the pin is a
+body `(pin) -> DataFrame` registered by `panel`, and its registry
+callable returns the answer `weather_domain.prepared` built from that
+body over the current pin and persisted. The first action on it runs the
+panel's aggregate over the pin and fills the answer's cache entry; every
+later request in the same snapshot scans that cached answer, with no
+DataFrame construction, analysis, planning or aggregation. That is exact
+because a snapshot's input never changes.
 
 Invalidation: a rewritten events.parquet rebuilds the plan and unpersists
-the old pin before the new one is pinned; a pin dropped from the cache
-(`spark.catalog.clearCache()`) is re-pinned on the next panel. Either
-way the prepared frames are dropped with the old pin. The pin uses the
-default MEMORY_AND_DISK level, so a working set larger than executor
-memory spills to local disk instead of failing. The enriched
+the old answers, then the old pin, before the new one is pinned; a pin
+dropped from the cache (`spark.catalog.clearCache()`) is re-pinned on the
+next panel, and its answers are unpersisted and rebuilt. An answer lives
+exactly as long as its pin. Pin and answers use the default
+MEMORY_AND_DISK level, so a working set larger than executor memory
+spills to local disk instead of failing. The enriched
 plan has no exchange, so the pin follows the events scan's splits: a
 one-split scan (every shipped fixture and the benchmark's file) is
 pinned declared `SinglePartition` (`coalesce(1)`, which moves no data),
@@ -33,6 +34,9 @@ so the panels' aggregates, distincts and sorts over it plan no shuffle:
 one job per panel. A multi-split scan is pinned as the bare projection.
 
 Scale notes (100 TB design stance):
+- the export-style panels (`weather_export_json`, `weather_renamed`,
+  `weather_time_series`) cache about one row per event, as large as the
+  pin; at MEMORY_AND_DISK such an answer spills instead of failing;
 - every aggregation here is a hash aggregate with map-side partial
   aggregation (8 city keys / 4 alert keys -> tiny shuffle);
 - histogram/box-stats get their global bounds via a 1-row aggregate
@@ -56,8 +60,8 @@ from ..registry import query
 def panel(select: str):
     """Register ``body(pin) -> DataFrame`` as the query named after it,
     with oracle ``select`` over the DuckDB `enriched` CTE chain. The
-    registered ``(spark, sf_dir)`` callable serves the frame
-    `weather_domain.prepared` keeps for the current pin."""
+    registered ``(spark, sf_dir)`` callable serves the answer
+    `weather_domain.prepared` persists for the current pin."""
 
     def deco(body):
         name = body.__name__

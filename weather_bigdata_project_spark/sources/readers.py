@@ -267,29 +267,57 @@ def _swap_dirs(path: str) -> tuple[str, str]:
     return path.rstrip("/") + "__rewriting", path.rstrip("/") + "__replaced"
 
 
+def _append_dir(path: str) -> str:
+    """`append_lake`'s staging sidecar of `path`."""
+    return path.rstrip("/") + "__appending"
+
+
 def settle_lake(path: str) -> None:
-    """Finish or discard a `rewrite_lake` that a crash cut short; every
-    lake writer calls it before it reads or writes. `path__replaced`
-    means the crash fell between the swap's two renames: the new lake
-    (`path__rewriting`) is complete, so it moves in if `path` is
-    missing, and the old one is deleted. Any other `path__rewriting` is
-    an unfinished write and is deleted: the live dir is renamed away
-    only after the new dir and its marker are complete."""
+    """Finish or discard a `rewrite_lake` or `append_lake` that a crash
+    cut short; every lake writer calls it before it reads or writes.
+    `path__replaced` means the crash fell between the swap's two
+    renames: the new lake (`path__rewriting`) is complete, so it moves
+    in if `path` is missing, and the old one is deleted. Any other
+    `path__rewriting` is an unfinished write and is deleted: the live
+    dir is renamed away only after the new dir and its marker are
+    complete. A `path__appending` holding its `_batch.json` is a
+    complete append: its files move into `path`, then its marker
+    replaces the lake's (`append_lake` lands every append this way, so
+    a crash during the moves is finished here). Any other
+    `path__appending` is an unfinished append and is deleted."""
     new, old = _swap_dirs(path)
     if os.path.isdir(old):
         if not os.path.isdir(path):
             os.rename(new, path)
         shutil.rmtree(old)
     shutil.rmtree(new, ignore_errors=True)
+    stage = _append_dir(path)
+    marker = os.path.join(stage, "_batch.json")
+    if os.path.exists(marker):
+        os.makedirs(path, exist_ok=True)
+        for name in os.listdir(stage):
+            if name != "_batch.json":
+                os.replace(os.path.join(stage, name), os.path.join(path, name))
+        os.replace(marker, os.path.join(path, "_batch.json"))
+    shutil.rmtree(stage, ignore_errors=True)
 
 
 def lake_batch_id(path: str) -> int:
-    """The batch id `rewrite_lake` last committed into `path`, or -1."""
+    """The batch id `rewrite_lake` or `append_lake` last committed into
+    `path`, or -1."""
     marker = os.path.join(path, "_batch.json")
     if not os.path.exists(marker):
         return -1
     with open(marker) as fh:
         return json.load(fh)["batch_id"]
+
+
+def _write_batch_marker(path: str, batch_id: int) -> None:
+    """Write `path/_batch.json`, replacing any old marker atomically."""
+    tmp = os.path.join(path, "_batch.json.tmp")
+    with open(tmp, "w") as fh:
+        json.dump({"batch_id": batch_id}, fh)
+    os.replace(tmp, os.path.join(path, "_batch.json"))
 
 
 def rewrite_lake(
@@ -300,28 +328,52 @@ def rewrite_lake(
     of compaction, upsert, delete and the incremental MV. Returns False,
     writing nothing, when `batch_id` is given and not above the lake's
     committed `lake_batch_id`, so a replayed micro-batch is folded once.
+    A rewrite without `batch_id` keeps the committed one, so compacting
+    an appended lake keeps its fence.
 
     The new lake is written to `path__rewriting` (with a `_batch.json`
-    marker holding `batch_id`, so data and marker install together) and
-    swapped in by two renames: live -> `path__replaced`, new -> live. A
-    crash anywhere leaves a state `settle_lake` turns into either the
-    old or the new lake on the next write. A reader that lists `path`
-    between the two renames finds no directory; readers do not settle.
-    One writer per lake is assumed. Rename is atomic on POSIX and
-    single-key-range on object stores with a manifest layer."""
+    marker holding the batch id, so data and marker install together)
+    and swapped in by two renames: live -> `path__replaced`, new ->
+    live. A crash anywhere leaves a state `settle_lake` turns into
+    either the old or the new lake on the next write. A reader that
+    lists `path` between the two renames finds no directory; readers do
+    not settle. One writer per lake is assumed. Rename is atomic on
+    POSIX and single-key-range on object stores with a manifest layer."""
     settle_lake(path)
-    if batch_id is not None and batch_id <= lake_batch_id(path):
+    committed = lake_batch_id(path)
+    if batch_id is not None and batch_id <= committed:
         return False
     new, old = _swap_dirs(path)
     current = spark.read.parquet(path) if os.path.isdir(path) else None
     fn(current).write.mode("overwrite").parquet(new)
-    if batch_id is not None:
-        with open(os.path.join(new, "_batch.json"), "w") as fh:
-            json.dump({"batch_id": batch_id}, fh)
+    marker = committed if batch_id is None else batch_id
+    if marker >= 0:
+        _write_batch_marker(new, marker)
     if current is not None:
         os.rename(path, old)
     os.rename(new, path)
     shutil.rmtree(old, ignore_errors=True)
+    return True
+
+
+def append_lake(path: str, df: DataFrame, batch_id: int) -> bool:
+    """Append `df` to the parquet lake `path` as micro-batch `batch_id`,
+    exactly once: returns False, writing nothing, when `batch_id` is not
+    above the lake's committed `lake_batch_id` (a batch replayed after a
+    crash). The rows are written to `path__appending`, then its
+    `_batch.json` marker, and `settle_lake` lands the complete stage:
+    each file moves into `path`, then the marker replaces the lake's. A
+    crash during the moves leaves the complete stage, which the next
+    write's `settle_lake` finishes. Costs O(batch), not O(lake). The
+    batch ids are those of one checkpoint: a stream restarted on a new
+    checkpoint needs a new lake."""
+    settle_lake(path)
+    if batch_id <= lake_batch_id(path):
+        return False
+    stage = _append_dir(path)
+    df.write.mode("overwrite").parquet(stage)
+    _write_batch_marker(stage, batch_id)
+    settle_lake(path)
     return True
 
 

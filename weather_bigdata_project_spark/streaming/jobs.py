@@ -1232,23 +1232,24 @@ def start_compacting_lake_sink(
     measured cure for the reference's one-file-per-message pathology
     (ref:minio-connector.json:14) applied while the stream runs, not
     as a separate nightly job. foreachBatch calls are serial, so the
-    compaction (`readers.rewrite_lake`) never races the writer. Each
-    append first settles the lake (`readers.settle_lake`), so a batch
-    replayed after a crash inside a compaction appends to the compacted
-    lake, not to a fresh directory the next settle would replace. The
-    appends are at-least-once across a crash: a replayed batch whose
-    rows already landed lands again (a batch-id fence is open work). At
+    compaction (`readers.rewrite_lake`) never races the writer.
+
+    Exactly-once across a crash: each append is `readers.append_lake`
+    with the batch id, which commits the id into the lake
+    (`_batch.json`) with the batch's files, and the compaction's rewrite
+    keeps that marker. A batch replayed after a crash (in its append,
+    its compaction, or before its checkpoint commit) finds its id
+    committed and appends nothing; its compaction check still runs. At
     100 TB scope both append and compaction to the partition
     directories the batch touched."""
     from ..sources.readers import (
+        append_lake,
         compact_parquet_lake,
         lake_layout_doctor,
-        settle_lake,
     )
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        settle_lake(path)
-        batch.write.mode("append").parquet(path)
+        append_lake(path, batch, batch_id)
         if every > 0 and batch_id > 0 and batch_id % every == 0:
             verdict = lake_layout_doctor(
                 path, target_file_mb, small_frac_threshold

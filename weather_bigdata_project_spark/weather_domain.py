@@ -319,20 +319,29 @@ def enrich(df: DataFrame) -> DataFrame:
 class _Snapshot:
     """One memo entry: the enriched plan over one events frame of
     tables.load, its PINNED_COLUMNS projection once pinned, and the
-    prepared query frames built over that pin (:func:`prepared`)."""
+    answers persisted over that pin (:func:`prepared`)."""
 
     events: DataFrame
     frame: DataFrame
     pin: DataFrame | None = None
     panels: dict[str, DataFrame] = field(default_factory=dict)
 
+    def drop_panels(self) -> None:
+        """Unpersist every answer: an answer lives exactly as long as
+        its pin. Answers go before the pin: unpersisting the pin first
+        makes the cache re-plan every answer over the uncached pin."""
+        for frame in self.panels.values():
+            frame.unpersist()
+        self.panels.clear()
+
 
 #: (applicationId, sf_dir) -> the enriched plan of the current
 #: events.parquet snapshot. Building it costs ~5 plan analyses, which
 #: every dashboard panel would otherwise pay. An entry serves while
 #: tables.load returns the events frame it was built over (tables owns
-#: the rule for a rewritten file); a rebuild drops the old pin, and
-#: entries of dead sessions are dropped.
+#: the rule for a rewritten file); a rebuild drops the old answers and
+#: pin. Entries of dead sessions are dropped: their pins and answers
+#: went with their SparkContext (unpersist on a stopped context raises).
 _ENRICHED: dict[tuple[str, str], _Snapshot] = {}
 _LOCK = threading.RLock()
 #: cumulative memo counters, updated under _LOCK (see memo_stats)
@@ -344,8 +353,8 @@ _STATS = dict.fromkeys(
 def memo_stats() -> dict[str, int]:
     """Cumulative counts of this process's memo: enriched plans built
     (``snapshots_built``), pins built (``pins_built``, a re-pin after
-    ``clearCache`` counts), query frames built over a pin
-    (``panel_builds``) and served again (``panel_hits``)."""
+    ``clearCache`` counts), answers built over a pin (``panel_builds``)
+    and served again (``panel_hits``)."""
     with _LOCK:
         return dict(_STATS)
 
@@ -356,8 +365,10 @@ def _snapshot(spark: SparkSession, sf_dir: str) -> _Snapshot:
     with _LOCK:
         snap = _ENRICHED.get((app_id, sf_dir))
         if snap is None or snap.events is not events:
-            if snap is not None and snap.pin is not None:
-                snap.pin.unpersist()
+            if snap is not None:
+                snap.drop_panels()
+                if snap.pin is not None:
+                    snap.pin.unpersist()
             tables.live_only(_ENRICHED, app_id)
             frame = enrich(cast_wire(wire_frame(spark, sf_dir)))
             snap = _ENRICHED[(app_id, sf_dir)] = _Snapshot(events, frame)
@@ -373,16 +384,16 @@ def enriched_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pinned(spark: SparkSession, sf_dir: str) -> _Snapshot:
     """The current snapshot with its pin in the cache: pinned again when
-    the cache entry was dropped, which also drops the prepared frames,
-    since their plans read the old in-memory relation."""
+    the cache entry was dropped, which also drops the answers, since
+    their plans read the old in-memory relation."""
     with _LOCK:
         snap = _snapshot(spark, sf_dir)
         if snap.pin is None or not snap.pin.storageLevel.useMemory:
+            snap.drop_panels()
             pin = snap.frame.select(*PINNED_COLUMNS)
             if snap.events.rdd.getNumPartitions() == 1:
                 pin = pin.coalesce(1)
             snap.pin = pin.persist()
-            snap.panels.clear()
             _STATS["pins_built"] += 1
         return snap
 
@@ -410,18 +421,22 @@ def prepared(
     name: str,
     body: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
-    """The frame ``body(pinned_frame(spark, sf_dir))``, built once per
-    pin and served again under ``name`` while the pin is unchanged: a
-    repeated query skips construction, analysis, optimization and
-    physical planning, and every action on the frame still runs its own
-    Spark job over the pin. The re-pin check runs first: a frame built
-    over a pin dropped by ``clearCache`` would rebuild the old pin's
-    buffers as a second, untracked cached RDD."""
+    """The answer ``body(pinned_frame(spark, sf_dir))``, built and
+    persisted once per pin and served again under ``name`` while the
+    pin and the answer's cache entry live. The first action fills the
+    entry (the pin's ``MEMORY_AND_DISK`` level, so a large answer spills
+    instead of failing); every later action in the snapshot scans the
+    cached answer instead of re-aggregating the pin, and a repeated
+    query skips construction, analysis and planning. The answers are
+    unpersisted before their pin is dropped (a new snapshot, a re-pin).
+    The re-pin check runs first: a frame built over a pin dropped by
+    ``clearCache`` would rebuild the old pin's buffers as a second,
+    untracked cached RDD."""
     with _LOCK:
         snap = _pinned(spark, sf_dir)
         frame = snap.panels.get(name)
-        if frame is None:
-            frame = snap.panels[name] = body(snap.pin)
+        if frame is None or not frame.storageLevel.useMemory:
+            frame = snap.panels[name] = body(snap.pin).persist()
             _STATS["panel_builds"] += 1
         else:
             _STATS["panel_hits"] += 1

@@ -272,6 +272,37 @@ def test_refresh_after_a_clear_matches_the_oracles(spark, lake, clear):
     assert r["ok"] == len(BENCH_PANELS), r["failures"]
 
 
+def test_a_bare_unpersist_refills_the_pin_and_the_answer(spark, lake):
+    """After a bare unpersist of every persistent RDD (no clearCache, so
+    the cache's entries stay and `storageLevel` still reads in memory),
+    three requests of a panel each match the oracle, and the pin and the
+    answer are cached again instead of recomputed from parquet on every
+    request."""
+    name = "weather_city_stats"
+    QUERIES[name](spark, lake).toPandas()
+    _unpersist_all(spark)
+    first_id = _next_rdd_id(spark)
+    for _ in range(3):
+        _assert_matches(name, QUERIES[name](spark, lake), lake)
+    assert _pinned_since(spark, first_id) == 2
+
+
+def test_a_bare_unpersist_rebuilds_the_shingle_pin(spark):
+    """After a bare unpersist of every persistent RDD, with no
+    `clear_shingle_memo()`, the shared shingle build is a new persisted
+    frame and the dedup query over it matches its oracle."""
+    from weather_bigdata_project_spark.operators import textops
+
+    old = textops.doc_gram_arrays_shared(spark, SF_SMOKE)
+    old.count()
+    _unpersist_all(spark)
+    new = textops.doc_gram_arrays_shared(spark, SF_SMOKE)
+    assert new is not old
+    assert new.storageLevel.useMemory
+    r = sweep(spark, SF_SMOKE, ["dedup_ngram_jaccard"])
+    assert r["ok"] == 1, r["failures"]
+
+
 def test_two_cold_threads_leave_one_answer(spark, lake):
     """Two clients asking a cold memo for one panel at once get one
     answer, built once; the cache holds the pin and that answer."""
@@ -469,13 +500,13 @@ def test_multi_split_prepared_frame_reruns_its_shuffle(spark, tmp_path):
 
 def test_memos_keep_only_the_live_session(spark):
     """Entries of a session that is gone are dropped on the next build,
-    so neither memo grows by one entry per session forever."""
-    tables._CACHE[("dead-app", SF_SMOKE, "events")] = (None, None)
-    wd._ENRICHED[("dead-app", SF_SMOKE)] = None
+    so the memo does not grow by one entry per session forever."""
+    dead = tables._Entry(None, None, False)
+    tables._MEMO[("dead-app", "table", SF_SMOKE, "events")] = dead
+    tables._MEMO[("dead-app", "enriched", SF_SMOKE)] = dead
     tables.load(spark, f"{SF_SMOKE}/", "events")  # a new key: a build
     wd.enriched_frame(spark, f"{SF_SMOKE}/")
-    assert all(k[0] != "dead-app" for k in tables._CACHE)
-    assert all(k[0] != "dead-app" for k in wd._ENRICHED)
+    assert all(k[0] != "dead-app" for k in tables._MEMO)
 
 
 def test_rewritten_documents_rebuild_the_shingle_memo(spark, tmp_path):

@@ -90,7 +90,7 @@ def test_first_query_is_not_charged_for_cold_table_loads(spark, monkeypatch):
     names = ["sql_udf_dew_point", "weather_collated_city_stats"]
     fs_bytes = []
     for order in (names, names[::-1]):
-        monkeypatch.setattr(tables, "_CACHE", {})  # a fresh process's memo
+        monkeypatch.setattr(tables, "_MEMO", {})  # a fresh process's memo
         entries = scan_audit.measure(spark, SF_CORRECT, order)
         fs_bytes.append({e["query"]: e["fs_bytes"] for e in entries})
     assert fs_bytes[0] == fs_bytes[1]

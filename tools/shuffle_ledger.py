@@ -254,18 +254,16 @@ def _stage_map(sc) -> dict:
 def stage_diff(spark, fn, sf_dir: str) -> tuple[dict, float]:
     """The one query meter of the evidence tools: run registry query
     `fn` over `sf_dir` through the noop sink on a cleared session (no
-    cached table, persisted RDD or shingle memo left by an earlier
-    query) and return the status-store metrics of the stages the run
-    added, keyed (stageId, attemptId), with its wall seconds. The
+    cached table or persisted RDD left by an earlier query; the engine's
+    memo rebuilds a pin whose blocks are gone) and return the
+    status-store metrics of the stages the run added, keyed (stageId,
+    attemptId), with its wall seconds. The
     listener bus is drained before the diff, so every stage is counted,
     materialize()/localCheckpoint side jobs too."""
-    from weather_bigdata_project_spark.operators import textops
-
     sc = spark.sparkContext
     spark.catalog.clearCache()
     for rdd in list(sc._jsc.getPersistentRDDs().values()):
         rdd.unpersist()
-    textops.clear_shingle_memo()
     sc._jvm.System.gc()
     before = set(_stage_map(sc))
     t0 = time.time()

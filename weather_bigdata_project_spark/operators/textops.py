@@ -16,8 +16,6 @@ oracle. 100 TB notes:
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -279,40 +277,19 @@ def materialize(df: DataFrame, cut_lineage: bool = False) -> DataFrame:
     return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
-#: (applicationId, sf_dir) -> (documents frame of tables.load, the
-#: materialized default per-doc gram-ARRAY frame built over it). The
-#: Jaccard, MinHash, and corpus-pipeline queries all start from the
-#: same shingle build; within one session the pinned copy is shared so
-#: the md5 shingling of the corpus runs once per scale factor, not once
-#: per query. Keyed by applicationId so a new session never sees
-#: another session's (unreachable) checkpoint; entries of dead sessions
-#: are dropped. An entry serves while tables.load returns the documents
-#: frame it was built from (tables owns the rule for a rewritten file);
-#: a rebuild unpersists the old frame. Round 10: the pin moved from the
-#: exploded row frame to the array frame (same bytes, document-
-#: cardinality rows) — signature and verification consumers read
-#: arrays with zero re-assembly shuffles, and the row form is a narrow
-#: explode over the same pin.
-_GRAM_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-_GRAM_LOCK = threading.Lock()
-
-
 def doc_gram_arrays_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized, materialized :func:`doc_gram_arrays` (default
     corpus only — frame-override callers keep their own builds so their
-    source filters stay pushed into the scan)."""
-    app_id = spark.sparkContext.applicationId
-    src = docs(spark, sf_dir)
-    with _GRAM_LOCK:
-        hit = _GRAM_MEMO.get((app_id, sf_dir))
-        if hit is not None and hit[0] is src:
-            return hit[1]
-        if hit is not None:
-            hit[1].unpersist()
-        tables.live_only(_GRAM_MEMO, app_id)
-        got = materialize(doc_gram_arrays(spark, sf_dir))
-        _GRAM_MEMO[(app_id, sf_dir)] = (src, got)
-        return got
+    source filters stay pushed into the scan). The Jaccard, MinHash and
+    corpus-pipeline queries share it, so the md5 shingling runs once per
+    documents frame of tables.load, rebuilt when its blocks were dropped
+    (:func:`tables.memo`). The pin is the array form (document-cardinality
+    rows): signature and verification consumers read arrays with no
+    re-assembly shuffle, and the row form is a narrow explode over it."""
+    return tables.memo(
+        spark, ("grams", sf_dir), docs(spark, sf_dir),
+        lambda: materialize(doc_gram_arrays(spark, sf_dir)),
+    )
 
 
 def doc_shingle_ids_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -326,12 +303,10 @@ def doc_shingle_ids_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def clear_shingle_memo() -> None:
-    """Drop the memoized shingle frames. MUST be called by any harness
-    that force-unpersists the session's RDDs (bench.py does, for
-    per-query isolation): a stale memo entry would otherwise serve an
-    unpersisted frame, which re-derives the md5 shingling at every
-    reference instead of once."""
-    _GRAM_MEMO.clear()
+    """Does nothing; kept because bench.py and perfbench's batch mix
+    call it after they clear the session's cache. The shingle pin lives
+    in :func:`tables.memo`, which rebuilds a frame whose cached blocks
+    were dropped."""
 
 
 # --- DuckDB oracle CTE twins ---------------------------------------------

@@ -6,10 +6,10 @@ One working set serves every panel (the Shark pattern for repeated
 interactive queries): the 11 columns the panels read
 (`weather_domain.PINNED_COLUMNS`), projected from the enriched plan and
 pinned in Spark's in-memory columnar cache (`weather_domain.pinned_frame`).
-The enriched plan is memoized per (applicationId, sf_dir) and events
-frame of `tables.load` (which changes when events.parquet is rewritten),
-so a panel costs one small aggregate, not the wire synthesis, the
-cast/enrich analyses and a parquet scan.
+The enriched plan is memoized per events frame of `tables.load` (which
+changes when events.parquet is rewritten), so a panel costs one small
+aggregate, not the wire synthesis, the cast/enrich analyses and a
+parquet scan.
 
 One answer per panel per snapshot: each query that reads the pin is a
 body `(pin) -> DataFrame` registered by `panel`, and its registry
@@ -20,10 +20,14 @@ later request in the same snapshot scans that cached answer, with no
 DataFrame construction, analysis, planning or aggregation. That is exact
 because a snapshot's input never changes.
 
-Invalidation: a rewritten events.parquet rebuilds the plan and unpersists
-the old answers, then the old pin, before the new one is pinned; a pin
-dropped from the cache (`spark.catalog.clearCache()`) is re-pinned on the
-next panel, and its answers are unpersisted and rebuilt. An answer lives
+Invalidation is the one rule of `tables.memo`, which holds the plan, the
+pin and the answers: an entry serves while its source is unchanged (the
+plan's events frame, the pin's plan, an answer's pin) and, once
+persisted, while its cached blocks exist (read from the cached relation's
+RDD, not from `storageLevel`). Otherwise the entries built over it are
+unpersisted, answers before their pin, and it is rebuilt: a rewritten
+events.parquet, `spark.catalog.clearCache()` or a bare RDD unpersist all
+lead to a new pin and new answers on the next panel. An answer lives
 exactly as long as its pin. Pin and answers use the default
 MEMORY_AND_DISK level, so a working set larger than executor memory
 spills to local disk instead of failing. The enriched

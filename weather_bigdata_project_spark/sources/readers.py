@@ -404,13 +404,15 @@ def compact_parquet_lake(
     return len(_parquet_sizes(path))
 
 
-def lake_layout_doctor(
-    path: str, target_file_mb: int = 128, small_frac_threshold: float = 0.5
-) -> dict:
+#: small-byte fraction at which lake_layout_doctor says `compact`
+SMALL_FRAC_THRESHOLD = 0.5
+
+
+def lake_layout_doctor(path: str, target_file_mb: int = 128) -> dict:
     """Measure the small-files pathology before paying to cure it:
     file count, total/median/p90 file size, fraction of bytes in files
     under half the target size, and a verdict — `compact` when the
-    small-byte fraction crosses the threshold, else `ok`. Pure
+    small-byte fraction reaches SMALL_FRAC_THRESHOLD, else `ok`. Pure
     driver-side directory metadata (O(files), no data read), so it can
     run before every scheduled compaction and make `compact_parquet_lake`
     conditional — the measured version of the judgement the reference
@@ -441,7 +443,7 @@ def lake_layout_doctor(
         "median_mb": round(statistics.median(sizes) / mb, 3),
         "p90_mb": round(sizes[min(len(sizes) - 1, int(0.9 * len(sizes)))] / mb, 3),
         "small_byte_frac": round(frac, 4),
-        "verdict": "compact" if frac >= small_frac_threshold else "ok",
+        "verdict": "compact" if frac >= SMALL_FRAC_THRESHOLD else "ok",
     }
 
 

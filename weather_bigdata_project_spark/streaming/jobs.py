@@ -1222,7 +1222,6 @@ def start_compacting_lake_sink(
     checkpoint: str,
     target_file_mb: int = 128,
     every: int = 3,
-    small_frac_threshold: float = 0.5,
 ):
     """Append lake sink with DOCTOR-GATED in-line compaction: each
     micro-batch appends plain parquet (foreachBatch — no file-sink
@@ -1251,10 +1250,7 @@ def start_compacting_lake_sink(
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         append_lake(path, batch, batch_id)
         if every > 0 and batch_id > 0 and batch_id % every == 0:
-            verdict = lake_layout_doctor(
-                path, target_file_mb, small_frac_threshold
-            )
-            if verdict["verdict"] == "compact":
+            if lake_layout_doctor(path, target_file_mb)["verdict"] == "compact":
                 compact_parquet_lake(
                     batch.sparkSession, path, target_file_mb
                 )

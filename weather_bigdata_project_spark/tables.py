@@ -16,6 +16,9 @@ from __future__ import annotations
 
 import os
 import threading
+from collections import Counter
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,53 +67,123 @@ def signature(sf_dir: str, name: str) -> tuple | None:
         return None
 
 
-def live_only(memo: dict, app_id: str) -> None:
-    """Drop the entries of a memo keyed ``(applicationId, ...)`` that
-    belong to a session other than the live one: a process runs one
-    SparkContext at a time, so those plans can never be used again."""
-    for key in [k for k in memo if k[0] != app_id]:
-        del memo[key]
+@dataclass
+class _Entry:
+    token: object
+    frame: DataFrame
+    persisted: bool  # build() persisted the frame
+    rdd_id: int | None = None  # its cached relation's RDD, once filled
 
 
-#: (applicationId, sf_dir, name) -> (signature, DataFrame). DataFrames are
-#: immutable logical plans, so reuse is free; the memo skips the file
-#: listing + footer schema read that spark.read.parquet repeats per call
-#: (tens of ms each — real money across a 35-query benchmark sweep). An
-#: entry serves only while its table's signature is unchanged (a plan
-#: over a rewritten file would read it with the old file lengths), and
-#: only entries of the live session are kept.
-_CACHE: dict[tuple[str, str, str], tuple[tuple | None, DataFrame]] = {}
-_LOCK = threading.Lock()
+#: (applicationId, *key) -> the one memo of the engine's frames: table
+#: plans, the dashboard's enriched plan, pin and answers, and the shared
+#: shingle pin. Reusing a plan skips its file listing or analyses, a
+#: persisted frame its recompute. Entries of other sessions are dropped:
+#: a process runs one SparkContext at a time.
+_MEMO: dict[tuple, _Entry] = {}
+_LOCK = threading.RLock()
+#: cumulative (key[0], "built" | "served") counts of memo()
+MEMO_COUNTS: Counter = Counter()
+#: (SparkContext, applicationId): reading the id costs two py4j calls
+_APP: list = [None, None]
+
+
+def _alive(spark: SparkSession, entry: _Entry) -> bool:
+    """Whether a persisted frame still has its cached blocks, which its
+    ``storageLevel`` cannot tell (the CacheManager entry outlives an RDD
+    unpersist). The relation's RDD id is read once it is filled (reading
+    it earlier builds the cached plan, which runs a shuffle job for a
+    grouped answer under AQE); then a check is one ``containsKey``. An
+    unfilled relation is live: its first action fills it."""
+    if not entry.persisted:
+        return True
+    if not entry.frame.is_cached:  # unpersisted through this handle
+        return False
+    if entry.rdd_id is None:
+        cached = (
+            spark._jsparkSession.sharedState()
+            .cacheManager()
+            .lookupCachedData(entry.frame._jdf)
+        )
+        if cached.isEmpty():  # clearCache
+            return False
+        builder = cached.get().cachedRepresentation().cacheBuilder()
+        if not builder.isCachedColumnBuffersLoaded():
+            return True
+        entry.rdd_id = builder.cachedColumnBuffers().id()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs()
+    return persistent.containsKey(entry.rdd_id)
+
+
+def _drop(entry: _Entry) -> None:
+    """Unpersist a replaced entry after the entries built over it, theirs
+    first: unpersisting a frame re-plans the cache entries over it
+    against the uncached frame."""
+    for key in [k for k, e in _MEMO.items() if e.token is entry.frame]:
+        _drop(_MEMO.pop(key))
+    if entry.persisted:
+        entry.frame.unpersist()
+
+
+def memo(
+    spark: SparkSession, key: tuple, token: object,
+    build: Callable[[], DataFrame],
+) -> DataFrame:
+    """The frame memoized under ``(applicationId, *key)``, served while
+    ``token`` equals the one it was built with (a table's file signature,
+    or for a derived entry its source frame; DataFrames compare by
+    identity) and, if ``build()`` persisted it, while it has its cached
+    blocks: Shark's rule, where a lost cached partition is recomputed,
+    not served as present. Otherwise the entry is dropped with every
+    entry built over it (a dead frame must be unpersisted before its
+    plan is persisted again, or the dead relation is reused) and
+    rebuilt. Builds hold one lock, so concurrent callers share one."""
+    sc = spark.sparkContext
+    if _APP[0] is not sc:
+        _APP[:] = sc, sc.applicationId
+    app_id = _APP[1]
+    with _LOCK:
+        full = (app_id, *key)
+        entry = _MEMO.get(full)
+        if entry is not None and entry.token == token and _alive(spark, entry):
+            MEMO_COUNTS[key[0], "served"] += 1
+            return entry.frame
+        if entry is not None:
+            _drop(entry)
+        for k in [k for k in _MEMO if k[0] != app_id]:
+            del _MEMO[k]
+        frame = build()
+        _MEMO[full] = _Entry(token, frame, frame.is_cached)
+        MEMO_COUNTS[key[0], "built"] += 1
+        return frame
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table; events gets its ns->us timestamp fixup."""
+    """Load one fixture table; events gets its ns->us timestamp fixup.
+    Memoized (:func:`memo`) under the table's file signature: a plan
+    over a rewritten file would read it with the old file lengths."""
     tune(spark)
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, name)
-    sig = signature(sf_dir, name)
+    key = ("table", sf_dir, name)
     path = f"{sf_dir}/{name}.parquet"
-    hit = _CACHE.get(key)
-    if hit is not None:
-        if hit[0] == sig:
-            return hit[1]
-        # Spark's CacheManager matches plans by path: without a refresh, a
-        # frame some query persisted over the old file would be served for
-        # the new one
-        spark.catalog.refreshByPath(path)
-    df = spark.read.parquet(path)
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn(
-            "ts",
-            F.expr(
-                "timestampadd(MICROSECOND, ts div 1000, "
-                "to_timestamp_ntz('1970-01-01 00:00:00'))"
-            ),
-        )
-    with _LOCK:
-        live_only(_CACHE, app_id)
-        _CACHE[key] = (sig, df)
-    return df
+
+    def build() -> DataFrame:
+        # replacing a stale plan (it stays in the memo until this
+        # returns): Spark's CacheManager matches plans by path, so without
+        # a refresh a frame persisted over the old file would be served
+        if (_APP[1], *key) in _MEMO:
+            spark.catalog.refreshByPath(path)
+        df = spark.read.parquet(path)
+        if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+            df = df.withColumn(
+                "ts",
+                F.expr(
+                    "timestampadd(MICROSECOND, ts div 1000, "
+                    "to_timestamp_ntz('1970-01-01 00:00:00'))"
+                ),
+            )
+        return df
+
+    return memo(spark, key, signature(sf_dir, name), build)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

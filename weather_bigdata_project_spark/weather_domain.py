@@ -24,9 +24,7 @@ Semantics preserved from the reference, line-for-line:
 
 from __future__ import annotations
 
-import threading
 from collections.abc import Callable
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -315,95 +313,38 @@ def enrich(df: DataFrame) -> DataFrame:
     return df.select("*", *flags).select("*", alert)
 
 
-@dataclass
-class _Snapshot:
-    """One memo entry: the enriched plan over one events frame of
-    tables.load, its PINNED_COLUMNS projection once pinned, and the
-    answers persisted over that pin (:func:`prepared`)."""
-
-    events: DataFrame
-    frame: DataFrame
-    pin: DataFrame | None = None
-    panels: dict[str, DataFrame] = field(default_factory=dict)
-
-    def drop_panels(self) -> None:
-        """Unpersist every answer: an answer lives exactly as long as
-        its pin. Answers go before the pin: unpersisting the pin first
-        makes the cache re-plan every answer over the uncached pin."""
-        for frame in self.panels.values():
-            frame.unpersist()
-        self.panels.clear()
-
-
-#: (applicationId, sf_dir) -> the enriched plan of the current
-#: events.parquet snapshot. Building it costs ~5 plan analyses, which
-#: every dashboard panel would otherwise pay. An entry serves while
-#: tables.load returns the events frame it was built over (tables owns
-#: the rule for a rewritten file); a rebuild drops the old answers and
-#: pin. Entries of dead sessions are dropped: their pins and answers
-#: went with their SparkContext (unpersist on a stopped context raises).
-_ENRICHED: dict[tuple[str, str], _Snapshot] = {}
-_LOCK = threading.RLock()
-#: cumulative memo counters, updated under _LOCK (see memo_stats)
-_STATS = dict.fromkeys(
-    ("snapshots_built", "pins_built", "panel_builds", "panel_hits"), 0
-)
-
-
 def memo_stats() -> dict[str, int]:
-    """Cumulative counts of this process's memo: enriched plans built
-    (``snapshots_built``), pins built (``pins_built``, a re-pin after
-    ``clearCache`` counts), answers built over a pin (``panel_builds``)
-    and served again (``panel_hits``)."""
-    with _LOCK:
-        return dict(_STATS)
-
-
-def _snapshot(spark: SparkSession, sf_dir: str) -> _Snapshot:
-    app_id = spark.sparkContext.applicationId
-    events = tables.load(spark, sf_dir, "events")
-    with _LOCK:
-        snap = _ENRICHED.get((app_id, sf_dir))
-        if snap is None or snap.events is not events:
-            if snap is not None:
-                snap.drop_panels()
-                if snap.pin is not None:
-                    snap.pin.unpersist()
-            tables.live_only(_ENRICHED, app_id)
-            frame = enrich(cast_wire(wire_frame(spark, sf_dir)))
-            snap = _ENRICHED[(app_id, sf_dir)] = _Snapshot(events, frame)
-            _STATS["snapshots_built"] += 1
-        return snap
+    """Cumulative counts of this process's dashboard memo entries
+    (:func:`tables.memo`): enriched plans built (``snapshots_built``),
+    pins built (``pins_built``, a re-pin after ``clearCache`` counts),
+    answers built over a pin (``panel_builds``) and served again
+    (``panel_hits``)."""
+    n = tables.MEMO_COUNTS
+    return {
+        "snapshots_built": n["enriched", "built"],
+        "pins_built": n["pin", "built"],
+        "panel_builds": n["panel", "built"],
+        "panel_hits": n["panel", "served"],
+    }
 
 
 def enriched_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full wire -> cast -> enrich pipeline, reference parity end-to-end.
-    One memoized plan per events.parquet snapshot."""
-    return _snapshot(spark, sf_dir).frame
-
-
-def _pinned(spark: SparkSession, sf_dir: str) -> _Snapshot:
-    """The current snapshot with its pin in the cache: pinned again when
-    the cache entry was dropped, which also drops the answers, since
-    their plans read the old in-memory relation."""
-    with _LOCK:
-        snap = _snapshot(spark, sf_dir)
-        if snap.pin is None or not snap.pin.storageLevel.useMemory:
-            snap.drop_panels()
-            pin = snap.frame.select(*PINNED_COLUMNS)
-            if snap.events.rdd.getNumPartitions() == 1:
-                pin = pin.coalesce(1)
-            snap.pin = pin.persist()
-            _STATS["pins_built"] += 1
-        return snap
+    One memoized plan per events frame of tables.load, i.e. per
+    events.parquet snapshot: building it costs ~5 plan analyses, which
+    every dashboard panel would otherwise pay."""
+    return tables.memo(
+        spark, ("enriched", sf_dir), tables.load(spark, sf_dir, "events"),
+        lambda: enrich(cast_wire(wire_frame(spark, sf_dir))),
+    )
 
 
 def pinned_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PINNED_COLUMNS projection of :func:`enriched_frame`, pinned
     in Spark's in-memory columnar cache: repeated queries over it read
     one warm working set instead of re-deriving the enrichment from
-    parquet. Re-pinned when the cache entry was dropped (``clearCache``)
-    and rebuilt for a new events.parquet snapshot.
+    parquet. One pin per enriched plan, pinned again when its blocks
+    were dropped (:func:`tables.memo`).
 
     The pin shape follows the events scan's split count. One split is
     pinned as ``coalesce(1)``: over one partition that moves no data,
@@ -412,7 +353,15 @@ def pinned_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct or sort over the pin plans no shuffle exchange and runs as
     one job. Several splits are pinned as the bare projection. The plan
     has no exchange, so reading the split count runs no Spark job."""
-    return _pinned(spark, sf_dir).pin
+    frame = enriched_frame(spark, sf_dir)
+
+    def pin() -> DataFrame:
+        pin = frame.select(*PINNED_COLUMNS)
+        if tables.load(spark, sf_dir, "events").rdd.getNumPartitions() == 1:
+            pin = pin.coalesce(1)
+        return pin.persist()
+
+    return tables.memo(spark, ("pin", sf_dir), frame, pin)
 
 
 def prepared(
@@ -421,26 +370,18 @@ def prepared(
     name: str,
     body: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
-    """The answer ``body(pinned_frame(spark, sf_dir))``, built and
-    persisted once per pin and served again under ``name`` while the
-    pin and the answer's cache entry live. The first action fills the
-    entry (the pin's ``MEMORY_AND_DISK`` level, so a large answer spills
-    instead of failing); every later action in the snapshot scans the
-    cached answer instead of re-aggregating the pin, and a repeated
-    query skips construction, analysis and planning. The answers are
-    unpersisted before their pin is dropped (a new snapshot, a re-pin).
-    The re-pin check runs first: a frame built over a pin dropped by
-    ``clearCache`` would rebuild the old pin's buffers as a second,
+    """The answer ``body(pinned_frame(spark, sf_dir))``, persisted once
+    per pin and served again under ``name`` while it and the pin keep
+    their cached blocks. The first action fills it (``MEMORY_AND_DISK``,
+    so a large answer spills instead of failing); every later one in the
+    snapshot scans the cached answer, with no construction, analysis,
+    planning or aggregation. The pin is checked first: an answer built
+    over a dropped pin would rebuild the old pin's buffers as a second,
     untracked cached RDD."""
-    with _LOCK:
-        snap = _pinned(spark, sf_dir)
-        frame = snap.panels.get(name)
-        if frame is None or not frame.storageLevel.useMemory:
-            frame = snap.panels[name] = body(snap.pin).persist()
-            _STATS["panel_builds"] += 1
-        else:
-            _STATS["panel_hits"] += 1
-        return frame
+    pin = pinned_frame(spark, sf_dir)
+    return tables.memo(
+        spark, ("panel", sf_dir, name), pin, lambda: body(pin).persist()
+    )
 
 
 def alerts_frame(spark: SparkSession, sf_dir: str) -> DataFrame:

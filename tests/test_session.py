@@ -6,11 +6,23 @@ so lower()/upper() take the JVM path and the first case-fold in a JVM
 does not pay ICU's class-init. The JVM and ICU paths must agree on
 lower, upper and UTF8_LCASE equality, which these tests pin over a
 Unicode sample of the code points where case mappings are special.
+
+get_spark launches the driver JVM with a class-data-sharing archive from
+the cache directory, dumping it on the first launch. Those tests each
+run sessions in a subprocess, so each gets its own JVM and its own
+cache ($XDG_CACHE_HOME under tmp_path).
 """
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
 from weather_bigdata_project_spark import session as S
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 ICU_CONF = "spark.sql.icu.caseMappings.enabled"
 
@@ -93,3 +105,197 @@ def test_session_defaults_follow_the_machine(monkeypatch, tmp_path):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "5g")
     assert (S.default_cpus(), S.default_driver_memory()) == (3, "5g")
+
+
+def test_driver_memory_is_capped_below_compressed_oops(monkeypatch, tmp_path):
+    """Half of a 128 GiB cgroup limit would be 64g, where the JVM turns
+    compressed oops off; the default stops at 31g."""
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    real = os.sysconf
+    monkeypatch.setattr(os, "sysconf", lambda name: 2**40 // 4096
+                        if name == "SC_PHYS_PAGES" else real(name))
+    limit = tmp_path / "memory.max"
+    limit.write_text(f"{128 * 2**30}\n")
+    monkeypatch.setattr(S, "_CGROUP_MEMORY_LIMITS", (str(limit),))
+    assert S.usable_memory() == 128 * 2**30
+    assert S.default_driver_memory() == "31g"
+
+
+def test_java_options_merge_into_submit_args():
+    """The CDS flags join a defaultJavaOptions value the submit args
+    already carry, in each spelling spark-submit accepts, and are added
+    as one when there is none; extraJavaOptions is left alone."""
+    key = "spark.driver.defaultJavaOptions"
+    extra = "--conf spark.driver.extraJavaOptions=-XX:+UseParallelGC"
+    for conf, merged in ((f"--conf {key}=-Da=1", f"--conf '{key}=-Xs -Da=1'"),
+                         (f"-c {key}=-Da=1", f"-c '{key}=-Xs -Da=1'"),
+                         (f"--conf={key}=-Da=1", f"'--conf={key}=-Xs -Da=1'")):
+        assert S._with_java_options(f"{extra} {conf} pyspark-shell", "-Xs") == (
+            f"{extra} {merged} pyspark-shell")
+    assert S._with_java_options("pyspark-shell", "-Xs -Xt") == (
+        f"--conf '{key}=-Xs -Xt' pyspark-shell")
+
+
+def test_sweep_keeps_one_archive(tmp_path):
+    """Files of another archive key go, and so does a dump's temp file
+    whose publishing process has ended; the live key's archive, marker
+    and a running dump's temp file stay."""
+    ended = subprocess.Popen(["true"])
+    ended.wait()
+    me = os.getpid()
+    keep = ["cds-aaaa.jsa", "cds-aaaa.tried", f"cds-aaaa.{me}.tmp", "cds.log"]
+    for n in keep + [f"cds-aaaa.{ended.pid}.tmp", "cds-bbbb.jsa", "cds-bbbb.tried",
+                     f"cds-bbbb.{me}.tmp"]:
+        (tmp_path / n).write_bytes(b"")
+    S._sweep(str(tmp_path / "cds-aaaa.jsa"))
+    assert sorted(os.listdir(tmp_path)) == sorted(keep)
+
+
+#: a child session: starts get_spark, runs a query, prints what the JVM
+#: was given and the environment it left; the test's code runs after
+_CHILD = """
+import json, os
+from pyspark import SparkContext
+from weather_bigdata_project_spark import session as S
+spark = S.get_spark("cds-test", cpus=1)
+mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+print(json.dumps({
+    "count": spark.range(10).count(),
+    "args": list(mx.getRuntimeMXBean().getInputArguments()),
+    "env": [os.environ.get(k) for k in ("SPARK_CONF_DIR", "PYSPARK_SUBMIT_ARGS")],
+}), flush=True)
+"""
+_LAUNCH_ENV = ("SPARK_CONF_DIR", "PYSPARK_SUBMIT_ARGS")
+
+
+def _session(tmp_path, code: str = "", **env: str) -> tuple[list[dict], str]:
+    """Run one child session with its cache under `tmp_path` and 1g of
+    driver heap; return the JSON lines it printed and its stderr."""
+    full = {k: v for k, v in os.environ.items() if k not in _LAUNCH_ENV}
+    full.update(XDG_CACHE_HOME=str(tmp_path / "xdg"), SPARK_DRIVER_MEMORY="1g",
+                PYTHONPATH=REPO)
+    full.update(env)
+    proc = subprocess.run([sys.executable, "-c", _CHILD + code], env=full, cwd=REPO,
+                          capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    lines = [json.loads(x) for x in proc.stdout.splitlines() if x.startswith("{")]
+    assert lines[0]["count"] == 10
+    assert lines[0]["env"] == [env.get(k) for k in _LAUNCH_ENV]  # restored
+    return lines, proc.stderr
+
+
+def _cds_flags(report: dict) -> list[str]:
+    return [a for a in report["args"]
+            if a.startswith(("-XX:SharedArchiveFile=", "-XX:ArchiveClassesAtExit="))]
+
+
+def _archive(tmp_path) -> str:
+    """The archive a child session with this cache uses; its directory
+    is created."""
+    env = {**os.environ, "XDG_CACHE_HOME": str(tmp_path / "xdg")}
+    archive = subprocess.run(
+        [sys.executable, "-c",
+         "from weather_bigdata_project_spark import session as S; print(S.archive_path())"],
+        env=env, cwd=REPO, capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    os.makedirs(os.path.dirname(archive), exist_ok=True)
+    return archive
+
+
+def test_a_dump_is_published_and_mapped_by_the_next_session(tmp_path):
+    """On a fresh cache the first session dumps the archive at its clean
+    exit; the next session maps it and loads Spark classes from it. No
+    cds warning reaches the terminal."""
+    archive = _archive(tmp_path)
+    (first,), err = _session(tmp_path)
+    (flag,) = _cds_flags(first)
+    assert flag.startswith(f"-XX:ArchiveClassesAtExit={archive[:-4]}.")
+    assert "[cds]" not in err
+    assert S._is_archive(archive)
+    assert not [n for n in os.listdir(os.path.dirname(archive)) if n.endswith(".tmp")]
+    load_log = tmp_path / "load.log"
+    (second,), err = _session(tmp_path, PYSPARK_SUBMIT_ARGS=(
+        f"--conf spark.driver.extraJavaOptions=-Xlog:class+load=info:file={load_log}"
+        " pyspark-shell"))
+    assert _cds_flags(second) == [f"-XX:SharedArchiveFile={archive}"]
+    assert "[cds]" not in err
+    assert ("org.apache.spark.SparkContext source: shared objects file (top)"
+            in load_log.read_text())
+
+
+def test_garbage_at_the_archive_path_still_starts(tmp_path):
+    """Bytes that are not an archive are ignored (the session dumps a new
+    one); a file that only starts like one reaches the JVM, which runs
+    without sharing. Both sessions run their query."""
+    archive = _archive(tmp_path)
+    with open(archive, "wb") as f:
+        f.write(os.urandom(4096))
+    (report,), _ = _session(tmp_path)
+    assert _cds_flags(report)[0].startswith("-XX:ArchiveClassesAtExit=")
+    with open(archive, "wb") as f:
+        f.write(S._ARCHIVE_MAGIC + os.urandom(4096))
+    (report,), _ = _session(tmp_path)
+    assert _cds_flags(report) == [f"-XX:SharedArchiveFile={archive}"]
+
+
+#: stop the session, close the JVM's stdin so it exits and dumps, and
+#: SIGKILL it as soon as the dump's temp file appears
+_KILL_MID_DUMP = """
+import glob, time
+proc = SparkContext._gateway.proc
+spark.stop()
+proc.stdin.close()
+tmp = os.path.join(os.path.dirname(S.archive_path()), "*.tmp")
+end = time.monotonic() + 300
+while not glob.glob(tmp) and time.monotonic() < end:
+    time.sleep(0.005)
+proc.kill()
+print(json.dumps({"rc": proc.wait()}), flush=True)
+"""
+
+
+def test_a_killed_dump_publishes_nothing_and_is_not_retried(tmp_path):
+    """A dump killed before the JVM exits leaves only its marker: no
+    archive, no temp file, and the next session launches without CDS."""
+    archive = _archive(tmp_path)
+    (_, killed), _ = _session(tmp_path, _KILL_MID_DUMP)
+    assert killed["rc"] == -9
+    cache = os.path.dirname(archive)
+    assert [n for n in os.listdir(cache) if n.startswith("cds-")] == [
+        os.path.basename(archive)[:-4] + ".tried"]
+    (report,), _ = _session(tmp_path)
+    assert _cds_flags(report) == []
+
+
+def test_an_active_conf_dir_gets_no_cds_flag(tmp_path):
+    """A conf dir with a file Spark reads keeps the launch as it was:
+    no CDS flag, no cache, and one line saying why."""
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text("spark.ui.showConsoleProgress false\n")
+    (conf / "log4j2.properties.template").write_text("")
+    (report,), err = _session(tmp_path, SPARK_CONF_DIR=str(conf))
+    assert _cds_flags(report) == []
+    assert f"class-data sharing off: {conf} holds spark-defaults.conf" in err
+    assert not os.path.exists(tmp_path / "xdg")
+
+
+def test_an_unwritable_cache_gets_no_cds_flag(tmp_path):
+    """A cache directory that cannot be made launches without CDS."""
+    (tmp_path / "file").write_text("")
+    (report,), _ = _session(tmp_path, XDG_CACHE_HOME=str(tmp_path / "file"))
+    assert _cds_flags(report) == []
+
+
+def test_submit_args_java_options_stay_in_force(tmp_path):
+    """extraJavaOptions and a defaultJavaOptions value set through
+    PYSPARK_SUBMIT_ARGS both reach the JVM next to the CDS flag."""
+    archive = _archive(tmp_path)
+    with open(archive, "wb") as f:  # mapped as an archive: no dump at exit
+        f.write(S._ARCHIVE_MAGIC + os.urandom(64))
+    (report,), _ = _session(tmp_path, PYSPARK_SUBMIT_ARGS=(
+        "--conf spark.driver.extraJavaOptions=-XX:+UseParallelGC"
+        " --conf spark.driver.defaultJavaOptions=-Dweather.probe=1 pyspark-shell"))
+    assert "-XX:+UseParallelGC" in report["args"]
+    assert "-Dweather.probe=1" in report["args"]
+    assert _cds_flags(report) == [f"-XX:SharedArchiveFile={archive}"]

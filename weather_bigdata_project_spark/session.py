@@ -12,13 +12,41 @@ Two layers:
   when somebody else built the session (the correctness driver passes its
   own SparkSession). Queries must not depend on session-construction-time
   settings, so anything correctness-critical lives here.
+
+Cold start: when :func:`get_spark` launches the driver JVM it maps a JDK
+dynamic class-data-sharing (CDS) archive, a file of already parsed and
+verified class metadata, which takes most of the class loading out of
+`SparkContext` start. The archive is keyed by the JDK and the Spark jars
+and lives in the user's cache directory (:func:`archive_path`). Without
+one, the launch dumps it when the JVM exits
+(``-XX:ArchiveClassesAtExit``), and an ``atexit`` step publishes it only
+after a clean JVM exit; a killed or failed dump leaves a marker, so it
+is not retried. A dump fails while a non-empty directory is on the
+classpath, and Spark puts its conf dir there, so both the dump and every
+use launch with ``SPARK_CONF_DIR`` pointed at an empty directory of the
+cache. That is done only when the real conf dir holds no active
+(non-``.template``) file. Otherwise, or when the cache cannot be
+written, the JVM launches without CDS flags, as it did before.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
+import logging
 import os
+import re
+import shlex
+import shutil
+import subprocess
+from typing import NamedTuple
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 
 def tune(spark: SparkSession) -> SparkSession:
@@ -66,17 +94,196 @@ def usable_memory() -> int:
 
 def default_driver_memory() -> str:
     """$SPARK_DRIVER_MEMORY, else half of :func:`usable_memory` in whole
-    GiB (at least 1g): the local driver JVM hosts the executors, and the
-    rest is left to Python workers and the OS."""
+    GiB (at least 1g, at most 31g): the local driver JVM hosts the
+    executors, and the rest is left to Python workers and the OS. From
+    32g on the JVM turns compressed oops off, so every reference costs 8
+    bytes instead of 4 and the class-data archive cannot be mapped."""
     return (
         os.environ.get("SPARK_DRIVER_MEMORY")
-        or f"{max(1, usable_memory() // 2**31)}g"
+        or f"{min(31, max(1, usable_memory() // 2**31))}g"
     )
+
+
+#: the first bytes of a JDK dynamic CDS archive (0xf00baba8, little-endian)
+_ARCHIVE_MAGIC = b"\xa8\xab\x0b\xf0"
+#: how long a dumping JVM may take to exit before its dump is given up
+_DUMP_WAIT_S = 120.0
+
+
+class _Sharing(NamedTuple):
+    """How the driver JVM launches: `flags` go to its java options,
+    `conf_dir` is its ``SPARK_CONF_DIR``; `dump` is ``(tmp, archive)``
+    when this launch dumps the archive, else None."""
+
+    flags: str
+    conf_dir: str
+    dump: tuple[str, str] | None
+
+
+def archive_path() -> str:
+    """The class-data archive for the JDK the launcher runs (``$JAVA_HOME``
+    or ``java`` on the path) and the Spark jars it loads: the key hashes
+    their paths, sizes and modification times, so an upgrade of either
+    picks a new archive. It lives in the cache directory,
+    ``$XDG_CACHE_HOME`` or ``~/.cache``, then
+    ``weather_bigdata_project_spark``; deleting that directory resets
+    it, and the next session dumps a new one."""
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    if java is None:
+        raise FileNotFoundError("java")
+    java = os.path.realpath(java)
+    jars = os.path.join(_find_spark_home(), "jars")
+    paths = [java, os.path.join(os.path.dirname(os.path.dirname(java)), "lib", "modules")]
+    paths += sorted(os.path.join(jars, n) for n in os.listdir(jars))
+    digest = hashlib.sha256()
+    for path in paths:
+        st = os.stat(path)
+        digest.update(f"{path}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    return os.path.join(cache, "weather_bigdata_project_spark",
+                        f"cds-{digest.hexdigest()[:16]}.jsa")
+
+
+def _is_archive(path: str) -> bool:
+    try:
+        with open(path, "rb") as f:
+            return f.read(4) == _ARCHIVE_MAGIC
+    except OSError:
+        return False
+
+
+def _sweep(archive: str) -> None:
+    """Delete every file of another archive key and every dump temp file
+    whose publishing process is gone; one archive is kept."""
+    cache, stem = os.path.split(archive.removesuffix(".jsa"))
+    for name in os.listdir(cache):
+        mine = name.startswith(stem + ".")
+        pid = name.removeprefix(stem + ".").removesuffix(".tmp")
+        stale = mine and name.endswith(".tmp") and pid.isdigit() and not _alive(int(pid))
+        if name.startswith("cds-") and (stale or not mine):
+            with contextlib.suppress(OSError):
+                os.remove(os.path.join(cache, name))
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _class_data_sharing() -> _Sharing | None:
+    """Plan the driver JVM's class-data sharing, or None (with one log
+    line when a conf dir rules it out) to launch without it."""
+    real_conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+    with contextlib.suppress(OSError):
+        active = [n for n in os.listdir(real_conf) if not n.endswith(".template")]
+        if active:
+            log.warning("class-data sharing off: %s holds %s", real_conf, active[0])
+            return None
+    try:
+        archive = archive_path()
+        cache = os.path.dirname(archive)
+        if re.search(r"[\s\"',:=\\]", cache):
+            log.warning("class-data sharing off: cache path %r cannot be a JVM option", cache)
+            return None
+        conf_dir = os.path.join(cache, "conf")
+        os.makedirs(conf_dir, exist_ok=True)
+        if os.listdir(conf_dir):
+            log.warning("class-data sharing off: %s is not empty", conf_dir)
+            return None
+        if _is_archive(archive):
+            return _Sharing(
+                f"-XX:SharedArchiveFile={archive} {_cds_log(cache, 'cds.log')}",
+                conf_dir, None,
+            )
+        # the marker: one dump per archive key, even if it never finishes
+        os.close(os.open(archive.removesuffix(".jsa") + ".tried",
+                         os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644))
+    except OSError:  # no cache, no java, or a dump was already tried
+        return None
+    _sweep(archive)
+    tmp = f"{archive.removesuffix('.jsa')}.{os.getpid()}.tmp"
+    return _Sharing(
+        f"-XX:ArchiveClassesAtExit={tmp} {_cds_log(cache, 'cds.dump.log')}",
+        conf_dir, (tmp, archive),
+    )
+
+
+def _cds_log(cache: str, name: str) -> str:
+    """JVM options that send the JVM's cds log (a dump warns once per
+    signed JAR class it skips) to a file of the cache, not the terminal."""
+    return f"-Xlog:cds*=off -Xlog:cds*=warning:file={os.path.join(cache, name)}::filecount=0"
+
+
+def _with_java_options(submit_args: str, flags: str) -> str:
+    """spark-submit arguments (as in ``$PYSPARK_SUBMIT_ARGS``) with `flags`
+    put ahead of the value of every ``--conf spark.driver.defaultJavaOptions=``
+    they carry, or added as one when they carry none."""
+    args = shlex.split(submit_args)
+    key = "spark.driver.defaultJavaOptions="
+    merged = False
+    for i, arg in enumerate(args):
+        flag, eq, conf = arg.partition("=") if arg.startswith("--conf=") else ("", "", arg)
+        if conf.startswith(key) and (eq or (i and args[i - 1] in ("--conf", "-c"))):
+            args[i] = f"{flag}{eq}{key}{flags} {conf.removeprefix(key)}"
+            merged = True
+    if not merged:
+        args[:0] = ["--conf", key + flags]
+    return shlex.join(args)
+
+
+@contextlib.contextmanager
+def _launch_env(sharing: _Sharing | None):
+    """While the JVM launches: ``SPARK_CONF_DIR`` and the java options of
+    `sharing` in the environment; the environment is restored after."""
+    if sharing is None:
+        yield
+        return
+    saved = {k: os.environ.get(k) for k in ("SPARK_CONF_DIR", "PYSPARK_SUBMIT_ARGS")}
+    os.environ["SPARK_CONF_DIR"] = sharing.conf_dir
+    os.environ["PYSPARK_SUBMIT_ARGS"] = _with_java_options(
+        saved["PYSPARK_SUBMIT_ARGS"] or "pyspark-shell", sharing.flags
+    )
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                os.environ.pop(k, None)
+            else:
+                os.environ[k] = v
+
+
+def _publish(proc: subprocess.Popen, tmp: str, archive: str, owner: int) -> None:
+    """At exit: end the dumping JVM if it still runs (closing its standard
+    input makes it stop Spark and exit), then publish its archive only if
+    it exited with code 0; otherwise delete the temp file (the marker
+    stays, so the dump is not retried)."""
+    if os.getpid() != owner:  # a forked child
+        return
+    if proc.poll() is None:
+        with contextlib.suppress(OSError):
+            proc.stdin.close()
+        with contextlib.suppress(subprocess.TimeoutExpired):
+            proc.wait(_DUMP_WAIT_S)
+    with contextlib.suppress(OSError):
+        if proc.returncode == 0 and _is_archive(tmp):
+            os.replace(tmp, archive)
+            _sweep(archive)
+        else:
+            os.remove(tmp)
 
 
 def get_spark(app_name: str = "weather_bigdata_project_spark", cpus: int | str | None = None) -> SparkSession:
     """Tuned local session. `cpus` defaults to :func:`default_cpus`, the
-    driver heap to :func:`default_driver_memory`.
+    driver heap to :func:`default_driver_memory`. A launch of the driver
+    JVM maps (or dumps) the class-data archive, see the module docstring;
+    a session that already exists is returned without it.
 
     Scale notes (these map 1:1 onto cluster settings at 100 TB):
     - AQE handles runtime partition coalescing and skew-join splitting, so
@@ -112,6 +319,11 @@ def get_spark(app_name: str = "weather_bigdata_project_spark", cpus: int | str |
         .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
-    spark = builder.getOrCreate()
+    launches = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+    sharing = _class_data_sharing() if launches else None
+    with _launch_env(sharing):
+        spark = builder.getOrCreate()
+    if sharing is not None and sharing.dump is not None:
+        atexit.register(_publish, SparkContext._gateway.proc, *sharing.dump, os.getpid())
     spark.sparkContext.setLogLevel("WARN")
     return tune(spark)

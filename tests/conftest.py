@@ -47,6 +47,15 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 
+@pytest.fixture(scope="session", autouse=True)
+def _cache_home(tmp_path_factory):
+    """Sessions the tests start, here and in child processes, keep their
+    class-data archive in a temp cache, not the user's."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("XDG_CACHE_HOME", str(tmp_path_factory.mktemp("xdg")))
+        yield
+
+
 @pytest.fixture(scope="session")
 def spark():
     from weather_bigdata_project_spark.session import get_spark

@@ -8,17 +8,21 @@ lower, upper and UTF8_LCASE equality, which these tests pin over a
 Unicode sample of the code points where case mappings are special.
 
 get_spark launches the driver JVM with a class-data-sharing archive from
-the cache directory, dumping it on the first launch. Those tests each
-run sessions in a subprocess, so each gets its own JVM and its own
-cache ($XDG_CACHE_HOME under tmp_path).
+the cache directory; the first launch without one runs the dump in a
+child process first. Those tests each run sessions in a subprocess, so
+each gets its own JVM and its own cache ($XDG_CACHE_HOME under
+tmp_path).
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import signal
 import subprocess
 import sys
+import time
 
 from weather_bigdata_project_spark import session as S
 
@@ -122,24 +126,21 @@ def test_driver_memory_is_capped_below_compressed_oops(monkeypatch, tmp_path):
 
 
 def test_java_options_merge_into_submit_args():
-    """The CDS flags join a defaultJavaOptions value the submit args
-    already carry, in each spelling spark-submit accepts, and are added
-    as one when there is none; extraJavaOptions is left alone."""
+    """The CDS flags join a ``--conf spark.driver.defaultJavaOptions=``
+    value the submit args already carry, and are added as one when there
+    is none; extraJavaOptions is left alone."""
     key = "spark.driver.defaultJavaOptions"
     extra = "--conf spark.driver.extraJavaOptions=-XX:+UseParallelGC"
-    for conf, merged in ((f"--conf {key}=-Da=1", f"--conf '{key}=-Xs -Da=1'"),
-                         (f"-c {key}=-Da=1", f"-c '{key}=-Xs -Da=1'"),
-                         (f"--conf={key}=-Da=1", f"'--conf={key}=-Xs -Da=1'")):
-        assert S._with_java_options(f"{extra} {conf} pyspark-shell", "-Xs") == (
-            f"{extra} {merged} pyspark-shell")
+    assert S._with_java_options(f"{extra} --conf {key}=-Da=1 pyspark-shell", "-Xs") == (
+        f"{extra} --conf '{key}=-Xs -Da=1' pyspark-shell")
     assert S._with_java_options("pyspark-shell", "-Xs -Xt") == (
         f"--conf '{key}=-Xs -Xt' pyspark-shell")
 
 
 def test_sweep_keeps_one_archive(tmp_path):
     """Files of another archive key go, and so does a dump's temp file
-    whose publishing process has ended; the live key's archive, marker
-    and a running dump's temp file stay."""
+    whose dump run has ended; the live key's archive, marker and a
+    running dump's temp file stay."""
     ended = subprocess.Popen(["true"])
     ended.wait()
     me = os.getpid()
@@ -152,10 +153,9 @@ def test_sweep_keeps_one_archive(tmp_path):
 
 
 #: a child session: starts get_spark, runs a query, prints what the JVM
-#: was given and the environment it left; the test's code runs after
+#: was given and the environment it left
 _CHILD = """
 import json, os
-from pyspark import SparkContext
 from weather_bigdata_project_spark import session as S
 spark = S.get_spark("cds-test", cpus=1)
 mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
@@ -168,20 +168,26 @@ print(json.dumps({
 _LAUNCH_ENV = ("SPARK_CONF_DIR", "PYSPARK_SUBMIT_ARGS")
 
 
-def _session(tmp_path, code: str = "", **env: str) -> tuple[list[dict], str]:
-    """Run one child session with its cache under `tmp_path` and 1g of
-    driver heap; return the JSON lines it printed and its stderr."""
+def _env(tmp_path, **env: str) -> dict[str, str]:
+    """A child session's environment: its cache under `tmp_path`, 1g of
+    driver heap, no launch settings but those in `env`."""
     full = {k: v for k, v in os.environ.items() if k not in _LAUNCH_ENV}
     full.update(XDG_CACHE_HOME=str(tmp_path / "xdg"), SPARK_DRIVER_MEMORY="1g",
                 PYTHONPATH=REPO)
     full.update(env)
-    proc = subprocess.run([sys.executable, "-c", _CHILD + code], env=full, cwd=REPO,
-                          capture_output=True, text=True, timeout=600)
+    return full
+
+
+def _session(tmp_path, **env: str) -> tuple[dict, str]:
+    """Run one child session; return the JSON line it printed and its
+    stderr."""
+    proc = subprocess.run([sys.executable, "-c", _CHILD], env=_env(tmp_path, **env),
+                          cwd=REPO, capture_output=True, text=True, timeout=600)
     assert proc.returncode == 0, proc.stderr[-3000:]
-    lines = [json.loads(x) for x in proc.stdout.splitlines() if x.startswith("{")]
-    assert lines[0]["count"] == 10
-    assert lines[0]["env"] == [env.get(k) for k in _LAUNCH_ENV]  # restored
-    return lines, proc.stderr
+    (report,) = [json.loads(x) for x in proc.stdout.splitlines() if x.startswith("{")]
+    assert report["count"] == 10
+    assert report["env"] == [env.get(k) for k in _LAUNCH_ENV]  # restored
+    return report, proc.stderr
 
 
 def _cds_flags(report: dict) -> list[str]:
@@ -192,79 +198,90 @@ def _cds_flags(report: dict) -> list[str]:
 def _archive(tmp_path) -> str:
     """The archive a child session with this cache uses; its directory
     is created."""
-    env = {**os.environ, "XDG_CACHE_HOME": str(tmp_path / "xdg")}
     archive = subprocess.run(
         [sys.executable, "-c",
          "from weather_bigdata_project_spark import session as S; print(S.archive_path())"],
-        env=env, cwd=REPO, capture_output=True, text=True, check=True,
+        env=_env(tmp_path), cwd=REPO, capture_output=True, text=True, check=True,
     ).stdout.strip()
     os.makedirs(os.path.dirname(archive), exist_ok=True)
     return archive
 
 
-def test_a_dump_is_published_and_mapped_by_the_next_session(tmp_path):
-    """On a fresh cache the first session dumps the archive at its clean
-    exit; the next session maps it and loads Spark classes from it. No
-    cds warning reaches the terminal."""
+def test_the_first_session_dumps_the_archive_and_maps_it(tmp_path):
+    """On a fresh cache the first session runs the dump, then maps the
+    archive and loads Spark classes from it; the next session maps it
+    without dumping again. No cds warning reaches the terminal."""
     archive = _archive(tmp_path)
-    (first,), err = _session(tmp_path)
-    (flag,) = _cds_flags(first)
-    assert flag.startswith(f"-XX:ArchiveClassesAtExit={archive[:-4]}.")
-    assert "[cds]" not in err
-    assert S._is_archive(archive)
-    assert not [n for n in os.listdir(os.path.dirname(archive)) if n.endswith(".tmp")]
     load_log = tmp_path / "load.log"
-    (second,), err = _session(tmp_path, PYSPARK_SUBMIT_ARGS=(
+    first, err = _session(tmp_path, PYSPARK_SUBMIT_ARGS=(
         f"--conf spark.driver.extraJavaOptions=-Xlog:class+load=info:file={load_log}"
         " pyspark-shell"))
-    assert _cds_flags(second) == [f"-XX:SharedArchiveFile={archive}"]
-    assert "[cds]" not in err
+    assert _cds_flags(first) == [f"-XX:SharedArchiveFile={archive}"]
+    assert "[cds]" not in err and "class-data sharing off" not in err
     assert ("org.apache.spark.SparkContext source: shared objects file (top)"
             in load_log.read_text())
+    name = os.path.basename(archive)
+    assert sorted(n for n in os.listdir(os.path.dirname(archive)) if n.startswith("cds-")) == [
+        name, name[:-4] + ".tried"]
+    dumped = os.stat(archive).st_mtime_ns
+    second, _ = _session(tmp_path)
+    assert _cds_flags(second) == [f"-XX:SharedArchiveFile={archive}"]
+    assert os.stat(archive).st_mtime_ns == dumped
 
 
 def test_garbage_at_the_archive_path_still_starts(tmp_path):
-    """Bytes that are not an archive are ignored (the session dumps a new
-    one); a file that only starts like one reaches the JVM, which runs
-    without sharing. Both sessions run their query."""
+    """A file that only starts like an archive reaches the JVM, which
+    runs without sharing; bytes that do not are replaced by a dump. Both
+    sessions run their query."""
     archive = _archive(tmp_path)
     with open(archive, "wb") as f:
-        f.write(os.urandom(4096))
-    (report,), _ = _session(tmp_path)
-    assert _cds_flags(report)[0].startswith("-XX:ArchiveClassesAtExit=")
-    with open(archive, "wb") as f:
         f.write(S._ARCHIVE_MAGIC + os.urandom(4096))
-    (report,), _ = _session(tmp_path)
+    report, _ = _session(tmp_path)
     assert _cds_flags(report) == [f"-XX:SharedArchiveFile={archive}"]
-
-
-#: stop the session, close the JVM's stdin so it exits and dumps, and
-#: SIGKILL it as soon as the dump's temp file appears
-_KILL_MID_DUMP = """
-import glob, time
-proc = SparkContext._gateway.proc
-spark.stop()
-proc.stdin.close()
-tmp = os.path.join(os.path.dirname(S.archive_path()), "*.tmp")
-end = time.monotonic() + 300
-while not glob.glob(tmp) and time.monotonic() < end:
-    time.sleep(0.005)
-proc.kill()
-print(json.dumps({"rc": proc.wait()}), flush=True)
-"""
+    with open(archive, "wb") as f:
+        f.write(os.urandom(4096))
+    report, _ = _session(tmp_path)
+    assert _cds_flags(report) == [f"-XX:SharedArchiveFile={archive}"]
+    assert S._is_archive(archive) and os.path.getsize(archive) > 2**20
 
 
 def test_a_killed_dump_publishes_nothing_and_is_not_retried(tmp_path):
-    """A dump killed before the JVM exits leaves only its marker: no
-    archive, no temp file, and the next session launches without CDS."""
-    archive = _archive(tmp_path)
-    (_, killed), _ = _session(tmp_path, _KILL_MID_DUMP)
-    assert killed["rc"] == -9
-    cache = os.path.dirname(archive)
-    assert [n for n in os.listdir(cache) if n.startswith("cds-")] == [
-        os.path.basename(archive)[:-4] + ".tried"]
-    (report,), _ = _session(tmp_path)
+    """A session killed, with its dump run, while the dump is written
+    publishes nothing. The next launch deletes the dead run's temp file,
+    says why it has no archive and starts without CDS."""
+    stem = _archive(tmp_path).removesuffix(".jsa")
+    proc = subprocess.Popen([sys.executable, "-c", _CHILD], env=_env(tmp_path), cwd=REPO,
+                            stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+                            start_new_session=True)
+    end = time.monotonic() + 300
+    while not glob.glob(f"{stem}.*.tmp") and proc.poll() is None and time.monotonic() < end:
+        time.sleep(0.002)
+    os.killpg(proc.pid, signal.SIGKILL)  # the session, the dump run and their JVMs
+    proc.wait()
+    (tmp,) = glob.glob(f"{stem}.*.tmp")
+    assert not os.path.exists(f"{stem}.jsa")
+    run = int(tmp.rsplit(".", 2)[1])
+    while S._alive(run) and time.monotonic() < end:  # alive until it is reaped
+        time.sleep(0.05)
+    report, err = _session(tmp_path)
     assert _cds_flags(report) == []
+    assert f"class-data sharing off: {stem}.tried marks a dump that left no archive" in err
+    assert not os.path.exists(tmp) and not os.path.exists(f"{stem}.jsa")
+
+
+def test_a_failed_dump_leaves_the_session_whole(tmp_path):
+    """A dump fails while a non-empty directory is on the classpath.
+    The dump run's JVM fails; the session itself starts without CDS and
+    runs its query, and one line says why."""
+    classes = tmp_path / "classes"
+    classes.mkdir()
+    (classes / "x.properties").write_text("")
+    report, err = _session(tmp_path, PYSPARK_SUBMIT_ARGS=(
+        f"--conf spark.driver.extraClassPath={classes} pyspark-shell"))
+    assert _cds_flags(report) == []
+    assert "class-data sharing off: the dump run failed" in err
+    cache = tmp_path / "xdg" / "weather_bigdata_project_spark"
+    assert not [n for n in os.listdir(cache) if n.endswith((".jsa", ".tmp"))]
 
 
 def test_an_active_conf_dir_gets_no_cds_flag(tmp_path):
@@ -274,7 +291,7 @@ def test_an_active_conf_dir_gets_no_cds_flag(tmp_path):
     conf.mkdir()
     (conf / "spark-defaults.conf").write_text("spark.ui.showConsoleProgress false\n")
     (conf / "log4j2.properties.template").write_text("")
-    (report,), err = _session(tmp_path, SPARK_CONF_DIR=str(conf))
+    report, err = _session(tmp_path, SPARK_CONF_DIR=str(conf))
     assert _cds_flags(report) == []
     assert f"class-data sharing off: {conf} holds spark-defaults.conf" in err
     assert not os.path.exists(tmp_path / "xdg")
@@ -283,7 +300,7 @@ def test_an_active_conf_dir_gets_no_cds_flag(tmp_path):
 def test_an_unwritable_cache_gets_no_cds_flag(tmp_path):
     """A cache directory that cannot be made launches without CDS."""
     (tmp_path / "file").write_text("")
-    (report,), _ = _session(tmp_path, XDG_CACHE_HOME=str(tmp_path / "file"))
+    report, _ = _session(tmp_path, XDG_CACHE_HOME=str(tmp_path / "file"))
     assert _cds_flags(report) == []
 
 
@@ -291,9 +308,9 @@ def test_submit_args_java_options_stay_in_force(tmp_path):
     """extraJavaOptions and a defaultJavaOptions value set through
     PYSPARK_SUBMIT_ARGS both reach the JVM next to the CDS flag."""
     archive = _archive(tmp_path)
-    with open(archive, "wb") as f:  # mapped as an archive: no dump at exit
+    with open(archive, "wb") as f:  # mapped as an archive: no dump run
         f.write(S._ARCHIVE_MAGIC + os.urandom(64))
-    (report,), _ = _session(tmp_path, PYSPARK_SUBMIT_ARGS=(
+    report, _ = _session(tmp_path, PYSPARK_SUBMIT_ARGS=(
         "--conf spark.driver.extraJavaOptions=-XX:+UseParallelGC"
         " --conf spark.driver.defaultJavaOptions=-Dweather.probe=1 pyspark-shell"))
     assert "-XX:+UseParallelGC" in report["args"]

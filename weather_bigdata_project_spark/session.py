@@ -17,21 +17,24 @@ Cold start: when :func:`get_spark` launches the driver JVM it maps a JDK
 dynamic class-data-sharing (CDS) archive, a file of already parsed and
 verified class metadata, which takes most of the class loading out of
 `SparkContext` start. The archive is keyed by the JDK and the Spark jars
-and lives in the user's cache directory (:func:`archive_path`). Without
-one, the launch dumps it when the JVM exits
-(``-XX:ArchiveClassesAtExit``), and an ``atexit`` step publishes it only
-after a clean JVM exit; a killed or failed dump leaves a marker, so it
-is not retried. A dump fails while a non-empty directory is on the
-classpath, and Spark puts its conf dir there, so both the dump and every
-use launch with ``SPARK_CONF_DIR`` pointed at an empty directory of the
-cache. That is done only when the real conf dir holds no active
-(non-``.template``) file. Otherwise, or when the cache cannot be
-written, the JVM launches without CDS flags, as it did before.
+and lives in the user's cache directory (:func:`archive_path`). The
+first launch without one dumps it in a child process first (the dump
+run): the child starts the same session with
+``-XX:ArchiveClassesAtExit``, stops it, and publishes the dump only
+after its JVM exited cleanly. So the archive holds the classes a
+session's start loads, whatever the first program goes on to do, and a
+failed dump never takes the caller's JVM with it. A dump run leaves a
+marker, so a killed or failed one is not retried. A dump fails while a
+non-empty directory is on the classpath, and Spark puts its conf dir
+there, so both the dump run and every use launch with
+``SPARK_CONF_DIR`` pointed at an empty directory of the cache. That is
+done only when the real conf dir holds no active (non-``.template``)
+file. Otherwise, or when the cache cannot be written, the JVM launches
+without CDS flags, as it did before.
 """
 
 from __future__ import annotations
 
-import atexit
 import contextlib
 import hashlib
 import logging
@@ -40,6 +43,7 @@ import re
 import shlex
 import shutil
 import subprocess
+import sys
 from typing import NamedTuple
 
 from pyspark import SparkContext
@@ -106,18 +110,18 @@ def default_driver_memory() -> str:
 
 #: the first bytes of a JDK dynamic CDS archive (0xf00baba8, little-endian)
 _ARCHIVE_MAGIC = b"\xa8\xab\x0b\xf0"
-#: how long a dumping JVM may take to exit before its dump is given up
-_DUMP_WAIT_S = 120.0
+#: how long a launch waits for the dump run before it goes on without CDS
+_DUMP_WAIT_S = 300.0
+#: the directory that holds this package, for the dump run's import
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 class _Sharing(NamedTuple):
     """How the driver JVM launches: `flags` go to its java options,
-    `conf_dir` is its ``SPARK_CONF_DIR``; `dump` is ``(tmp, archive)``
-    when this launch dumps the archive, else None."""
+    `conf_dir` is its ``SPARK_CONF_DIR``."""
 
     flags: str
     conf_dir: str
-    dump: tuple[str, str] | None
 
 
 def archive_path() -> str:
@@ -136,7 +140,9 @@ def archive_path() -> str:
     jars = os.path.join(_find_spark_home(), "jars")
     paths = [java, os.path.join(os.path.dirname(os.path.dirname(java)), "lib", "modules")]
     paths += sorted(os.path.join(jars, n) for n in os.listdir(jars))
-    digest = hashlib.sha256()
+    # what the archive holds depends on where it is dumped, so that
+    # point is part of the key
+    digest = hashlib.sha256(b"dumped by a session start\n")
     for path in paths:
         st = os.stat(path)
         digest.update(f"{path}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
@@ -155,7 +161,7 @@ def _is_archive(path: str) -> bool:
 
 def _sweep(archive: str) -> None:
     """Delete every file of another archive key and every dump temp file
-    whose publishing process is gone; one archive is kept."""
+    whose dump run is gone; one archive is kept."""
     cache, stem = os.path.split(archive.removesuffix(".jsa"))
     for name in os.listdir(cache):
         mine = name.startswith(stem + ".")
@@ -177,8 +183,10 @@ def _alive(pid: int) -> bool:
 
 
 def _class_data_sharing() -> _Sharing | None:
-    """Plan the driver JVM's class-data sharing, or None (with one log
-    line when a conf dir rules it out) to launch without it."""
+    """Plan the driver JVM's class-data sharing, running the dump first
+    when there is no archive yet; or None (with one log line when a conf
+    dir, a failed dump or an earlier one rules it out) to launch without
+    it."""
     real_conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
     with contextlib.suppress(OSError):
         active = [n for n in os.listdir(real_conf) if not n.endswith(".template")]
@@ -196,22 +204,63 @@ def _class_data_sharing() -> _Sharing | None:
         if os.listdir(conf_dir):
             log.warning("class-data sharing off: %s is not empty", conf_dir)
             return None
-        if _is_archive(archive):
-            return _Sharing(
-                f"-XX:SharedArchiveFile={archive} {_cds_log(cache, 'cds.log')}",
-                conf_dir, None,
-            )
-        # the marker: one dump per archive key, even if it never finishes
-        os.close(os.open(archive.removesuffix(".jsa") + ".tried",
-                         os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644))
-    except OSError:  # no cache, no java, or a dump was already tried
+        _sweep(archive)
+        if not _is_archive(archive):
+            # the marker: one dump run per archive key, even if it never finishes
+            marker = archive.removesuffix(".jsa") + ".tried"
+            try:
+                os.close(os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644))
+            except FileExistsError:
+                log.warning("class-data sharing off: %s marks a dump that left no "
+                            "archive; delete it to dump again", marker)
+                return None
+            if not _dump(archive):
+                return None
+    except OSError:  # no cache, or no java
         return None
-    _sweep(archive)
+    return _Sharing(f"-XX:SharedArchiveFile={archive} {_cds_log(cache, 'cds.log')}", conf_dir)
+
+
+def _dump(archive: str) -> bool:
+    """Run :func:`_dump_run` in a child process and wait for it; True if
+    it published `archive`, else one log line says why not."""
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in (_ROOT, os.environ.get("PYTHONPATH")) if p))
+    try:
+        run = subprocess.run(
+            [sys.executable, "-c", f"from {__name__} import _dump_run; _dump_run()"],
+            env=env, stdin=subprocess.DEVNULL, capture_output=True, text=True,
+            timeout=_DUMP_WAIT_S,
+        )
+    except subprocess.TimeoutExpired:
+        log.warning("class-data sharing off: the dump run took over %.0f s", _DUMP_WAIT_S)
+        return False
+    if run.returncode != 0:
+        last = run.stderr.strip().splitlines()[-1:] or [f"exit code {run.returncode}"]
+        log.warning("class-data sharing off: the dump run failed: %s", last[0])
+    return _is_archive(archive)
+
+
+def _dump_run() -> None:
+    """The dump run, in a process of its own: start the session
+    :func:`get_spark` starts, with ``-XX:ArchiveClassesAtExit`` into a
+    temp file named by this process, stop it, and publish the dump with
+    ``os.replace`` only after the JVM exited with code 0."""
+    archive = archive_path()
+    cache = os.path.dirname(archive)
     tmp = f"{archive.removesuffix('.jsa')}.{os.getpid()}.tmp"
-    return _Sharing(
+    spark = _session("cds-dump", None, _Sharing(
         f"-XX:ArchiveClassesAtExit={tmp} {_cds_log(cache, 'cds.dump.log')}",
-        conf_dir, (tmp, archive),
-    )
+        os.path.join(cache, "conf"),
+    ))
+    jvm = SparkContext._gateway.proc
+    spark.stop()
+    jvm.stdin.close()  # the JVM exits, and dumps, when its input closes
+    if jvm.wait() != 0 or not _is_archive(tmp):
+        with contextlib.suppress(OSError):
+            os.remove(tmp)
+        sys.exit(f"the dump run's JVM exited with code {jvm.returncode}")
+    os.replace(tmp, archive)
 
 
 def _cds_log(cache: str, name: str) -> str:
@@ -227,10 +276,9 @@ def _with_java_options(submit_args: str, flags: str) -> str:
     args = shlex.split(submit_args)
     key = "spark.driver.defaultJavaOptions="
     merged = False
-    for i, arg in enumerate(args):
-        flag, eq, conf = arg.partition("=") if arg.startswith("--conf=") else ("", "", arg)
-        if conf.startswith(key) and (eq or (i and args[i - 1] in ("--conf", "-c"))):
-            args[i] = f"{flag}{eq}{key}{flags} {conf.removeprefix(key)}"
+    for i in range(1, len(args)):
+        if args[i - 1] == "--conf" and args[i].startswith(key):
+            args[i] = f"{key}{flags} {args[i].removeprefix(key)}"
             merged = True
     if not merged:
         args[:0] = ["--conf", key + flags]
@@ -259,31 +307,12 @@ def _launch_env(sharing: _Sharing | None):
                 os.environ[k] = v
 
 
-def _publish(proc: subprocess.Popen, tmp: str, archive: str, owner: int) -> None:
-    """At exit: end the dumping JVM if it still runs (closing its standard
-    input makes it stop Spark and exit), then publish its archive only if
-    it exited with code 0; otherwise delete the temp file (the marker
-    stays, so the dump is not retried)."""
-    if os.getpid() != owner:  # a forked child
-        return
-    if proc.poll() is None:
-        with contextlib.suppress(OSError):
-            proc.stdin.close()
-        with contextlib.suppress(subprocess.TimeoutExpired):
-            proc.wait(_DUMP_WAIT_S)
-    with contextlib.suppress(OSError):
-        if proc.returncode == 0 and _is_archive(tmp):
-            os.replace(tmp, archive)
-            _sweep(archive)
-        else:
-            os.remove(tmp)
-
-
 def get_spark(app_name: str = "weather_bigdata_project_spark", cpus: int | str | None = None) -> SparkSession:
     """Tuned local session. `cpus` defaults to :func:`default_cpus`, the
     driver heap to :func:`default_driver_memory`. A launch of the driver
-    JVM maps (or dumps) the class-data archive, see the module docstring;
-    a session that already exists is returned without it.
+    JVM maps (first dumping, if need be) the class-data archive, see the
+    module docstring; a session that already exists is returned without
+    it.
 
     Scale notes (these map 1:1 onto cluster settings at 100 TB):
     - AQE handles runtime partition coalescing and skew-join splitting, so
@@ -293,6 +322,12 @@ def get_spark(app_name: str = "weather_bigdata_project_spark", cpus: int | str |
       (region/nation/supplier) broadcast automatically, and we add explicit
       broadcast() hints on the build side of star joins.
     """
+    launches = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+    return _session(app_name, cpus, _class_data_sharing() if launches else None)
+
+
+def _session(app_name: str, cpus: int | str | None, sharing: _Sharing | None) -> SparkSession:
+    """:func:`get_spark`'s session, its JVM launched with `sharing`."""
     cpus = cpus or default_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -319,11 +354,7 @@ def get_spark(app_name: str = "weather_bigdata_project_spark", cpus: int | str |
         .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
-    launches = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
-    sharing = _class_data_sharing() if launches else None
     with _launch_env(sharing):
         spark = builder.getOrCreate()
-    if sharing is not None and sharing.dump is not None:
-        atexit.register(_publish, SparkContext._gateway.proc, *sharing.dump, os.getpid())
     spark.sparkContext.setLogLevel("WARN")
     return tune(spark)

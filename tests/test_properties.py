@@ -193,7 +193,7 @@ def test_ewma_fold_py_matches_jvm_on_random_series(spark, temps, cut):
     — including negative temperatures and any batch-boundary split, not
     just the fixture's values (guards the ties-away-from-zero snap
     against the asymmetric-rounding bug a refactor could introduce)."""
-    from weather_bigdata_project_spark.streaming.jobs import ewma_fold_py
+    from weather_bigdata_project_spark.streaming.twins import ewma_fold_py
 
     cut = min(cut, len(temps))
     n1, s1 = ewma_fold_py(temps[:cut])

@@ -13,9 +13,10 @@ from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
+from tests.test_ingest import _same_rows
 from weather_bigdata_project_spark import weather_domain as wd
 from weather_bigdata_project_spark.sources import readers
-from weather_bigdata_project_spark.streaming import jobs
+from weather_bigdata_project_spark.streaming import jobs, twins
 
 
 @pytest.fixture(scope="module")
@@ -28,13 +29,6 @@ def wire_dir(spark):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def _same_rows(got, want) -> bool:
-    """`got` and `want` hold the same rows as multisets."""
-    return (
-        got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-    )
-
-
 def test_streaming_windowed_stats(spark, wire_dir):
     """Watermarked tumbling-window agg drains under availableNow and
     matches the batch groupBy(date_trunc) twin."""
@@ -42,7 +36,7 @@ def test_streaming_windowed_stats(spark, wire_dir):
     ckpt = tempfile.mkdtemp(prefix="stream_win_ckpt_")
     try:
         stream = jobs.wire_file_stream(spark, wire_dir)
-        win = jobs.windowed_city_stats_stream(jobs.enriched_stream(stream))
+        win = twins.windowed_city_stats_stream(jobs.enriched_stream(stream))
         q = (
             win.writeStream.outputMode("append")
             .format("parquet")
@@ -87,7 +81,7 @@ def test_streaming_session_windows(spark, wire_dir):
     ckpt = tempfile.mkdtemp(prefix="stream_sess_ckpt_")
     try:
         stream = jobs.wire_file_stream(spark, wire_dir)
-        sess = jobs.sessionized_city_stream(jobs.enriched_stream(stream))
+        sess = twins.sessionized_city_stream(jobs.enriched_stream(stream))
         q = (
             sess.writeStream.outputMode("append")
             .format("parquet")
@@ -134,7 +128,7 @@ def test_stateful_city_extremes(spark, wire_dir):
     lake, the LAST emitted row per city (highest n_seen) must equal the
     batch groupBy twin exactly."""
     stream = jobs.wire_file_stream(spark, wire_dir)
-    st = jobs.stateful_city_extremes_stream(jobs.enriched_stream(stream))
+    st = twins.stateful_city_extremes_stream(jobs.enriched_stream(stream))
     q = (
         st.writeStream.outputMode("update")
         .format("memory")
@@ -176,39 +170,6 @@ def test_stateful_city_extremes(spark, wire_dir):
     assert batch.subtract(final).count() == 0
 
 
-def test_incremental_resume_exactly_once(spark):
-    """Checkpointed file sinks across three runs: drain half the lake,
-    drain the rest, then re-run with nothing new — every wire row lands
-    in the lake, and every alert in the alerts feed, exactly once;
-    resume picks up only unprocessed files."""
-    wire3 = tempfile.mkdtemp(prefix="wirelake_inc_")
-    out = tempfile.mkdtemp(prefix="inc_out_")
-    try:
-        w = wd.wire_frame(spark, SF_SMOKE)
-        first = w.filter(F.col("event_id") % 2 == 0)
-        second = w.filter(F.col("event_id") % 2 == 1)
-        first.repartition(4).write.mode("overwrite").json(wire3)
-        alerts = wd.alerts_frame(spark, SF_SMOKE)
-
-        def drain(n_lake, n_alerts):
-            for q in jobs.start_ingest(spark, wire3, out):
-                q.awaitTermination(120)
-            for got, n in (
-                (spark.read.parquet(f"{out}/lake"), n_lake),
-                (spark.read.json(f"{out}/alerts"), n_alerts),
-            ):
-                assert got.count() == n
-                assert got.select("event_id").distinct().count() == n
-
-        drain(first.count(), alerts.filter(F.col("event_id") % 2 == 0).count())
-        second.repartition(4).write.mode("append").json(wire3)
-        drain(w.count(), alerts.count())
-        drain(w.count(), alerts.count())  # nothing new: nothing added
-    finally:
-        for d in (wire3, out):
-            shutil.rmtree(d, ignore_errors=True)
-
-
 def test_foreach_batch_dedup_upsert(spark):
     """Source-side duplicates (the same wire rows written twice) must
     collapse to unique event_ids in the lake; a restart with the same
@@ -226,7 +187,7 @@ def test_foreach_batch_dedup_upsert(spark):
         def run():
             stream = jobs.wire_file_stream(spark, wire2)
             enriched = jobs.enriched_stream(stream)
-            q = jobs.start_foreach_batch_dedup_sink(enriched, out, ckpt)
+            q = twins.start_foreach_batch_dedup_sink(enriched, out, ckpt)
             q.awaitTermination(120)
 
         run()
@@ -240,7 +201,7 @@ def test_foreach_batch_dedup_upsert(spark):
 
         # T6: the same duplicates through dropDuplicatesWithinWatermark
         q = (
-            jobs.deduped_stream(
+            twins.deduped_stream(
                 jobs.enriched_stream(jobs.wire_file_stream(spark, wire2))
             )
             .writeStream.format("memory")
@@ -258,7 +219,7 @@ def test_foreach_batch_dedup_upsert(spark):
 
 
 def _dedup_sink(spark, wire, out, ckpt):
-    return jobs.start_foreach_batch_dedup_sink(
+    return twins.start_foreach_batch_dedup_sink(
         jobs.enriched_stream(jobs.wire_file_stream(spark, wire)), out, ckpt
     )
 
@@ -317,90 +278,19 @@ def test_foreach_batch_dedup_fails_a_batch_it_cannot_dedup(spark):
 
 def test_console_sink_drains_and_await_any_sees_it_stop(spark, wire_dir):
     """S7 + T7: the console sink reads every wire row and stops, and
-    await_any returns once it has."""
+    the session's awaitAnyTermination returns once it has."""
     spark.streams.resetTerminated()  # forget queries other tests ended
-    q = jobs.start_console_sink(
+    q = twins.start_console_sink(
         jobs.enriched_stream(jobs.wire_file_stream(spark, wire_dir))
     )
     try:
-        assert jobs.await_any(spark, timeout_s=120) is True
+        assert spark.streams.awaitAnyTermination(120) is True
         assert not q.isActive
         assert q.exception() is None
         read = sum(p["numInputRows"] for p in q.recentProgress)
         assert read == wd.wire_frame(spark, SF_SMOKE).count()
     finally:
         q.stop()
-
-
-def _drain_backlog(spark, wire: str, root: str):
-    """Drain `wire` through jobs.start_ingest under `root`. Returns the
-    input-row counts of each query's data micro-batches, and the lake
-    and the alerts feed each paired with its batch twin over the same
-    wire files."""
-    qs = jobs.start_ingest(spark, wire, root)
-    for q in qs:
-        q.awaitTermination(120)
-    batches = [
-        [p.numInputRows for p in q.recentProgress if p.numInputRows > 0]
-        for q in qs
-    ]
-    wire_rows = spark.read.schema(jobs.WIRE_SCHEMA).json(wire)
-    twin = wd.enrich(wd.cast_wire(wire_rows))
-    want_alerts = jobs.alerts_stream(twin)
-    return batches, [
-        (spark.read.parquet(f"{root}/lake"), twin),
-        (spark.read.schema(want_alerts.schema).json(f"{root}/alerts"),
-         want_alerts),
-    ]
-
-
-def test_backlog_drains_in_one_micro_batch(spark, tmp_path):
-    """A backlog that fits one round of input splits (trigger_bytes) is
-    admitted whole: each query commits exactly one micro-batch with
-    input rows, and lake and alerts equal the batch twin, which is the
-    batch enriched view and its alerts."""
-    wire = str(tmp_path / "wire")
-    wd.wire_frame(spark, SF_SMOKE).repartition(12).write.json(wire)
-    assert len([f for f in os.listdir(wire) if f.endswith(".json")]) == 12
-    assert (
-        jobs.enriched_stream(jobs.wire_file_stream(spark, wire)).columns
-        == wd.ENRICHED_COLUMNS
-        == wd.enrich(wd.cast_wire(wd.wire_frame(spark, SF_SMOKE))).columns
-    )
-    batches, pairs = _drain_backlog(spark, wire, str(tmp_path))
-    assert batches == [[1000], [1000]]
-    assert all(_same_rows(got, want) for got, want in pairs)
-    (_, twin), (_, twin_alerts) = pairs
-    assert _same_rows(twin, wd.enriched_frame(spark, SF_SMOKE))
-    assert _same_rows(twin_alerts, wd.alerts_frame(spark, SF_SMOKE))
-
-
-def test_trigger_bytes_bounds_each_micro_batch(spark, tmp_path):
-    """trigger_bytes is defaultParallelism x maxPartitionBytes; shrinking
-    the split spreads the same backlog over several bounded micro-batches
-    and still lands every record exactly once."""
-    split = "spark.sql.files.maxPartitionBytes"
-    slots = spark.sparkContext.defaultParallelism
-    assert jobs.trigger_bytes(spark) == slots * 128 * 1024 * 1024
-    wire = str(tmp_path / "wire")
-    wd.wire_frame(spark, SF_SMOKE).repartition(12).write.json(wire)
-    sizes = [
-        os.path.getsize(os.path.join(wire, f))
-        for f in os.listdir(wire) if f.endswith(".json")
-    ]
-    old = spark.conf.get(split)
-    try:
-        # Spark's own parser reads a suffixed byte string
-        spark.conf.set(split, "64m")
-        assert jobs.trigger_bytes(spark) == slots * 2**26
-        # a trigger fits about three files
-        spark.conf.set(split, str(3 * max(sizes) // slots))
-        batches, pairs = _drain_backlog(spark, wire, str(tmp_path))
-    finally:
-        spark.conf.set(split, old)
-    for rows in batches:
-        assert len(rows) >= 4 and sum(rows) == 1000
-    assert all(_same_rows(got, want) for got, want in pairs)
 
 
 # --- stream-stream + stream-static joins ----------------------------------
@@ -433,8 +323,8 @@ def test_stream_stream_interval_join_equals_batch(spark, events_dir):
     out = tempfile.mkdtemp(prefix="ssj_out_")
     ckpt = tempfile.mkdtemp(prefix="ssj_ckpt_")
     try:
-        stream = jobs.events_file_stream(spark, events_dir)
-        joined = jobs.interval_join_clicks_purchases(stream, watermark="365 days")
+        stream = twins.events_file_stream(spark, events_dir)
+        joined = twins.interval_join_clicks_purchases(stream, watermark="365 days")
         q = (
             joined.writeStream.outputMode("append")
             .format("parquet")
@@ -480,10 +370,10 @@ def test_stream_static_join_enriches_every_event(spark, events_dir):
     out = tempfile.mkdtemp(prefix="sstat_out_")
     ckpt = tempfile.mkdtemp(prefix="sstat_ckpt_")
     try:
-        stream = jobs.events_file_stream(spark, events_dir)
+        stream = twins.events_file_stream(spark, events_dir)
         customer = tables.load(spark, SF_SMOKE, "customer")
         q = (
-            jobs.stream_static_segment_enrich(stream, customer)
+            twins.stream_static_segment_enrich(stream, customer)
             .writeStream.outputMode("append")
             .format("parquet")
             .option("path", out)
@@ -514,8 +404,8 @@ def test_streaming_sliding_windows_match_batch(spark, events_dir):
     out = tempfile.mkdtemp(prefix="slide_out_")
     ckpt = tempfile.mkdtemp(prefix="slide_ckpt_")
     try:
-        stream = jobs.events_file_stream(spark, events_dir)
-        win = jobs.sliding_event_counts_stream(stream, watermark="2 hours")
+        stream = twins.events_file_stream(spark, events_dir)
+        win = twins.sliding_event_counts_stream(stream, watermark="2 hours")
         q = (
             win.writeStream.outputMode("append")
             .format("parquet")
@@ -551,14 +441,14 @@ def test_incremental_agg_mv(spark, wire_dir):
             enriched = jobs.enriched_stream(stream).select(
                 "city_name", "temperature"
             )
-            q = jobs.start_incremental_agg_sink(enriched, out, ckpt)
+            q = twins.start_incremental_agg_sink(enriched, out, ckpt)
             q.awaitTermination(120)
 
         run()
         assert readers.lake_batch_id(out) >= 0  # marker installed with data
         got = {
             r["city_name"]: r
-            for r in jobs.read_incremental_agg_mv(spark, out).collect()
+            for r in twins.read_incremental_agg_mv(spark, out).collect()
         }
         exp = {
             r["city_name"]: r
@@ -589,7 +479,7 @@ def test_incremental_agg_mv(spark, wire_dir):
         run()  # restart: checkpoint replays nothing, MV unchanged
         got2 = {
             r["city_name"]: r["n_events"]
-            for r in jobs.read_incremental_agg_mv(spark, out).collect()
+            for r in twins.read_incremental_agg_mv(spark, out).collect()
         }
         assert got2 == {c: exp[c]["n_events"] for c in exp}
         assert readers.lake_batch_id(out) == before
@@ -614,7 +504,7 @@ def test_incremental_agg_mv_survives_a_crash_between_renames(
     def run():
         stream = jobs.wire_file_stream(spark, src)
         enriched = jobs.enriched_stream(stream).select("city_name", "temperature")
-        jobs.start_incremental_agg_sink(enriched, out, ckpt).awaitTermination(120)
+        twins.start_incremental_agg_sink(enriched, out, ckpt).awaitTermination(120)
 
     def mv() -> dict:
         return {r[0]: tuple(r[1:]) for r in spark.read.parquet(out).collect()}
@@ -730,7 +620,7 @@ def test_transition_counts_stream(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    st = jobs.transition_counts_stream(stream)
+    st = twins.transition_counts_stream(stream)
     q = (
         st.writeStream.outputMode("update")
         .format("memory")
@@ -923,7 +813,7 @@ def test_transform_with_state_ewma(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    st = jobs.ewma_temperature_stream(stream)
+    st = twins.ewma_temperature_stream(stream)
     prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
@@ -985,7 +875,7 @@ def test_ewma_fold_py_matches_jvm_fold(spark):
     same ordered input — including across a mid-series state handoff
     (the micro-batch boundary case)."""
     from weather_bigdata_project_spark import weather_domain as wd
-    from weather_bigdata_project_spark.streaming.jobs import ewma_fold_py
+    from weather_bigdata_project_spark.streaming.twins import ewma_fold_py
 
     enr = wd.enrich(wd.cast_wire(wd.wire_frame(spark, SF_SMOKE))).select(
         "city_name", "event_id", "temperature"
@@ -1051,7 +941,7 @@ def test_stream_stream_left_outer_interval_join(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    joined = jobs.interval_left_join_clicks_purchases(
+    joined = twins.interval_left_join_clicks_purchases(
         stream, watermark="1 minute"
     )
     q = (
@@ -1126,7 +1016,7 @@ def test_session_paths_stream(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    st = jobs.session_paths_stream(stream)
+    st = twins.session_paths_stream(stream)
     q = (
         st.writeStream.outputMode("update")
         .format("memory")
@@ -1196,7 +1086,7 @@ def test_compacting_lake_sink_heals_small_files(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = jobs.start_compacting_lake_sink(
+    q = twins.start_compacting_lake_sink(
         stream, lake, ckpt, target_file_mb=64, every=3
     )
     q.awaitTermination(180)
@@ -1209,7 +1099,7 @@ def test_compacting_lake_sink_heals_small_files(spark, tmp_path):
     assert lake_layout_doctor(lake, target_file_mb=0)["verdict"] == "ok"
     # a clean restart with the same checkpoint and no new input replays
     # nothing: every batch committed. A crash case is below.
-    q2 = jobs.start_compacting_lake_sink(
+    q2 = twins.start_compacting_lake_sink(
         stream, lake, ckpt, target_file_mb=64, every=3
     )
     q2.awaitTermination(120)
@@ -1238,7 +1128,7 @@ def test_compacting_lake_sink_lands_a_replayed_batch_once(
     )
 
     def run():
-        jobs.start_compacting_lake_sink(
+        twins.start_compacting_lake_sink(
             stream, lake, ckpt, target_file_mb=64, every=3
         ).awaitTermination(180)
 
@@ -1284,7 +1174,7 @@ def test_stream_stream_full_outer_interval_join(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    joined = jobs.interval_full_join_clicks_purchases(
+    joined = twins.interval_full_join_clicks_purchases(
         stream, watermark="1 minute"
     )
     q = (
@@ -1335,7 +1225,7 @@ def test_stream_stream_full_outer_interval_join(spark, tmp_path):
 
 def test_city_ewma_processor_logic_without_transport(spark):
     """Drives the ACTUAL transformWithStateInPandas processor class
-    (jobs.CityEwma) through a duck-typed fake state handle — everything
+    (twins.CityEwma) through a duck-typed fake state handle — everything
     except the protobuf transport the container lacks: state
     init/get/update wiring, the concat + dropna + stable-sort batch
     prep, and cross-batch state handoff. Final per-city state must be
@@ -1343,7 +1233,7 @@ def test_city_ewma_processor_logic_without_transport(spark):
     import pandas as pd
 
     from weather_bigdata_project_spark import weather_domain as wd
-    from weather_bigdata_project_spark.streaming import jobs
+    from weather_bigdata_project_spark.streaming import twins
 
     class FakeValueState:
         def __init__(self):
@@ -1389,7 +1279,7 @@ def test_city_ewma_processor_logic_without_transport(spark):
     }
 
     for city, series in per_city.items():
-        proc = jobs.CityEwma()
+        proc = twins.CityEwma()
         handle = FakeHandle()
         proc.init(handle)
         outs = []
@@ -1428,7 +1318,7 @@ def test_minhash_dedup_stream_equals_batch(spark, tmp_path):
     cross-micro-batch state: pairs whose two docs arrive in different
     triggers can only come from the carried bucket state."""
     from weather_bigdata_project_spark import registry, tables
-    from weather_bigdata_project_spark.streaming import jobs
+    from weather_bigdata_project_spark.streaming import twins
 
     registry.load()
     src = str(tmp_path / "docs_ordered")
@@ -1446,7 +1336,7 @@ def test_minhash_dedup_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    st = jobs.minhash_dedup_stream(stream)
+    st = twins.minhash_dedup_stream(stream)
     q = (
         st.writeStream.outputMode("update")
         .format("memory")
@@ -1489,7 +1379,7 @@ def test_phash_dedup_stream_equals_batch(spark, tmp_path):
 
     from weather_bigdata_project_spark import registry, tables
     from weather_bigdata_project_spark.operators import multimodal as M
-    from weather_bigdata_project_spark.streaming import jobs
+    from weather_bigdata_project_spark.streaming import twins
 
     registry.load()
     src = str(tmp_path / "docs_bin_ordered")
@@ -1503,7 +1393,7 @@ def test_phash_dedup_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    st = jobs.phash_dedup_stream(M.with_binary_payload(stream))
+    st = twins.phash_dedup_stream(M.with_binary_payload(stream))
     q = (
         st.writeStream.outputMode("update")
         .format("memory")
@@ -1536,7 +1426,7 @@ def test_embedding_dedup_stream_equals_batch(spark, tmp_path):
     import os
 
     from weather_bigdata_project_spark import registry, tables
-    from weather_bigdata_project_spark.streaming import jobs
+    from weather_bigdata_project_spark.streaming import twins
 
     registry.load()
     src = str(tmp_path / "emb_ordered")
@@ -1552,7 +1442,7 @@ def test_embedding_dedup_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    st = jobs.embedding_dedup_stream(stream)
+    st = twins.embedding_dedup_stream(stream)
     q = (
         st.writeStream.outputMode("update")
         .format("memory")
@@ -1589,7 +1479,7 @@ def test_minhash_dedup_stream_survives_restart(spark, tmp_path):
     import shutil
 
     from weather_bigdata_project_spark import registry, tables
-    from weather_bigdata_project_spark.streaming import jobs
+    from weather_bigdata_project_spark.streaming import twins
 
     registry.load()
     stage = str(tmp_path / "stage")
@@ -1612,7 +1502,7 @@ def test_minhash_dedup_stream_survives_restart(spark, tmp_path):
             .parquet(src)
         )
         q = (
-            jobs.minhash_dedup_stream(stream, output_mode="append")
+            twins.minhash_dedup_stream(stream, output_mode="append")
             .writeStream.outputMode("append")
             .format("parquet")
             .option("path", out)
@@ -1671,7 +1561,7 @@ def test_minhash_dedup_stream_bucket_cap(spark, tmp_path):
     import os
 
     from weather_bigdata_project_spark import registry, tables
-    from weather_bigdata_project_spark.streaming import jobs
+    from weather_bigdata_project_spark.streaming import twins
 
     registry.load()
     src = str(tmp_path / "docs_cap")
@@ -1684,7 +1574,7 @@ def test_minhash_dedup_stream_bucket_cap(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    st = jobs.minhash_dedup_stream(stream, max_bucket=1)
+    st = twins.minhash_dedup_stream(stream, max_bucket=1)
     q = (
         st.writeStream.outputMode("update")
         .format("memory")
@@ -1738,7 +1628,7 @@ def test_step_spike_qc_stream_equals_batch_twin(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .json(src)
     )
-    st = jobs.step_spike_qc_stream(jobs.enriched_stream(stream))
+    st = twins.step_spike_qc_stream(jobs.enriched_stream(stream))
     q = (
         st.writeStream.outputMode("update")
         .format("memory")
@@ -1810,7 +1700,7 @@ def test_heavy_hitters_stream_guarantee(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    st = jobs.heavy_hitters_stream(stream, k=K, buckets=B)
+    st = twins.heavy_hitters_stream(stream, k=K, buckets=B)
     q = (
         st.writeStream.outputMode("update")
         .format("memory")
@@ -1892,7 +1782,7 @@ def test_heavy_hitters_stream_finds_hot_key(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    st = jobs.heavy_hitters_stream(stream, k=K, buckets=B)
+    st = twins.heavy_hitters_stream(stream, k=K, buckets=B)
     q = (
         st.writeStream.outputMode("update")
         .format("memory")
@@ -1934,7 +1824,7 @@ def test_contamination_stream_equals_batch(spark, tmp_path):
 
     from weather_bigdata_project_spark import registry, tables
     from weather_bigdata_project_spark.queries.curation import _BENCH_SOURCE
-    from weather_bigdata_project_spark.streaming import jobs
+    from weather_bigdata_project_spark.streaming import twins
 
     registry.load()
     docs = tables.load(spark, SF_SMOKE, "documents")
@@ -1959,7 +1849,7 @@ def test_contamination_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    st = jobs.contamination_stream(stream, bench)
+    st = twins.contamination_stream(stream, bench)
     q = (
         st.writeStream.outputMode("append")
         .format("memory")
@@ -2003,7 +1893,7 @@ def test_gopher_filter_stream_equals_batch(spark, tmp_path):
     from weather_bigdata_project_spark.queries.curation import (
         gopher_flags_sql,
     )
-    from weather_bigdata_project_spark.streaming import jobs
+    from weather_bigdata_project_spark.streaming import twins
 
     registry.load()
     docs = tables.load(spark, SF_SMOKE, "documents").select(
@@ -2025,7 +1915,7 @@ def test_gopher_filter_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    st = jobs.gopher_filter_stream(stream)
+    st = twins.gopher_filter_stream(stream)
     q = (
         st.writeStream.outputMode("append")
         .format("memory")
@@ -2125,7 +2015,7 @@ def test_crawl_extract_stream_equals_batch(spark, tmp_path):
     import glob
 
     from weather_bigdata_project_spark import registry, tables
-    from weather_bigdata_project_spark.streaming import jobs
+    from weather_bigdata_project_spark.streaming import twins
 
     registry.load()
     docs = tables.load(spark, SF_SMOKE, "documents").select(
@@ -2144,7 +2034,7 @@ def test_crawl_extract_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    st = jobs.crawl_extract_stream(stream)
+    st = twins.crawl_extract_stream(stream)
     q = (
         st.writeStream.outputMode("append")
         .format("memory")
@@ -2182,7 +2072,7 @@ def test_span_corruption_stream_equals_batch(spark, tmp_path):
     import glob
 
     from weather_bigdata_project_spark import registry, tables
-    from weather_bigdata_project_spark.streaming import jobs
+    from weather_bigdata_project_spark.streaming import twins
 
     registry.load()
     docs = tables.load(spark, SF_SMOKE, "documents").select(
@@ -2201,7 +2091,7 @@ def test_span_corruption_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    st = jobs.span_corruption_stream(stream)
+    st = twins.span_corruption_stream(stream)
     q = (
         st.writeStream.outputMode("append")
         .format("memory")
@@ -2241,7 +2131,7 @@ def test_cdc_chunk_stream_equals_batch(spark, tmp_path):
     from weather_bigdata_project_spark.queries.dedup import (
         cdc_chunk_frame,
     )
-    from weather_bigdata_project_spark.streaming import jobs
+    from weather_bigdata_project_spark.streaming import twins
 
     docs = tables.load(spark, SF_SMOKE, "documents").select(
         "doc_id", "text"
@@ -2259,7 +2149,7 @@ def test_cdc_chunk_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    st = jobs.cdc_chunk_stream(stream)
+    st = twins.cdc_chunk_stream(stream)
     q = (
         st.writeStream.outputMode("append")
         .format("memory")
@@ -2289,7 +2179,7 @@ def test_sitemap_stream_equals_batch(spark, tmp_path):
     from collections import Counter
 
     from weather_bigdata_project_spark import registry, tables
-    from weather_bigdata_project_spark.streaming import jobs
+    from weather_bigdata_project_spark.streaming import twins
 
     registry.load()
     docs = tables.load(spark, SF_SMOKE, "documents").select(
@@ -2308,7 +2198,7 @@ def test_sitemap_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    st = jobs.sitemap_stream(stream)
+    st = twins.sitemap_stream(stream)
     q = (
         st.writeStream.outputMode("append")
         .format("memory")
@@ -2342,7 +2232,7 @@ def test_tokenize_stream_equals_batch(spark, tmp_path):
 
     from weather_bigdata_project_spark import registry, tables
     from weather_bigdata_project_spark.queries.text import uv_vocab_rows
-    from weather_bigdata_project_spark.streaming import jobs
+    from weather_bigdata_project_spark.streaming import twins
 
     registry.load()
     vocab = uv_vocab_rows(spark, SF_SMOKE)
@@ -2363,7 +2253,7 @@ def test_tokenize_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    st = jobs.tokenize_stream(stream, vocab)
+    st = twins.tokenize_stream(stream, vocab)
     q = (
         st.writeStream.outputMode("append")
         .format("memory")
@@ -2398,7 +2288,7 @@ def test_nfc_stream_equals_batch(spark, tmp_path):
 
     from weather_bigdata_project_spark import tables
     from weather_bigdata_project_spark.operators import textops as T
-    from weather_bigdata_project_spark.streaming import jobs
+    from weather_bigdata_project_spark.streaming import twins
 
     docs = tables.load(spark, SF_SMOKE, "documents").select(
         "doc_id", "text"
@@ -2416,7 +2306,7 @@ def test_nfc_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    st = jobs.nfc_normalize_stream(stream)
+    st = twins.nfc_normalize_stream(stream)
     q = (
         st.writeStream.outputMode("append")
         .format("memory")

@@ -37,6 +37,13 @@ def money(sum_cents: str) -> str:
     return f"(CAST({sum_cents} AS DOUBLE) / 100.0e0)"
 
 
+#: epoch microseconds of the TIMESTAMP_NTZ column `ts`, timezone-
+#: independent; DuckDB spells it ``epoch_us(ts)``
+EPOCH_US_SPARK = (
+    "timestampdiff(MICROSECOND, to_timestamp_ntz('1970-01-01 00:00:00'), ts)"
+)
+
+
 #: the two largest primes below 2^31 used by :func:`id_mix`; kept as
 #: module constants so tests can reproduce the mix in plain Python
 ID_MIX_P1 = 2147483647

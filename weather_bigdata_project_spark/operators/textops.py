@@ -118,6 +118,19 @@ def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def gram_array_sql() -> str:
+    """SQL for the DISTINCT 3-gram shingles of the token array `toks` as
+    one ARRAY of 60-bit content-hash ids (:func:`hashed_id_spark`),
+    empty below 3 tokens: the in-row shingle set that
+    :func:`doc_gram_arrays` and the ingest-time stream twins share, so
+    their values are bit-equal."""
+    grams = (
+        "transform(sequence(1, size(toks) - 2), "
+        "i -> " + hashed_id_spark("concat_ws(' ', slice(toks, i, 3))") + ")"
+    )
+    return f"CASE WHEN size(toks) < 3 THEN array() ELSE array_distinct({grams}) END"
+
+
 def doc_gram_arrays(
     spark: SparkSession, sf_dir: str, frame: DataFrame | None = None
 ) -> DataFrame:
@@ -146,11 +159,6 @@ def doc_gram_arrays(
         spark,
         f"{sf_dir}/documents.parquet",
     ).select("doc_id", F.split(F.col("text"), " ").alias("toks"))
-    grams = (
-        "transform(sequence(1, size(toks) - 2), "
-        "i -> " + hashed_id_spark("concat_ws(' ', slice(toks, i, 3))") + ")"
-    )
-    arr = f"CASE WHEN size(toks) < 3 THEN array() ELSE array_distinct({grams}) END"
     # Let-binding via a single-element transform + inline: `a` holds the
     # computed gram array, so the expensive md5 transform runs ONCE per
     # document. (A plain two-step select collapses into one projection
@@ -158,7 +166,7 @@ def doc_gram_arrays(
     # expression — measured 14x slower; higher-order exprs are
     # interpreted, no codegen CSE.)
     wrapped = (
-        f"transform(array({arr}), "
+        f"transform(array({gram_array_sql()}), "
         "a -> struct(size(a) AS n_sh, a AS shs))"
     )
     return d.select("doc_id", F.inline(F.expr(wrapped))).select(

@@ -32,15 +32,12 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .. import tables
-from ..functions.exprs import rnd
+from ..functions.exprs import EPOCH_US_SPARK, rnd
 from ..operators.textops import materialize
 from ..registry import query
 
 #: epoch microseconds of the (ns->us normalized) event timestamp,
-#: timezone-independent in both engines (same idiom as queries/stats.py)
-_EPOCH_US_SPARK = (
-    "timestampdiff(MICROSECOND, to_timestamp_ntz('1970-01-01 00:00:00'), ts)"
-)
+#: timezone-independent in both engines (Spark: exprs.EPOCH_US_SPARK)
 _EPOCH_US_DUCK = "epoch_us(ts)"
 
 #: session inactivity gap: 30 minutes, in microseconds (matches the
@@ -86,7 +83,7 @@ def events_session_paths(spark, sf_dir):
         "user_id",
         "event_id",
         "event_type",
-        F.expr(_EPOCH_US_SPARK).alias("tus"),
+        F.expr(EPOCH_US_SPARK).alias("tus"),
     )
     w = Window.partitionBy("user_id").orderBy("tus", "event_id")
     gap = F.col("tus") - F.lag("tus").over(w)
@@ -301,7 +298,7 @@ def events_interarrival_stats(spark, sf_dir):
     integer sum; every output snaps via rnd(4)."""
     ev = tables.load(spark, sf_dir, "events")
     e = ev.select(
-        "event_type", "event_id", F.expr(_EPOCH_US_SPARK).alias("tus")
+        "event_type", "event_id", F.expr(EPOCH_US_SPARK).alias("tus")
     )
     w = Window.partitionBy("event_type").orderBy("tus", "event_id")
     g = e.select(
@@ -370,7 +367,7 @@ def _session_intervals(spark, sf_dir):
     """(user_id, sid, s_start, s_end): the Spark twin of _SESS_CTE."""
     ev = tables.load(spark, sf_dir, "events")
     e = ev.select(
-        "user_id", "event_id", F.expr(_EPOCH_US_SPARK).alias("tus")
+        "user_id", "event_id", F.expr(EPOCH_US_SPARK).alias("tus")
     )
     w = Window.partitionBy("user_id").orderBy("tus", "event_id")
     gap = F.col("tus") - F.lag("tus").over(w)
@@ -580,7 +577,7 @@ def events_user_features(spark, sf_dir):
             "user_id",
             "event_id",
             "event_type",
-            F.expr(_EPOCH_US_SPARK).alias("tus"),
+            F.expr(EPOCH_US_SPARK).alias("tus"),
             F.to_date("ts").alias("day"),
             F.expr("CAST(ROUND(value * 100.0e0) AS BIGINT)").alias("vc"),
         )
@@ -847,7 +844,7 @@ def events_markov_eval(spark, sf_dir):
             "user_id",
             "event_id",
             "event_type",
-            F.expr(_EPOCH_US_SPARK).alias("tus"),
+            F.expr(EPOCH_US_SPARK).alias("tus"),
             F.expr(
                 "to_date(ts) < date_add(d0, "
                 "CAST(FLOOR(0.7e0 * datediff(d1, d0)) AS INT))"
@@ -2028,7 +2025,7 @@ def events_bot_detection(spark, sf_dir):
     fire) are retained via a left join with NULL rule inputs and
     bot = false, so downstream consumers see every user."""
     ev = tables.load(spark, sf_dir, "events").select(
-        "user_id", F.expr(_EPOCH_US_SPARK).alias("tus"), "event_id"
+        "user_id", F.expr(EPOCH_US_SPARK).alias("tus"), "event_id"
     )
     w = Window.partitionBy("user_id").orderBy("tus", "event_id")
     g = (

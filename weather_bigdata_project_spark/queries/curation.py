@@ -1823,7 +1823,7 @@ def gopher_flags_sql() -> str:
     an array of a single struct (f_wc, f_wl, f_sw, f_tt) meant for
     F.inline, with the token array let-bound so it is built once per
     doc. Shared verbatim by the batch battery (corpus_gopher_rules)
-    and the ingest-time stream (streaming.jobs.gopher_filter_stream),
+    and the ingest-time stream (streaming.twins.gopher_filter_stream),
     which is what makes their keep/drop decisions bit-equal by
     construction."""
     flags = (

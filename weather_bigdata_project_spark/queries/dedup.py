@@ -2250,7 +2250,7 @@ _CDC_ORACLE = (
 def cdc_chunk_frame(d):
     """(doc_id, ch_id, ch_toks) — one row per CDC chunk, the in-row
     stage every CDC consumer shares: dedup_cdc_chunks aggregates it in
-    batch, streaming/jobs.cdc_chunk_stream emits it at ingest (the
+    batch, streaming/twins.cdc_chunk_stream emits it at ingest (the
     chunking is a pure function of each row, so the two are bit-equal
     under any micro-batch replay). `d` needs (doc_id, text).
 

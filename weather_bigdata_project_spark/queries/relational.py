@@ -596,7 +596,7 @@ def grouping_sets_lineitem(spark, sf_dir):
 )
 def events_hourly_window(spark, sf_dir):
     """Tumbling 1h aggregation — same transformation the streaming job
-    runs with a watermark (streaming/jobs.py); here as its batch twin."""
+    runs with a watermark (streaming/twins.py); here as its batch twin."""
     ev = tables.load(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -616,7 +616,7 @@ def events_hourly_window(spark, sf_dir):
 def sliding_window_agg(df):
     """The sliding-window aggregation itself, shared verbatim by the
     batch query below and the streaming job
-    (streaming/jobs.sliding_event_counts_stream) — the engine's core
+    (streaming/twins.sliding_event_counts_stream) — the engine's core
     design point: one transformation, two execution modes. Input needs
     (event_ts: timestamp, event_type, value)."""
     return (

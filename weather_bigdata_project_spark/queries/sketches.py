@@ -5,7 +5,7 @@ and Bloom-filter join pruning.
 These are the sketches a 100 TB engine actually runs *inside* queries
 (the reference's scale story is "count things over an unbounded Kafka
 stream", weather_streaming.py:55-145 — the streaming Misra-Gries twin
-lives in streaming/jobs.py; these are the BATCH sketch family):
+lives in streaming/twins.py; these are the BATCH sketch family):
 
 - Count-Min (Cormode & Muthukrishnan 2005): d x w counter grid, point
   frequency = min over rows. Counters build with ONE map-side-combined
@@ -146,7 +146,7 @@ def events_cms_frequency(spark, sf_dir):
     shuffled on user_id. At 100 TB the exact per-key `tk` side of this
     audit runs on a sample or a scheduled slice; the sketch side is the
     always-on path (its streaming sibling: the Misra-Gries heavy-hitter
-    job in streaming/jobs.py)."""
+    job in streaming/twins.py)."""
     ev = tables.load(spark, sf_dir, "events")
     counters = _cms_counters(ev, _EV_KEY_SPARK)
     tk = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("true_cnt"))

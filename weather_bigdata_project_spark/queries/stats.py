@@ -28,7 +28,7 @@ from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
 from .. import tables
-from ..functions.exprs import id_mix, rnd
+from ..functions.exprs import EPOCH_US_SPARK, id_mix, rnd
 from ..registry import query
 
 #: value in exact integer cents; hour-of-day as the second variable
@@ -37,9 +37,6 @@ _Y = "CAST(hour(ts) AS BIGINT)"
 
 #: epoch microseconds of the (ns->us normalized) event timestamp,
 #: timezone-independent in both engines
-_EPOCH_US_SPARK = (
-    "timestampdiff(MICROSECOND, to_timestamp_ntz('1970-01-01 00:00:00'), ts)"
-)
 _EPOCH_US_DUCK = "epoch_us(ts)"
 
 #: derived statistics from the exact sums (identical text both engines;
@@ -191,7 +188,7 @@ def window_time_range_avg(spark, sf_dir):
     ev = tables.load(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
-        .orderBy(F.expr(_EPOCH_US_SPARK))
+        .orderBy(F.expr(EPOCH_US_SPARK))
         .rangeBetween(-_RANGE_US, 0)
     )
     cents_sum = F.sum(F.expr("CAST(ROUND(value * 100.0e0) AS BIGINT)")).over(w)
@@ -849,7 +846,7 @@ def events_lateness_profile(spark, sf_dir):
         "pw_events"
     )
     return spark.sql(
-        "WITH " + _late_sql("pw_events", _EPOCH_US_SPARK)
+        "WITH " + _late_sql("pw_events", EPOCH_US_SPARK)
     )
 
 

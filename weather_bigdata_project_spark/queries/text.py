@@ -1448,7 +1448,7 @@ def uv_vocab_rows(spark, sf_dir) -> list[tuple[str, int]]:
     """Ship the trained tokenizer to an ingest job: the <= V+alphabet
     (piece, cost) rows ARE the model artifact (what SentencePiece
     serializes to its .model file), bounded by construction — never
-    row data. The at-ingest twin (streaming/jobs.tokenize_stream)
+    row data. The at-ingest twin (streaming/twins.tokenize_stream)
     embeds them as a literal map so tokenization needs no join."""
     _w0, _cand, vc = _uv_train(spark, sf_dir)
     return [(r["piece"], int(r["v"])) for r in vc.collect()]

@@ -2057,7 +2057,7 @@ def events_duplicate_delivery(spark, sf_dir):
     (user, timestamp, type, value) but carrying different event_ids —
     exactly what an at-least-once producer retry creates, and the
     number that justifies dropDuplicatesWithinWatermark's state budget
-    on the streaming path (w/streaming/jobs.py deduped_stream). Zero
+    on the streaming path (w/streaming/twins.py deduped_stream). Zero
     on the clean fixtures BY DESIGN — this gate proves absence after
     every load, one content-keyed aggregate."""
     tables.load(spark, sf_dir, "events").createOrReplaceTempView(

@@ -3,8 +3,9 @@ as batch-checkable queries (M0 of SURVEY.md §7).
 
 Covers SURVEY §2: S2/S4/S5 (wire synthesis + parse), P1-P6 (casts, drops,
 projections, alert filter), F1-F8 (all scalar derivations), T-path parity
-(the same `enrich` fns run under Structured Streaming in
-`streaming/jobs.py`).
+(the same `enrich` fns run under Structured Streaming on the ingest
+path in `streaming/jobs.py`, and the windowed and stateful twins in
+`streaming/twins.py`).
 """
 
 from __future__ import annotations

@@ -536,7 +536,7 @@ def upsert_parquet_lake(
     INSERTED, everything else is carried over — copy-on-write through
     `rewrite_lake`, so the next writer sees the old or the new lake,
     never a mix, even after a crash. The batch twin of the streaming
-    `start_foreach_batch_dedup_sink` (streaming/jobs.py) MERGE shape.
+    `start_foreach_batch_dedup_sink` (streaming/twins.py) MERGE shape.
 
     Plan shape: the carried-over side is a LEFT ANTI join of the lake
     against the update keys — update batches are small next to the lake,

@@ -60,7 +60,6 @@ def test_incremental_resume_exactly_once(spark):
             shutil.rmtree(d, ignore_errors=True)
 
 
-
 def _drain_backlog(spark, wire: str, root: str):
     """Drain `wire` through jobs.start_ingest under `root`. Returns the
     input-row counts of each query's data micro-batches, and the lake

@@ -1145,10 +1145,11 @@ def contamination_stream(
     Plan is completely STATE-FREE (no watermark, no state store, no
     foreachBatch): the doc's distinct 3-gram shingle hashes are built
     IN-ROW (the same let-bound textops.gram_array_sql the batch
-    operator textops.doc_gram_arrays uses, so values are bit-equal), the benchmark set is ONE static row holding its
-    distinct-shingle array (benchmarks are fixed-size by construction;
-    the corpus grows), joined stream-static on a constant key — a
-    broadcast of kilobytes — and the per-doc overlap is
+    operator textops.doc_gram_arrays uses, so values are bit-equal),
+    the benchmark set is ONE static row holding its distinct-shingle
+    array (benchmarks are fixed-size by construction; the corpus
+    grows), joined stream-static on a constant key — a broadcast of
+    kilobytes — and the per-doc overlap is
     size(array_intersect(...)) in the same projection. Each output row
     depends only on its input row + the static side, so the drained
     replay across ANY micro-batch split equals the batch query exactly
